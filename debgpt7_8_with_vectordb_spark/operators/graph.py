@@ -24,131 +24,76 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..loops import checkpoint_observed, loop_confs, release
+
 #: Round cap — 2·log₂(n) + slack covers any graph pointer doubling can
 #: see; the certificate loop normally exits far earlier (near-clique
 #: duplicate classes: 1-2 rounds; planted 64-chain: ≤7, pinned in
 #: tests/test_graph_components.py).
-DEFAULT_MAX_ROUNDS = 30
+_MAX_ROUNDS = 30
+
+#: ~2M 16-byte (doc_id, lab) rows ≈ 32 MB per reduce partition
+_ROWS_PER_PART = 2_000_000
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_rounds: int = DEFAULT_MAX_ROUNDS,
-) -> tuple[DataFrame, int]:
+def _label_sum():
+    # exact: decimal(38,0) cannot overflow on a sum of long ids
+    return F.sum(F.col("lab").cast("decimal(38,0)"))
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, int]:
     """Label every node with its component's min node id.
 
     ``nodes``: one column ``doc_id`` (long). ``edges``: columns
     ``src``/``dst`` (long), assumed SYMMETRIC (caller unions both
     directions). Returns (labels(doc_id, lab), rounds_run).
 
-    Round-15 loop-cost cuts (guide §1.2 step 1; A/B-measured on the
-    dedup_clusters path, ~5.0 → ~2.4 s for the loop at sf0.1):
-
-    - The exact convergence sums ride the round's OWN checkpoint
-      actions as ``Observation`` metrics (CollectMetricsExec) instead
-      of a third per-round aggregation job — same decimal(38,0)
-      overflow-proof certificate, zero extra actions.
-    - Convergence is now detected on ``cand`` (the neighbor-min result)
-      BEFORE the pointer-jump self-join: labels are monotone
-      non-increasing, so sum(candᵣ) == sum(labelsᵣ₋₁) means neighbor-min
-      changed nothing, i.e. every node's label ≤ all its neighbors' —
-      with symmetric edges that forces labels constant per component,
-      and (labels always name an in-component node, the component min
-      keeps itself) constant = the component min. The fixpoint round
-      therefore skips its jump join entirely.
-    - AQE is disabled ONLY inside the loop (restored in ``finally``)
-      with shuffle partitions derived from the measured node/edge
-      counts (~2M 16-byte label rows ≈ 32 MB per partition, capped at
-      defaultParallelism): the per-round joins' sizes are known from
-      the previous round, so AQE's per-exchange sub-job orchestration
-      (several driver round-trips per round) buys nothing here. At
-      cluster scale the same formula yields many partitions — the
-      setting is computed, never a local constant.
+    Monotone decimal-sum certificate: labels never increase, so an
+    unchanged exact label sum after neighbor-min means no label moved —
+    the loop stops there, before that round's pointer jump. The sums
+    and the node/edge counts ride the checkpoint actions.
     """
-    from pyspark.sql import Observation
-
-    from .mapreduce import _checkpoint_rdd_id, _unpersist_rdds
-
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    sym = edges.select("src", "dst").localCheckpoint(eager=True)
-    obs0 = Observation()
-    labels = (
+    sym, m = checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
+    n_edges = m["n"]
+    labels, m = checkpoint_observed(
         nodes.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("doc_id").cast("long").alias("lab"),
-        )
-        .observe(obs0, F.sum(F.col("lab").cast("decimal(38,0)")).alias("s"))
-        .localCheckpoint(eager=True)
+        ),
+        n=F.count(F.lit(1)),
+        s=_label_sum(),
     )
-    n_nodes = labels.count()
-    n_edges = sym.count()
-    prev_sum = obs0.get["s"]
+    n_nodes, prev_sum = m["n"], m["s"]
     rounds = 0
-    prev_ids: set[int] = set()
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # ~2M (doc_id, lab) rows ≈ 32 MB per reduce partition (§2.2)
-        target = max(1, min(sc.defaultParallelism,
-                            -(-max(n_nodes, n_edges) // 2_000_000)))
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        for _ in range(max_rounds):
+    with loop_confs(labels.sparkSession, max(n_nodes, n_edges), _ROWS_PER_PART):
+        for _ in range(_MAX_ROUNDS):
             # 1. neighbor-min: each node sees the labels across its edges
             nbr = sym.join(
                 labels.withColumnRenamed("doc_id", "dst"), "dst"
             ).select(F.col("src").alias("doc_id"), "lab")
-            obs_c = Observation()
-            cand = (
-                labels.union(nbr)
-                .groupBy("doc_id")
-                .agg(F.min("lab").alias("lab"))
-                .observe(
-                    obs_c, F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-                )
-                # materialize BEFORE the self-join: cand appears twice in
-                # the jump, and without this its lineage (the edges⋈labels
-                # join — the round's expensive stage) would execute twice
-                .localCheckpoint(eager=True)
+            # checkpointed BEFORE the jump: cand is read twice there
+            cand, m = checkpoint_observed(
+                labels.union(nbr).groupBy("doc_id").agg(F.min("lab").alias("lab")),
+                s=_label_sum(),
             )
             rounds += 1
-            cand_sum = obs_c.get["s"]
-            if cand_sum == prev_sum:
-                # fixpoint certificate BEFORE the jump: cand ≡ labels
-                # (monotone + equal exact sum) — free this round's cand,
-                # keep the returned labels checkpoint alive
-                _unpersist_rdds(spark, {_checkpoint_rdd_id(cand)} - {None})
+            if m["s"] == prev_sum:  # fixpoint: cand ≡ labels
+                release(cand)
                 break
-            # 2. pointer jump: lab ← label OF the label (labels are node
-            #    ids, every node has a row, so this is a self-equi-join;
-            #    min keeps monotonicity when the target hasn't caught up)
+            # 2. pointer jump: lab ← label OF the label (a self-equi-join;
+            #    least keeps monotonicity when the target hasn't caught up)
             jumped = cand.alias("c").join(
                 cand.select(
                     F.col("doc_id").alias("lab"), F.col("lab").alias("lab2")
                 ).alias("j"),
                 "lab",
             )
-            obs_l = Observation()
-            labels = (
-                jumped.select("doc_id", F.least("lab", "lab2").alias("lab"))
-                .observe(
-                    obs_l, F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-                )
-                .localCheckpoint(eager=True)
+            nxt, m = checkpoint_observed(
+                jumped.select("doc_id", F.least("lab", "lab2").alias("lab")),
+                s=_label_sum(),
             )
-            prev_sum = obs_l.get["s"]
-            # round r reads ONLY labels_{r-1}: once labels_r is
-            # materialized, the previous round's labels and THIS round's
-            # cand are dead — free them deterministically instead of
-            # carrying up to 2 x max_rounds block sets to JVM GC (the
-            # mapreduce 100x-tile lesson; `sym` predates the loop and is
-            # never touched). Ids come from the round's own DataFrames —
-            # exact, never a session diff.
-            _unpersist_rdds(spark, prev_ids | ({_checkpoint_rdd_id(cand)} - {None}))
-            prev_ids = {_checkpoint_rdd_id(labels)} - {None}
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+            # round r reads only labels_{r-1}: free it and this cand
+            release(labels, cand)
+            labels, prev_sum = nxt, m["s"]
+    release(sym)
     return labels, rounds

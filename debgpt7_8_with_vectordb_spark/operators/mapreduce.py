@@ -26,10 +26,15 @@ frontend.py:289-293 EchoFrontend.lossy_mode).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from itertools import groupby
+from operator import itemgetter
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from ..loops import checkpoint_observed, release
 
 #: Rows per range partition when assigning the global pairing index.
 #: 64 Ki rows/partition keeps the per-partition window cheap and bounds
@@ -37,11 +42,11 @@ from pyspark.sql import Column, DataFrame, Window
 #: offset rows ≈ 25 MB — broadcastable; the data itself never funnels).
 _RN_PARTITION_ROWS = 65536
 
-#: Rows per contiguous packing block in compact_reduce. Packing is
-#: greedy-sequential WITHIN a block (executor-side), blocks are exact
-#: rn//4096 slices, so results are deterministic under any physical
-#: partitioning. Inputs ≤ 4096 rows are one block = the reference's
-#: exact global greedy scan (mapreduce.py:287-326).
+#: Rows per contiguous block of the tree/compact reduce loop. Rounds
+#: run executor-side WITHIN a block, blocks are exact rn//4096 slices,
+#: so results are deterministic under any physical partitioning.
+#: Inputs ≤ 4096 rows are one block = the reference's exact global
+#: greedy scan (mapreduce.py:287-326).
 _PACK_BLOCK_ROWS = 4096
 
 
@@ -92,38 +97,6 @@ def _with_global_rn(df: DataFrame, order_cols: list[str], n: int) -> DataFrame:
     )
 
 
-def _checkpoint_rdd_id(df: DataFrame) -> "int | None":
-    """The JVM RDD id that ``localCheckpoint(eager=True)`` persisted:
-    a checkpointed DataFrame's analyzed plan is a LogicalRDD wrapping
-    exactly that RDD. Extracting it from the DataFrame object makes
-    superseded-checkpoint freeing EXACT — no session-global
-    before/after id diffs that could misattribute (and free mid-use) a
-    concurrent job's blocks on a shared SparkSession (ADVICE r9)."""
-    try:
-        return int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:  # not a LogicalRDD plan: nothing was persisted
-        return None
-
-
-def _unpersist_rdds(spark, ids: set[int]) -> None:
-    """Deterministically free SUPERSEDED reduce-round checkpoints. The
-    ContextCleaner would GC them eventually, but 'eventually' at the
-    100x tile meant carrying every round's blocks (~1 GB held for a
-    150 MB corpus, measured in tools/scale_mapreduce_100x.py) until JVM
-    GC — at 100 TB that is pure memory-pressure. Safe because round r+1
-    reads ONLY round r's checkpoint: blocks from r-1 can never be
-    recomputed (truncated lineage) but are never needed again either.
-    ``ids`` are exact per-DataFrame checkpoint ids from
-    :func:`_checkpoint_rdd_id` — concurrent jobs on the same session
-    can never be misattributed."""
-    if not ids:
-        return
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
-
-
 def echo_lossy(col: Column, rate: int = 2) -> Column:
     """Deterministic 'extraction': every rate-th char, as a Catalyst
     expression (filter over the char positions — no UDF)."""
@@ -146,248 +119,122 @@ def map_phase(chunks: DataFrame, content_col: str = "content", rate: int = 2) ->
     )
 
 
-def tree_reduce(
+def _blocked_reduce(
     mapped: DataFrame,
-    combine: str = "\n",
-    max_rounds: int | None = None,
+    group_ids: Callable[[list], list[int]],
+    levels: int,
+    combine: str,
 ) -> tuple[DataFrame, int]:
-    """A4 binary tree reduction: pair adjacent rows, concatenate, repeat
-    until one row remains. Returns (1-row DataFrame, rounds run).
+    """The reduce driver loop shared by tree and compact reduce: repeat
+    rounds of "group adjacent rows, join each group's values" until one
+    row remains. ``group_ids(rows)`` gives one round's contiguous group
+    ids for a block of (doc_id, start, val) rows in (doc_id, start)
+    order. Returns (1-row DataFrame, rounds run).
 
-    Pairing key = rn//2 over the stable global (doc_id, start) order; the
-    odd tail element rides along unmerged (reference mapreduce.py:337-350).
-    The global index comes from ``_with_global_rn`` (per-partition rank +
-    broadcast offsets), so every pass is fully parallel — never a
-    single-partition funnel.
-
-    BLOCKED MULTI-ROUND execution (the r9 100x-tile fix): one Spark job
-    per ROUND paid ~n/2 two-row applyInPandas groups of Arrow/pandas
-    overhead — measured 147x wall for 100x rows. Instead, each pass
-    slices the surviving rows into exact contiguous aligned blocks of
-    ``_PACK_BLOCK_ROWS`` (= 2^12) and replays up to 12 adjacent-pairing
-    rounds INSIDE each task over plain Python lists. This is exactly the
-    global algorithm: a full 2^12 block's survivor count is even at
-    every level (2^12/2^r for r < 12), so pairing never crosses a block
-    boundary within a pass, and only the final partial block ever holds
-    the odd tail — the same tail the global rounds produce. Rounds
-    still total ceil(log2(n)) (12 + ceil(log2(ceil(n/4096))) ==
-    ceil(log2(n))), which the mapreduce_echo oracle pins, and the final
-    string is byte-identical (tests pin the digests). A 10^11-chunk
-    corpus now costs ~3 shuffle passes, not ~37 per-round jobs.
-
-    Round-15 action fold (guide §1.2 step 1): the map output is
-    materialized ONCE with its row count riding that same action as an
-    Observation metric — previously the loop-control ``count()``
-    executed the whole map phase (chunker + per-char echo transform)
-    and pass 1 then recomputed it — and each pass's max(_rounds)/count
-    pair rides the pass's own checkpoint action the same way, dropping
-    two follow-up jobs per pass. The mapped checkpoint is freed by the
-    loop's existing deterministic unpersist as soon as pass 1's output
-    is materialized.
+    Each pass slices the surviving rows into exact contiguous
+    ``_PACK_BLOCK_ROWS`` blocks of the global order (``rn // block``) and
+    replays up to ``levels`` rounds inside each block's task; once the
+    rows fit one block, one task runs every remaining round. The round
+    count and the row count of a pass ride its checkpoint action; the
+    superseded checkpoint is freed as soon as the next one exists.
     """
-    from pyspark.sql import Observation
-
-    obs0 = Observation()
-    df = (
-        mapped.select(F.col("doc_id"), F.col("start"), F.col("val"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    ckpt, m = checkpoint_observed(
+        mapped.select("doc_id", "start", "val"), n=F.count(F.lit(1))
     )
-    n = int(obs0.get["n"])
+    n = int(m["n"])
     rounds = 0
-    limit = max_rounds if max_rounds is not None else max(1, int(math.log2(max(n, 2))) + 2)
-    # block must hold >= 2 rows to guarantee progress; a 2-row block is
-    # exactly one distributed pairing round (the pre-r9 per-round shape)
+    limit = max(1, int(math.log2(max(n, 2))) + 2)
+    # a block must hold >= 2 rows to guarantee progress
     block_rows = max(2, _PACK_BLOCK_ROWS)
-    block_levels = max(1, int(math.log2(block_rows)))
-    spark = mapped.sparkSession
-    prev_ids: set[int] = {_checkpoint_rdd_id(df)} - {None}
     while n > 1 and rounds < limit:
-        cap = min(limit - rounds, block_levels)
+        cap = limit - rounds
+        if n <= block_rows:
+            blocked = ckpt.withColumn("_blk", F.lit(0))
+        else:
+            cap = min(cap, levels)
+            blocked = (
+                _with_global_rn(ckpt, ["doc_id", "start"], n)
+                .withColumn("_blk", (F.col("rn") / block_rows).cast("long"))
+                .drop("rn")
+            )
 
         def reduce_block(pdf: pd.DataFrame) -> pd.DataFrame:
-            # (doc_id, start) order == rn order within a block
-            pdf = pdf.sort_values(["doc_id", "start"]).reset_index(drop=True)
+            pdf = pdf.sort_values(["doc_id", "start"])
             rows = list(zip(pdf["doc_id"], pdf["start"], pdf["val"]))
             r = 0
             while len(rows) > 1 and r < cap:
-                rows = [
-                    (
-                        rows[i][0],
-                        rows[i][1],
-                        combine.join(v for _, _, v in rows[i : i + 2]),
-                    )
-                    for i in range(0, len(rows), 2)
-                ]
+                rows = _combine_groups(rows, group_ids(rows), combine)
                 r += 1
             return pd.DataFrame(
                 [(int(d), int(s), v, r) for d, s, v in rows],
                 columns=["doc_id", "start", "val", "_rounds"],
             )
 
-        if n <= block_rows:
-            # end-game: the tail fits one task — no index pass needed
-            blocked = df.withColumn("_blk", F.lit(0))
-        else:
-            blocked = (
-                _with_global_rn(df, ["doc_id", "start"], n)
-                .withColumn(
-                    "_blk", (F.col("rn") / block_rows).cast("long")
-                )
-                .drop("rn")
-            )
-        obs = Observation()
-        done = (
-            blocked.groupBy("_blk")
-            .applyInPandas(
+        done, m = checkpoint_observed(
+            blocked.groupBy("_blk").applyInPandas(
                 reduce_block,
                 schema="doc_id long, start int, val string, _rounds int",
-            )
-            .observe(
-                obs,
-                F.max("_rounds").alias("r"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            r=F.max("_rounds"),
+            n=F.count(F.lit(1)),
         )
-        rounds += int(obs.get["r"])
-        n = int(obs.get["n"])
-        df = done.select("doc_id", "start", "val")
-        _unpersist_rdds(spark, prev_ids)
-        prev_ids = {_checkpoint_rdd_id(done)} - {None}
-    return df, rounds
+        rounds += int(m["r"])
+        n = int(m["n"])
+        release(ckpt)
+        ckpt = done
+    return ckpt.select("doc_id", "start", "val"), rounds
+
+
+def _combine_groups(rows: list, gids: list, combine: str) -> list:
+    """One reduce round: each run of equal group ids becomes one row
+    keyed by its first row, values joined in order."""
+    out = []
+    for _, run in groupby(zip(gids, rows), itemgetter(0)):
+        grp = [row for _, row in run]
+        out.append((grp[0][0], grp[0][1], combine.join(v for _, _, v in grp)))
+    return out
+
+
+def tree_reduce(mapped: DataFrame, combine: str = "\n") -> tuple[DataFrame, int]:
+    """A4 binary tree reduction: pair adjacent rows of the global
+    (doc_id, start) order, join each pair, repeat until one row remains
+    (the odd tail rides along unmerged, reference mapreduce.py:337-350).
+    Returns (1-row DataFrame, rounds run).
+
+    A full 2^12 block halves evenly for 12 rounds, so pairing never
+    crosses a block boundary within a pass and only the last partial
+    block holds the odd tail: the blocked passes ARE the global
+    algorithm, rounds total ceil(log2(n)) and the string is
+    byte-identical (tests pin the digests and rounds).
+    """
+    return _blocked_reduce(
+        mapped,
+        lambda rows: [i // 2 for i in range(len(rows))],
+        int(math.log2(max(2, _PACK_BLOCK_ROWS))),
+        combine,
+    )
 
 
 def compact_reduce(
-    mapped: DataFrame,
-    max_group_bytes: int,
-    combine: str = "\n",
-    max_rounds: int | None = None,
+    mapped: DataFrame, max_group_bytes: int, combine: str = "\n"
 ) -> tuple[DataFrame, int]:
     """A5/C4 compact (n-ary) reduction: greedily bin-pack rows into
     ≤max_group_bytes groups — at least 2 per group so every round
-    strictly shrinks (reference mapreduce.py:287-326) — combine each
-    group, repeat until one row remains.
+    strictly shrinks (reference mapreduce.py:287-326) — join each group,
+    repeat until one row remains. Returns (1-row DataFrame, rounds run).
 
-    Scale shape: the greedy scan is order-dependent, so it runs
-    EXECUTOR-SIDE over exact contiguous rn//4096 blocks — each task
-    packs and combines its own block in one ``applyInPandas`` pass;
-    nothing but the loop-control count ever reaches the driver. Blocks
-    are order-preserving slices, so the final concatenation is identical
-    to a global scan (the '\\n'-join is associative); inputs ≤ 4096 rows
-    are a single block and reproduce the reference's global greedy
-    byte-for-byte. A 1-row trailing block simply rides to the next round
-    (same as the odd-tail rule), and block 0 always holds ≥2 rows when
-    n ≥ 2, so every round shrinks.
+    The greedy scan is order-dependent, so a full-block pass runs ONE
+    round per block; blocks are order-preserving slices and the join is
+    associative, so the final string equals a global scan's, and inputs
+    that fit one block reproduce the reference's global greedy exactly.
     """
-    from pyspark.sql import Observation
-
     from .binpack import pack_sizes
 
-    # round-15 action fold — same as tree_reduce: map output materialized
-    # once with its count as an Observation metric; per-pass max/count
-    # ride each pass's checkpoint action
-    obs0 = Observation()
-    df = (
-        mapped.select("doc_id", "start", "val")
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n = int(obs0.get["n"])
-    rounds = 0
-    limit = max_rounds if max_rounds is not None else max(1, int(math.log2(max(n, 2))) + 2)
-    spark = mapped.sparkSession
-    prev_ids: set[int] = {_checkpoint_rdd_id(df)} - {None}
-    while n > 1 and rounds < limit:
-        if n <= _PACK_BLOCK_ROWS:
-            # END-GAME: the tail is a single packing block anyway, so
-            # run ALL remaining pack→combine rounds in one task (see
-            # tree_reduce) instead of one Spark job per round. Identical
-            # per-round semantics: global greedy pack over the
-            # (doc_id, start) order, min-2 groups, repeat.
-            remaining = limit - rounds
+    def pack(rows: list) -> list:
+        sizes = [len((v or "").encode("utf-8")) for _, _, v in rows]
+        return pack_sizes(sizes, max_group_bytes, min_per_group=2)
 
-            def finish_pack(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(["doc_id", "start"]).reset_index(drop=True)
-                rows = list(zip(pdf["doc_id"], pdf["start"], pdf["val"]))
-                r = 0
-                while len(rows) > 1 and r < remaining:
-                    sizes = [len((v or "").encode("utf-8")) for _, _, v in rows]
-                    gids = pack_sizes(sizes, max_group_bytes, min_per_group=2)
-                    nxt: list[tuple[int, int, str]] = []
-                    lo = 0
-                    for hi in range(1, len(gids) + 1):
-                        if hi == len(gids) or gids[hi] != gids[lo]:
-                            nxt.append(
-                                (
-                                    rows[lo][0],
-                                    rows[lo][1],
-                                    combine.join(v for _, _, v in rows[lo:hi]),
-                                )
-                            )
-                            lo = hi
-                    rows = nxt
-                    r += 1
-                return pd.DataFrame(
-                    [(int(d), int(s), v, r) for d, s, v in rows],
-                    columns=["doc_id", "start", "val", "_rounds"],
-                )
-
-            obs = Observation()
-            done = (
-                df.withColumn("_g", F.lit(0))
-                .groupBy("_g")
-                .applyInPandas(
-                    finish_pack,
-                    schema="doc_id long, start int, val string, _rounds int",
-                )
-                .observe(
-                    obs,
-                    F.max("_rounds").alias("r"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            rounds += int(obs.get["r"])
-            n = int(obs.get["n"])
-            df = done.select("doc_id", "start", "val")
-            _unpersist_rdds(spark, prev_ids)
-            prev_ids = {_checkpoint_rdd_id(done)} - {None}
-            continue
-        keyed = _with_global_rn(df, ["doc_id", "start"], n).withColumn(
-            "block", (F.col("rn") / _PACK_BLOCK_ROWS).cast("long")
-        )
-
-        def pack_and_combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("rn").reset_index(drop=True)
-            sizes = [len((v or "").encode("utf-8")) for v in pdf["val"]]
-            gids = pack_sizes(sizes, max_group_bytes, min_per_group=2)
-            out: list[tuple[int, int, str]] = []
-            lo = 0
-            for hi in range(1, len(gids) + 1):
-                if hi == len(gids) or gids[hi] != gids[lo]:
-                    out.append(
-                        (
-                            int(pdf["doc_id"].iloc[lo]),
-                            int(pdf["start"].iloc[lo]),
-                            combine.join(pdf["val"].iloc[lo:hi]),
-                        )
-                    )
-                    lo = hi
-            return pd.DataFrame(out, columns=["doc_id", "start", "val"])
-
-        obs = Observation()
-        df = (
-            keyed.groupBy("block")
-            .applyInPandas(pack_and_combine, schema="doc_id long, start int, val string")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = int(obs.get["n"])
-        rounds += 1
-        _unpersist_rdds(spark, prev_ids)
-        prev_ids = {_checkpoint_rdd_id(df)} - {None}
-    return df, rounds
+    return _blocked_reduce(mapped, pack, 1, combine)
 
 
 def mapreduce_echo(chunks: DataFrame, rate: int = 2) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.hashing import md5_long
 from ..functions.rounding import half_up_ratio_nonneg
 from ..functions.text import tokens
+from ..loops import checkpoint_observed, release
 from ..operators.chunker import chunk_documents
 from ..tables import fan_out, load_table
 from .catalog import query
@@ -136,20 +137,12 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks → vectors + a checksum over raw embedding norms). The oracle
     replays the entire chain in SQL — composition verified end-to-end.
 
-    Round-15 single-pass funnel (guide §1.2 step 1): the five funnel
-    counts used to be five crossJoined aggregation BRANCHES over shared
-    lineage, so one action re-executed the quality filter + minhash
-    subtree 3-4× (once per branch depth). Now the counts ride the
-    pipeline as Observation metrics on ONE chain: the qualified set is
-    checkpointed once (its count on that same action; it forks into the
-    band build AND the keep-rule join, so materializing it is what
-    stops the recompute), survivor/chunk counts are CollectMetrics
-    nodes inside the single final aggregation pass, and the result row
-    is assembled driver-side exactly like the repo's other driver-loop
-    queries (bpe_train_merges precedent). Every invocation still
-    computes everything from the parquet inputs — nothing is reused
-    across calls. Same-session A/B min-of-4: 2.42 → 1.90 s, rows
-    byte-identical."""
+    Single pass: the funnel counts are Observation metrics on one
+    chain, not separate aggregation branches. The qualified set is the
+    fork point (band build AND keep-rule join), so it is checkpointed
+    once with the docs-in and qualified counts on that action; every
+    later count rides the one final aggregation. The result row is
+    assembled driver-side and every call recomputes from the inputs."""
     from pyspark.sql import Observation
 
     docs = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -164,19 +157,15 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(200) * q).cast("long"),
     )
     obs_docs = Observation()
-    obs_q = Observation()
-    qualified = (
+    qualified, counts = checkpoint_observed(
         docs.observe(obs_docs, F.count(F.lit(1)).alias("n"))
         .withColumn("quality_u", quality_u)
         .filter((n > 0) & (F.col("quality_u") >= _MIN_QUALITY_U))
-        .select("doc_id", "text")
-        .observe(obs_q, F.count(F.lit(1)).alias("n"))
-        # fork point: consumed by the band build AND the keep-rule join —
-        # materialize once, collect docs-in/qualified counts on the way
-        .localCheckpoint(eager=True)
+        .select("doc_id", "text"),
+        n=F.count(F.lit(1)),
     )
     n_docs_in = int(obs_docs.get["n"])
-    n_qualified = int(obs_q.get["n"])
+    n_qualified = int(counts["n"])
 
     bands = _minhash_bands_from(qualified)
     bucket_min = bands.groupBy("band", "sig").agg(F.min("doc_id").alias("bmin"))
@@ -218,6 +207,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("rn"), 4).alias("sum_raw_norms"),
     ).head()
     n_survivors = int(obs_s.get["n"])
+    release(qualified)
     return spark.createDataFrame(
         [
             (

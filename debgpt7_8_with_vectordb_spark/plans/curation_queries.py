@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 _STREAM_SINK_SEQ = itertools.count()
 
 from ..functions.web import normalize_url_column
+from ..loops import capped_partitions
 from ..operators.crawl import curate_crawl, expand_sitemaps
 from ..operators.quality_rules import (
     GOPHER_STOPWORDS,
@@ -597,9 +598,7 @@ def stream_curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.web import robots_filter
     from ..operators.crawl import finalize_curated
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         docs = (
             spark.readStream.schema(_DOCS_STREAM_SCHEMA)
             .option("pathGlobFilter", "documents.parquet")
@@ -639,8 +638,6 @@ def stream_curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     # batch epilogue: re-reduce update emissions (idempotent), then the
     # funnel tail shared with the batch operator
     emitted = spark.table(name).select(

@@ -1099,13 +1099,6 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Label-propagation round cap for dedup_clusters. Near-dup graphs are
-#: unions of near-cliques (a duplicate class pairs all-to-all), so the
-#: min label reaches every member in 1-2 hops; the cap only guards
-#: against an adversarial long-chain graph.
-_CC_MAX_ROUNDS = 30
-
-
 @query(
     "dedup_clusters",
     oracle=f"""
@@ -1176,9 +1169,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    labels, _rounds = connected_components(
-        docs.select("doc_id"), sym, max_rounds=_CC_MAX_ROUNDS
-    )
+    labels, _rounds = connected_components(docs.select("doc_id"), sym)
     sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cluster_size"))
     return labels.join(sizes, "lab").select(
         "doc_id", F.col("lab").alias("cluster_id"), "cluster_size"
@@ -1234,7 +1225,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
     )
     labels, _rounds = connected_components(
-        emb.select(F.col("vec_id").alias("doc_id")), sym, max_rounds=_CC_MAX_ROUNDS
+        emb.select(F.col("vec_id").alias("doc_id")), sym
     )
     sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cluster_size"))
     return labels.join(sizes, "lab").select(

@@ -25,6 +25,7 @@ import itertools
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..loops import capped_partitions
 from ..operators.embedding import hash_provider_8, provider_embed
 from ..sources.readers import read_any_path
 from ..streaming.sessionize import sessionize_stream, stream_events_from_dir
@@ -189,9 +190,7 @@ def stream_windowed_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.sessionize import windowed_counts_stream
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
         counts = windowed_counts_stream(ev, window="1 day", watermark="2 hours")
         name = f"stream_windowed_topk_sink_{next(_SINK_SEQ)}"
@@ -203,8 +202,6 @@ def stream_windowed_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     w = W.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
@@ -312,9 +309,7 @@ def sessionize_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     — overhead, not compute). A 100 TB/day feed sets this to thousands
     BEFORE the first start; this query scopes the setting to the stream
     and restores the session conf after."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
         sess = sessionize_stream(ev, gap="1 hour", watermark="2 hours")
         name = f"sessionize_stream_sink_{next(_SINK_SEQ)}"
@@ -326,8 +321,6 @@ def sessionize_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return spark.table(name)
 
 
@@ -353,9 +346,7 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving."""
     from ..streaming.joins import attribution_join
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
         purchases = ev.filter(F.col("event_type") == "purchase")
         clicks = ev.filter(F.col("event_type") != "purchase")
@@ -369,8 +360,6 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return spark.table(name)
 
 
@@ -389,9 +378,7 @@ def stream_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch oracle."""
     from ..streaming.joins import stream_dedup
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
         deduped = stream_dedup(ev)
         name = f"stream_dedup_sink_{next(_SINK_SEQ)}"
@@ -403,8 +390,6 @@ def stream_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     t = spark.table(name)
     return t.agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -484,9 +469,7 @@ def stream_neardup_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "band", "sig"
     )
     joined = bands.join(prior, ["band", "sig"], "left")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         name = f"stream_neardup_sink_{next(_SINK_SEQ)}"
         q = (
             joined.writeStream.format("memory")
@@ -496,8 +479,6 @@ def stream_neardup_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return (
         spark.table(name)
         .groupBy("doc_id")
@@ -562,9 +543,7 @@ def stream_event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import funnel_states
     from .analytics_queries import _FUNNEL
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", min(8, int(old_sp)))
-    try:
+    with capped_partitions(spark, 8):
         ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
         st = funnel_states(ev, funnel=_FUNNEL, idle_timeout_ms=None)
         name = f"stream_funnel_sink_{next(_SINK_SEQ)}"
@@ -576,8 +555,6 @@ def stream_event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
     deepest = (
         spark.table(name).groupBy("user_id").agg(F.max("stage").alias("stage"))

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.hashing import md5_long
 from ..functions.text import char_shingles, tokens, word_shingles
+from ..loops import checkpoint_observed, loop_confs, release
 from ..operators.textprofile import repetition_counts
 from ..tables import fan_out, load_table
 from ..functions.rounding import (
@@ -1427,24 +1428,17 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right, so merge application is bit-identical; the oracle
     replays all rounds as an unrolled CTE chain.
 
-    Round-15 loop-cost cut (same recipe as the CC/fetch loops): the
-    vocab size rides the census checkpoint as an Observation metric,
-    and the merge rounds run with AQE scoped OFF and shuffle partitions
-    computed from that measured vocab count (~2M rows per partition,
-    capped at defaultParallelism — many partitions for a real corpus's
-    vocabulary, one for the bench's) — each round's argmax is a
-    known-size micro-aggregation where AQE's per-exchange sub-jobs are
-    pure driver overhead. A/B min-of-4: 1.33 → 1.04 s."""
-    from pyspark.sql import Observation
-
+    The vocab size rides the census checkpoint and sizes the rounds'
+    shuffles (:func:`loop_confs`); each round's superseded symbol table
+    is freed once the next one is checkpointed."""
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    obs_n = Observation()
-    syms = (
+    # vocab-sized checkpoint: truncates the per-round lineage
+    syms, m = checkpoint_observed(
         vocab.select(
             "word",
             "cnt",
@@ -1452,94 +1446,64 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sequence(F.lit(1), F.length("word")),
                 lambda i: F.substring(F.col("word"), i, F.lit(1)),
             ).alias("syms"),
-        )
-        .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()  # vocab-sized; truncates the per-round lineage
-    )
-    n_vocab = int(obs_n.get["n"])
-
-    rows = []
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            max(
-                1,
-                min(
-                    spark.sparkContext.defaultParallelism,
-                    -(-n_vocab // 2_000_000),
-                ),
-            )
         ),
+        n=F.count(F.lit(1)),
     )
-    try:
-        rows = _bpe_merge_rounds(syms)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
+    rows = []
+    with loop_confs(spark, int(m["n"]), 2_000_000):  # ~2M vocab rows per part
+        for r in range(1, N_MERGES + 1):
+            pairs = (
+                syms.select(
+                    "cnt",
+                    F.explode(
+                        F.when(
+                            F.size("syms") >= 2,
+                            F.transform(
+                                F.sequence(F.lit(1), F.size("syms") - 1),
+                                lambda i: F.struct(
+                                    F.element_at("syms", i).alias("lhs"),
+                                    F.element_at("syms", i + 1).alias("rhs"),
+                                ),
+                            ),
+                        ).otherwise(F.array().cast(
+                            "array<struct<lhs:string,rhs:string>>"
+                        ))
+                    ).alias("pr"),
+                )
+                .groupBy("pr.lhs", "pr.rhs")
+                .agg(F.sum("cnt").alias("total"))
+                .orderBy(F.desc("total"), F.asc("lhs"), F.asc("rhs"))
+                .limit(1)
+            )
+            best = pairs.head()
+            if best is None:
+                break
+            lhs, rhs, total = best["lhs"], best["rhs"], int(best["total"])
+            rows.append((r, lhs, rhs, lhs + rhs, total))
+            merged_sym = F.lit(lhs + rhs)
+            merged = syms.withColumn(
+                "syms",
+                F.aggregate(
+                    F.col("syms"),
+                    F.array().cast("array<string>"),
+                    lambda acc, x: F.when(
+                        (F.size(acc) > 0)
+                        & (F.try_element_at(acc, F.lit(-1)) == F.lit(lhs))
+                        & (x == F.lit(rhs)),
+                        F.concat(
+                            F.slice(acc, F.lit(1), F.size(acc) - 1),
+                            F.array(merged_sym),
+                        ),
+                    ).otherwise(F.concat(acc, F.array(x))),
+                ),
+            ).localCheckpoint(eager=True)
+            release(syms)
+            syms = merged
+    release(syms)
     return spark.createDataFrame(
         rows,
         "merge_rank long, lhs string, rhs string, merged string, pair_count long",
     )
-
-
-def _bpe_merge_rounds(syms: DataFrame) -> "list[tuple]":
-    """The N_MERGES argmax+fold rounds over the checkpointed symbol
-    table — body unchanged from the pre-r15 loop; split out so the
-    caller can scope the loop's conf without nesting the whole thing
-    in a try block."""
-    rows = []
-    for r in range(1, N_MERGES + 1):
-        pairs = (
-            syms.select(
-                "cnt",
-                F.explode(
-                    F.when(
-                        F.size("syms") >= 2,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size("syms") - 1),
-                            lambda i: F.struct(
-                                F.element_at("syms", i).alias("lhs"),
-                                F.element_at("syms", i + 1).alias("rhs"),
-                            ),
-                        ),
-                    ).otherwise(F.array().cast(
-                        "array<struct<lhs:string,rhs:string>>"
-                    ))
-                ).alias("pr"),
-            )
-            .groupBy("pr.lhs", "pr.rhs")
-            .agg(F.sum("cnt").alias("total"))
-            .orderBy(F.desc("total"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-        )
-        best = pairs.head()
-        if best is None:
-            break
-        lhs, rhs, total = best["lhs"], best["rhs"], int(best["total"])
-        rows.append((r, lhs, rhs, lhs + rhs, total))
-        merged_sym = F.lit(lhs + rhs)
-        syms = syms.withColumn(
-            "syms",
-            F.aggregate(
-                F.col("syms"),
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.try_element_at(acc, F.lit(-1)) == F.lit(lhs))
-                    & (x == F.lit(rhs)),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(merged_sym),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        ).localCheckpoint()
-
-    return rows
 
 
 # Winnowing (Schleimer/Wilkerson/Aiken 2003, the MOSS fingerprinter):

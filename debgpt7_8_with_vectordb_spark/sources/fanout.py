@@ -25,6 +25,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..loops import checkpoint_observed, loop_confs
+
 FETCHED_SCHEMA = "url string, status int, content string"
 
 
@@ -148,50 +150,20 @@ def fetch_paginated(
     archive runs out): a bounded driver-loop page-walk.
 
     ``fetcher(url) -> (status, content, next_url|None)``. Per round the
-    whole frontier fetches in parallel (Arrow-batched ``mapInArrow`` —
-    the cluster replaces the reference's sequential while-loop), the
-    newly discovered links are LEFT-ANTI-joined against the visited set
-    (cycle safety — the reference can loop forever on a cyclic archive),
-    and ``localCheckpoint`` truncates the per-round lineage exactly like
-    the mapreduce/components loops. Rounds = max chain depth, NOT total
-    page count — 10⁶ archives × depth 16 is 16 rounds, each a full-
-    parallel fetch of ~10⁶ pages. Only accumulator-carried loop-control
-    counts reach the driver. Returns (url, depth, status, content).
+    whole frontier fetches in parallel (Arrow-batched ``mapInArrow``),
+    the new links are LEFT-ANTI-joined against the visited set (cycle
+    safety), and the round's one action is the fetch's eager
+    ``localCheckpoint``. Rounds = max chain depth, not page count.
+    Returns (url, depth, status, content).
 
-    Round-15 restructure (guide §1.2 step 1: fix the distributed shape
-    before per-task work). An event-log profile of the r14 loop showed
-    each round costing ~6 scheduling units — the Python fetch job, an
-    anti-join/visited/count job train, AQE sub-stage jobs, and
-    100-180 ms driver gaps (planning + py4j) between them — with the
-    cluster idle in every gap. Three structural cuts, A/B-measured
-    together at 8.7 → 7.0 s (sf0.1, min-of-5, same session):
-
-    - ONE action per round. The frontier dedup + anti-join compile into
-      the SAME job as the fetch (the round's single eager
-      localCheckpoint); nothing else is materialized. The visited set is
-      never its own checkpoint: visitedᵣ ≡ seeds ∪ nxt₁ ∪ … ∪ nxtᵣ, and
-      every nxtⱼ is a cheap projection of round j's already-checkpointed
-      fetch result, so the anti-join's build side is a union of cached
-      scans — plan width O(rounds), depth O(1), no recompute path that
-      could re-run the side-effecting fetch stage (fetch-once holds
-      exactly as before: the fetch output is still pinned by an eager
-      localCheckpoint before anything consumes it).
-    - Loop control via ACCUMULATORS filled inside the fetch pass (rows
-      fetched, links found) instead of per-round count jobs. Only the
-      ==0 tests gate the loop, which is retry/speculation-safe: a
-      re-run task can inflate a positive count but can never make a
-      positive count zero or a zero count positive (a zero-link round
-      has nothing to re-run that would add links). The link count also
-      sizes the next round's shuffle.
-    - AQE off ONLY inside the loop (restored in ``finally``), with the
-      round's shuffle partitions derived from the measured frontier
-      size (≈500k url keys ≈ 32 MB per partition, capped at
-      defaultParallelism — a computed value, not a local constant; a
-      10⁶-url frontier gets multiple partitions, the bench's 16-url
-      frontier gets one). AQE's per-exchange sub-job orchestration is
-      pure overhead on a loop whose stage sizes are already known from
-      the previous round's accumulator; the initial seed dedup still
-      runs WITH AQE so the first fan-out stays runtime-sized.
+    - Fetch-once: every fetch result is pinned by its eager checkpoint
+      before anything reads it; the visited set is a union of
+      projections of those checkpoints, so no plan can re-run a fetch.
+    - Retry-safe gates: loop control reads accumulators filled in the
+      fetch pass and tests only ``== 0`` — a retried task can inflate a
+      positive count but never turn zero into positive or back.
+    - The seed dedup runs with AQE on; the rounds run in
+      :func:`loop_confs`, sized from the previous round's link count.
     """
 
     spark = seeds.sparkSession
@@ -199,25 +171,17 @@ def fetch_paginated(
     acc: DataFrame = spark.createDataFrame(
         [], "url string, status int, content string, next_url string, depth int"
     )
-    frontier = seeds.select("url").distinct().localCheckpoint(eager=True)
-    n_frontier = frontier.count()
+    frontier, m = checkpoint_observed(
+        seeds.select("url").distinct(), n=F.count(F.lit(1))
+    )
+    n_frontier = m["n"]
     visited_parts = [frontier.select("url")]  # + each round's nxt projection
-
-    def _parts_for(k: int) -> int:
-        # ~500k ≈ 32 MB of url keys per reduce partition (guide §2.2
-        # "fewer, larger partitions"), never more than the cluster width
-        return max(1, min(sc.defaultParallelism, -(-k // 500_000)))
-
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # ~500k ≈ 32 MB of url keys per reduce partition
+    with loop_confs(spark, n_frontier, 500_000) as resize:
         for depth in range(max_pages):
             if n_frontier == 0:
                 break
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(_parts_for(n_frontier))
-            )
+            resize(n_frontier)
             a_rows = sc.accumulator(0)
             a_links = sc.accumulator(0)
 
@@ -280,9 +244,6 @@ def fetch_paginated(
                     F.col("url").isNotNull()
                 )
             )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return acc.select("url", "depth", "status", "content")
 
 

@@ -59,16 +59,16 @@ def _fix_nanos(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
 
 
 # Memoized LOGICAL table plans, keyed on (application, path, file
-# mtime+size). spark.read.parquet costs ~95 ms of driver work PER CALL
+# stamps). spark.read.parquet costs ~95 ms of driver work PER CALL
 # (file listing, footer read, schema inference over py4j) — pure
 # metadata that a production deployment pays once via its catalog, but
-# which this path-based loader re-paid on every query build (ADVICE r14
-# / guide §1.2 step 2: per-task was fine, the fixed cost was not). The
-# cached value is an UNEXECUTED DataFrame plan — no rows, no results;
-# every action still computes from the parquet bytes. The mtime/size
-# key drops the entry the moment testdata is regenerated in place, and
-# the application id drops entries from stopped sessions.
-_TABLE_PLAN_CACHE: dict[tuple[str, str, float, int], DataFrame] = {}
+# which this path-based loader re-paid on every query build. The cached
+# value is an UNEXECUTED DataFrame plan — no rows, no results; every
+# action still computes from the parquet bytes. The key carries the
+# mtime and size of the path and, for a directory, of the files under
+# it, so a rewritten file drops its plan; the application id drops
+# entries from stopped sessions.
+_TABLE_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _app_id(spark: SparkSession) -> str:
@@ -82,50 +82,54 @@ def _app_id(spark: SparkSession) -> str:
     return cached
 
 
-def _plan_cache_key(
-    spark: SparkSession, path: str
-) -> "tuple[str, str, float, int] | None":
+def _plan_cache_key(spark: SparkSession, path: str) -> "tuple | None":
+    """(application, path, mtime, size), plus for a directory the newest
+    mtime and total size of the files under it: a part file rewritten in
+    place leaves the directory's own stamps unchanged."""
     import os
 
     try:
         st = os.stat(path)
-        return (_app_id(spark), path, st.st_mtime, st.st_size)
+        key = (_app_id(spark), path, st.st_mtime, st.st_size)
+        if os.path.isdir(path):
+            parts = [
+                os.stat(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs
+            ]
+            key += (
+                max((p.st_mtime for p in parts), default=0.0),
+                sum(p.st_size for p in parts),
+            )
+        return key
     except OSError:
         return None
 
 
-def read_parquet_plan_cached(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the logical plan memoized per
-    (application, path, mtime, size) — for artifact tables read on
-    every query build (signatures, verified pairs, IVF index, winnow
-    fps). Same contract as the table cache above: an unexecuted plan,
-    invalidated the moment the file/directory changes."""
+def _memo_plan(spark: SparkSession, path: str, build) -> DataFrame:
     key = _plan_cache_key(spark, path)
-    if key is not None:
-        hit = _TABLE_PLAN_CACHE.get(key)
-        if hit is not None:
-            return hit
-    df = spark.read.parquet(path)
-    if key is not None:
+    if key is None:
+        return build()
+    df = _TABLE_PLAN_CACHE.get(key)
+    if df is None:
+        df = build()
         if len(_TABLE_PLAN_CACHE) > 256:  # sessions churn in tests
             _TABLE_PLAN_CACHE.clear()
         _TABLE_PLAN_CACHE[key] = df
     return df
+
+
+def read_parquet_plan_cached(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` with the logical plan memoized like
+    :func:`load_table` — for artifact tables read on every query build
+    (signatures, verified pairs, IVF index, winnow fps)."""
+    return _memo_plan(spark, path, lambda: spark.read.parquet(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    key = _plan_cache_key(spark, path)
-    if key is not None:
-        hit = _TABLE_PLAN_CACHE.get(key)
-        if hit is not None:
-            return hit
-    df = _load_table_uncached(spark, sf_dir, name)
-    if key is not None:
-        if len(_TABLE_PLAN_CACHE) > 256:  # sessions churn in tests
-            _TABLE_PLAN_CACHE.clear()
-        _TABLE_PLAN_CACHE[key] = df
-    return df
+    return _memo_plan(
+        spark,
+        f"{sf_dir}/{name}.parquet",
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -194,13 +194,18 @@ def test_checkpoint_freeing_is_exact_not_session_global(spark):
     blocks by the exact RDD id of the round's own DataFrame — a
     concurrent job's persisted/checkpointed blocks on the SAME session
     must survive the reduce loop untouched."""
-    from debgpt7_8_with_vectordb_spark.operators.mapreduce import (
-        _checkpoint_rdd_id,
-    )
+    from debgpt7_8_with_vectordb_spark.loops import _checkpoint_rdd_id, release
 
     bystander = spark.range(100).localCheckpoint(eager=True)
     by_id = _checkpoint_rdd_id(bystander)
     assert by_id is not None
+    # release frees exactly the checkpoints it is handed; DataFrames that
+    # are not checkpoints are ignored
+    other = spark.range(10).localCheckpoint(eager=True)
+    other_id = _checkpoint_rdd_id(other)
+    release(other, spark.range(3))
+    live = _live_checkpoint_ids(spark)
+    assert other_id not in live and by_id in live
 
     mapped = chunks_df(spark, [f"t{i}" for i in range(9)]).select(
         "doc_id", "start", F.col("content").alias("val")
@@ -223,7 +228,7 @@ def _live_checkpoint_ids(spark) -> set[int]:
 def test_superseded_round_checkpoints_are_actually_freed(spark):
     """ADVICE r10: the exact-freeing test above proves a bystander
     SURVIVES, but must also prove superseded rounds were UNPERSISTED —
-    _checkpoint_rdd_id fails open (any exception -> None -> freeing
+    loops._checkpoint_rdd_id fails open (any exception -> None -> freeing
     no-ops), so a Spark-internal API change in
     queryExecution().analyzed().rdd() would silently reintroduce the
     per-round block pile-up (the 923 MB r9 scale bug) with the old
@@ -232,10 +237,11 @@ def test_superseded_round_checkpoints_are_actually_freed(spark):
     checkpoints MUST have existed — afterwards only the bystander and
     the final pass's checkpoint may remain."""
     import debgpt7_8_with_vectordb_spark.operators.mapreduce as mr
+    from debgpt7_8_with_vectordb_spark.loops import _checkpoint_rdd_id
 
     live_before = _live_checkpoint_ids(spark)
     bystander = spark.range(50).localCheckpoint(eager=True)
-    by_id = mr._checkpoint_rdd_id(bystander)
+    by_id = _checkpoint_rdd_id(bystander)
     assert by_id is not None
 
     mapped = chunks_df(spark, [f"t{i}" for i in range(9)]).select(

@@ -6,6 +6,7 @@ loop-control shortcuts must preserve the operators' exact semantics.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from debgpt7_8_with_vectordb_spark.operators.graph import connected_components
 from debgpt7_8_with_vectordb_spark.sources.fanout import fetch_paginated
@@ -18,17 +19,54 @@ def _confs(spark):
     )
 
 
-def test_connected_components_restores_scoped_confs(spark):
-    before = _confs(spark)
+def _cc_case(spark, tmp_path):
     nodes = spark.range(6).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     sym = pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     labels, _ = connected_components(nodes, sym)
-    assert _confs(spark) == before
     got = {r["doc_id"]: r["lab"] for r in labels.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5}
+
+
+def _fetch_case(spark, tmp_path):
+    def fetcher(url):
+        return 200, "x", None
+
+    seeds = spark.createDataFrame([("p://a",)], "url string")
+    out = fetch_paginated(seeds, fetcher).collect()
+    assert [(r["url"], r["depth"], r["status"]) for r in out] == [
+        ("p://a", 0, 200)
+    ]
+
+
+def _bpe_case(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debgpt7_8_with_vectordb_spark.plans import QUERIES
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([0], pa.int64()), "text": pa.array(["aaaa"])}),
+        str(tmp_path / "documents.parquet"),
+    )
+    rows = QUERIES["bpe_train_merges"](spark, str(tmp_path)).collect()
+    got = sorted((r["merge_rank"], r["merged"], r["pair_count"]) for r in rows)
+    assert got == [(1, "aa", 3), (2, "aaaa", 1)]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_cc_case, _fetch_case, _bpe_case],
+    ids=["connected_components", "fetch_paginated", "bpe_train_merges"],
+)
+def test_loop_restores_scoped_confs(spark, tmp_path, case):
+    """Every loop that scopes AQE and shuffle partitions hands the
+    session back with both confs as they were, and its output intact."""
+    before = _confs(spark)
+    case(spark, tmp_path)
+    assert _confs(spark) == before
 
 
 def test_connected_components_restores_confs_on_error(spark):
@@ -57,20 +95,6 @@ def test_cand_certificate_skips_final_jump_exactly(spark):
     labels, rounds = connected_components(nodes, sym)
     assert {r["lab"] for r in labels.collect()} == {0}
     assert rounds <= 7  # log2(32)=5 + certificate + slack
-
-
-def test_fetch_paginated_restores_scoped_confs(spark):
-    before = _confs(spark)
-
-    def fetcher(url):
-        return 200, "x", None
-
-    seeds = spark.createDataFrame([("p://a",)], "url string")
-    out = fetch_paginated(seeds, fetcher).collect()
-    assert _confs(spark) == before
-    assert [(r["url"], r["depth"], r["status"]) for r in out] == [
-        ("p://a", 0, 200)
-    ]
 
 
 def test_fetch_paginated_empty_seeds_schema_and_no_rows(spark):
@@ -120,3 +144,37 @@ def test_load_table_plan_cache_invalidates_on_rewrite(spark, tmp_path):
     again = load_table(spark, sf, "events")
     assert again is not first
     assert again.count() == 3
+
+
+def test_load_table_plan_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A directory table whose part file is rewritten in place keeps the
+    directory's own mtime and size; the memo must still drop the plan."""
+    import os
+    import time as _t
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debgpt7_8_with_vectordb_spark.tables import load_table
+
+    sf = str(tmp_path)
+    d = os.path.join(sf, "events.parquet")
+    os.mkdir(d)
+    part = os.path.join(d, "part-0.parquet")
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64())}), part)
+    first = load_table(spark, sf, "events")
+    assert first.columns == ["event_id"]
+    assert load_table(spark, sf, "events") is first  # memo hit
+    _t.sleep(0.01)  # ensure a distinct mtime
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "user_id": pa.array([5, 6], pa.int64()),
+            }
+        ),
+        part,
+    )
+    again = load_table(spark, sf, "events")
+    assert again is not first
+    assert again.columns == ["event_id", "user_id"]
