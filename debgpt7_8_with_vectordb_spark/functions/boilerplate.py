@@ -22,7 +22,8 @@ Approach (simplified jusText, zero dependencies, deterministic):
    inside an article survive, isolated menu stubs don't).
 
 The result is a heuristic, and honestly so: the per-block signals and
-thresholds are exposed, and the stage reports kept/total block counts
+thresholds are exposed, and the crawl stage (operators/crawl.py)
+reports kept/total block counts
 and the boilerplate ratio so a corpus-level monitor can flag pages
 where the classifier collapses (all-BAD or all-GOOD extremes).
 """
@@ -170,39 +171,3 @@ def extract_main_text(
     verdicts = classify_blocks(blocks, min_good, min_near, max_link_density)
     kept = [b["text"] for b, v in zip(blocks, verdicts) if v == "kept"]
     return normalize_extracted("\n".join(kept)), len(kept), len(blocks)
-
-
-MAIN_CONTENT_SCHEMA = (
-    "doc_id long, main_text string, blocks_kept int, blocks_total int, "
-    "boilerplate_ratio double"
-)
-
-
-def extract_main_content(df, html_col: str = "html", id_col: str = "doc_id"):
-    """Arrow-batched stage: page HTML -> main text + the monitor
-    columns (kept/total blocks, boilerplate ratio). NULL main_text for
-    NULL input; a page with zero blocks reports ratio NULL (nothing to
-    judge) rather than pretending perfect extraction."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf[id_col], pdf[html_col]):
-                if not isinstance(html, str):
-                    rows.append((doc_id, None, None, None, None))
-                    continue
-                text, kept, total = extract_main_text(html)
-                ratio = (1.0 - kept / total) if total else None
-                rows.append((doc_id, text, kept, total, ratio))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "main_text", "blocks_kept", "blocks_total",
-                    "boilerplate_ratio",
-                ],
-            ).astype({"blocks_kept": "Int32", "blocks_total": "Int32"})
-
-    return df.select(id_col, html_col).mapInPandas(
-        run, schema=MAIN_CONTENT_SCHEMA
-    )

@@ -241,28 +241,6 @@ def srp_signatures(
     return df.mapInPandas(run, schema=schema)
 
 
-def recall_at_k(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    nprobe: int,
-    k: int = 10,
-) -> float:
-    """recall@k of the IVF probe vs exact scoring over the same rows."""
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact = {
-        r["id"]
-        for r in indexed.select(
-            "id", F.round(cosine_similarity(F.col("nv"), qlit), 6).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(k)
-        .collect()
-    }
-    approx = {r["id"] for r in probe_ivf(indexed, centroids, query_vec, nprobe, k).collect()}
-    return len(exact & approx) / float(k)
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (the memory-scale path BEYOND IVF: 64 float32 dims
 # → m one-byte codes; at 100 TB of vectors the codes table is ~16× smaller

@@ -18,13 +18,14 @@ decode. These containers' metadata is pure struct/bit layout:
 All parsers return the ``AUDIO_SCHEMA`` tuple shape
 ``(fmt, channels, sample_rate, bits, n_samples)`` with None for fields
 the container does not carry (bits for lossy codecs), or None for
-unrecognized/truncated bytes. SAMPLE decode for these codecs stays
-honestly stubbed — MDCT/subband synthesis is codec-library territory;
-see ``multimodal.decode_image_stub``'s contract.
+unrecognized/truncated bytes. Sample decode is out of scope: the
+metadata is all a curation filter reads.
 
-The ``encode_test_*`` writers build valid fixtures forward from the
+The ``encode_test_*`` writers (the FLAC/AIFF/AU ones here feed the
+oracled ``audio_metadata`` query; the MP3/Ogg ones live in
+``tests/media_fixtures.py``) build valid fixtures forward from the
 specs, independent of the parsers, so round-trip tests are two
-implementations agreeing — same discipline as the image writers.
+implementations agreeing.
 """
 
 from __future__ import annotations
@@ -253,54 +254,6 @@ def parse_au_header(payload: bytes):
     return "au", int(channels), int(rate), bits, n_samples
 
 
-def decode_aiff_samples(payload: bytes):
-    """PCM sample decode for AIFF (8/16-bit big-endian signed in the
-    SSND chunk) — returns the ``decode_wav_samples`` tuple shape."""
-    hdr = parse_aiff_header(payload)
-    if hdr is None or payload[8:12] != b"AIFF" or hdr[3] not in (8, 16):
-        return None
-    _, channels, rate, bits, n_samples = hdr
-    pos, n = 12, len(payload)
-    while pos + 8 <= n:
-        tag = payload[pos : pos + 4]
-        (size,) = struct.unpack(">I", payload[pos + 4 : pos + 8])
-        if tag == b"SSND" and size >= 8:
-            (data_off,) = struct.unpack(">I", payload[pos + 8 : pos + 12])
-            body = payload[pos + 16 + data_off : pos + 8 + size]
-            if bits == 16:
-                usable = len(body) - len(body) % 2
-                samples = list(struct.unpack(f">{usable // 2}h", body[:usable]))
-            else:  # AIFF 8-bit is SIGNED (unlike WAV)
-                samples = list(struct.unpack(f"{len(body)}b", body))
-            # parse_aiff_header's n_samples is already the TOTAL
-            # interleaved count (COMM frames x channels) — cap as-is;
-            # a short SSND (the truncated CPython sndhdr.aiff fixture)
-            # simply yields what the chunk carries
-            return channels, rate, bits, samples[:n_samples]
-        pos += 8 + size + (size & 1)
-    return None
-
-
-def decode_au_samples(payload: bytes):
-    """PCM sample decode for .au linear encodings (8/16-bit big-endian
-    signed)."""
-    hdr = parse_au_header(payload)
-    if hdr is None or hdr[3] not in (8, 16):
-        return None
-    _, channels, rate, bits, _ = hdr
-    (off,) = struct.unpack(">I", payload[4:8])
-    (size,) = struct.unpack(">I", payload[8:12])
-    if size == 0xFFFFFFFF:
-        size = len(payload) - off
-    body = payload[off : off + size]
-    if bits == 16:
-        usable = len(body) - len(body) % 2
-        samples = list(struct.unpack(f">{usable // 2}h", body[:usable]))
-    else:
-        samples = list(struct.unpack(f"{len(body)}b", body))
-    return channels, rate, bits, samples
-
-
 def encode_test_aiff(
     channels: int, rate: int, bits: int, samples
 ) -> bytes:
@@ -360,150 +313,7 @@ def parse_audio_header(payload: bytes):
     return None
 
 
-_ID3_FRAMES = {
-    b"TIT2": "title", b"TPE1": "artist", b"TALB": "album",
-    b"TLAN": "language", b"TDRC": "year", b"TYER": "year",
-}
-
-
-def _id3_text(body: bytes) -> str | None:
-    """ID3v2 text frame body: 1 encoding byte + payload (ISO-8859-1 /
-    UTF-16 with BOM / UTF-16BE / UTF-8 per v2.4 §4)."""
-    if not body:
-        return None
-    enc, data = body[0], body[1:]
-    codec = {0: "latin-1", 1: "utf-16", 2: "utf-16-be", 3: "utf-8"}.get(enc)
-    if codec is None:
-        return None
-    try:
-        return data.decode(codec).split("\x00")[0].strip() or None
-    except UnicodeDecodeError:
-        return None
-
-
-def parse_id3_tags(payload: bytes) -> dict | None:
-    """ID3v2.3/2.4 tag walk — the audio twin of the EXIF stage: the
-    curation-relevant text frames (title/artist/album/language/year)
-    from the tag that prefixes most scraped MP3s. Returns a dict of
-    found fields or None when no ID3v2 tag / nothing parseable. v2.4
-    syncsafe frame sizes honored; compressed/encrypted frames skipped."""
-    if len(payload) < 10 or payload[:3] != b"ID3":
-        return None
-    ver = payload[3]
-    size = 0
-    for b in payload[6:10]:
-        if b & 0x80:
-            return None
-        size = (size << 7) | b
-    end = min(10 + size, len(payload))
-    pos = 10
-    if payload[5] & 0x40:  # extended header present: skip it
-        if pos + 4 > end:
-            return None
-        (ext,) = struct.unpack(">I", payload[pos : pos + 4])
-        if ver == 4:  # syncsafe in v2.4
-            ext = sum((payload[pos + i] & 0x7F) << (7 * (3 - i)) for i in range(4))
-        pos += ext if ver == 4 else ext + 4
-    out: dict = {}
-    while pos + 10 <= end:
-        fid = payload[pos : pos + 4]
-        if fid == b"\x00\x00\x00\x00":
-            break  # padding
-        raw = payload[pos + 4 : pos + 8]
-        if ver >= 4:  # v2.4 syncsafe frame size
-            if any(b & 0x80 for b in raw):
-                return None
-            fsize = sum((raw[i] & 0x7F) << (7 * (3 - i)) for i in range(4))
-        else:
-            (fsize,) = struct.unpack(">I", raw)
-        flags = payload[pos + 8 : pos + 10]
-        body = payload[pos + 10 : pos + 10 + fsize]
-        pos += 10 + fsize
-        if len(body) < fsize:
-            return None
-        name = _ID3_FRAMES.get(fid)
-        if name and name not in out and not (flags[1] & 0x0C):
-            text = _id3_text(body)
-            if text:
-                out[name] = text
-    return out or None
-
-
 # ------------------------------------------------------------- writers
-
-
-def build_test_id3(version: int = 4, **fields: str) -> bytes:
-    """Forward ID3v2.3/2.4 tag builder (fixture oracle). Field keys
-    follow ``_ID3_FRAMES`` values (title/artist/album/language/year);
-    encodings rotate per frame to cover all four spec codecs."""
-    rev = {"title": b"TIT2", "artist": b"TPE1", "album": b"TALB",
-           "language": b"TLAN",
-           "year": b"TDRC" if version == 4 else b"TYER"}
-    # v2.3 knows only ISO-8859-1 and UTF-16; v2.4 adds UTF-16BE + UTF-8
-    encs = (
-        [(0, "latin-1"), (3, "utf-8"), (1, "utf-16"), (2, "utf-16-be")]
-        if version == 4
-        else [(0, "latin-1"), (1, "utf-16")]
-    )
-    body = bytearray()
-    for i, (key, text) in enumerate(fields.items()):
-        enc_id, codec = encs[i % len(encs)]
-        try:
-            encoded = text.encode(codec)
-        except UnicodeEncodeError:  # non-Latin text: UTF-16 always fits
-            enc_id, encoded = 1, text.encode("utf-16")
-        data = bytes([enc_id]) + encoded
-        if version == 4:
-            size = bytes((len(data) >> s) & 0x7F for s in (21, 14, 7, 0))
-        else:
-            size = struct.pack(">I", len(data))
-        body += rev[key] + size + b"\x00\x00" + data
-    body += b"\x00" * 12  # padding
-    hdr_size = bytes((len(body) >> s) & 0x7F for s in (21, 14, 7, 0))
-    return b"ID3" + bytes([version, 0, 0]) + hdr_size + bytes(body)
-
-
-def encode_test_mp3(
-    channels: int,
-    sample_rate: int,
-    n_frames: int,
-    bitrate_kbps: int = 128,
-    with_id3: bool = False,
-    pad_every: int = 0,
-    id3: bytes | None = None,
-) -> bytes:
-    """Valid MPEG-1/2 Layer III CBR stream with zeroed frame payloads,
-    written forward from the spec tables (independent of the parser).
-    ``id3`` prepends a real tag (see ``build_test_id3``); ``with_id3``
-    keeps the minimal opaque-body variant."""
-    version_id = {True: 3, False: 2}[sample_rate >= 32000]
-    rates = _MP3_RATES[version_id]
-    sr_idx = rates.index(sample_rate)
-    vgroup = 1 if version_id == 3 else 2
-    br_idx = _MP3_BITRATES[(vgroup, 3)].index(bitrate_kbps) + 1
-    spf = 1152 if vgroup == 1 else 576
-    out = bytearray()
-    if id3:
-        out += id3
-    if with_id3:
-        tag = b"TAG-BODY" * 4  # 32 bytes, syncsafe-encoded length
-        out += b"ID3\x04\x00\x00" + bytes(
-            (len(tag) >> s) & 0x7F for s in (21, 14, 7, 0)
-        ) + tag
-    mode = 0xC0 if channels == 1 else 0x00
-    for i in range(n_frames):
-        padding = 1 if pad_every and i % pad_every == 0 else 0
-        size = spf // 8 * (bitrate_kbps * 1000) // sample_rate + padding
-        hdr = bytes(
-            (
-                0xFF,
-                0xE0 | (version_id << 3) | (1 << 1) | 1,  # layer III, no CRC
-                (br_idx << 4) | (sr_idx << 2) | (padding << 1),
-                mode,
-            )
-        )
-        out += hdr + b"\x00" * (size - 4)
-    return bytes(out)
 
 
 def encode_test_flac(
@@ -525,50 +335,3 @@ def encode_test_flac(
         + b"\x00" * 16  # md5 of unencoded audio
     )
     return b"fLaC" + bytes([0x80]) + len(body).to_bytes(3, "big") + body
-
-
-def _ogg_wrap(serial: int, seq: int, granule: int, htype: int, packet: bytes) -> bytes:
-    segs = []
-    rest = len(packet)
-    while rest >= 255:
-        segs.append(255)
-        rest -= 255
-    segs.append(rest)
-    hdr = (
-        b"OggS\x00"
-        + bytes([htype])
-        + struct.pack("<q", granule)
-        + struct.pack("<III", serial, seq, 0)  # checksum left 0 (parser ignores)
-        + bytes([len(segs)])
-        + bytes(segs)
-    )
-    return hdr + packet
-
-
-def encode_test_ogg(
-    codec: str, channels: int, sample_rate: int, total_granule: int
-) -> bytes:
-    """Two-page Ogg stream: identification header page + an EOS data
-    page carrying the final granule position."""
-    if codec == "vorbis":
-        ident = (
-            b"\x01vorbis"
-            + struct.pack("<I", 0)
-            + bytes([channels])
-            + struct.pack("<I", sample_rate)
-            + struct.pack("<iii", 0, 0, 0)
-            + b"\xb8\x01"  # blocksizes + framing bit
-        )
-    elif codec == "opus":
-        ident = (
-            b"OpusHead\x01"
-            + bytes([channels])
-            + struct.pack("<H", 312)  # pre-skip
-            + struct.pack("<I", sample_rate)  # input rate (informational)
-            + struct.pack("<hB", 0, 0)
-        )
-    else:
-        raise ValueError(f"unknown ogg codec: {codec}")
-    page0 = _ogg_wrap(7, 0, 0, 0x02, ident)  # BOS
-    page1 = _ogg_wrap(7, 1, total_granule, 0x04, b"\x00" * 20)  # EOS
-    return page0 + page1

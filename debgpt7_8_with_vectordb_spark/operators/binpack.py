@@ -60,7 +60,7 @@ def chunk_and_pack(
     them in ONE mapInPandas pass eliminates the chunk shuffle AND the
     per-doc applyInPandas group overhead entirely — zero exchanges, scan
     parallelism end-to-end. This is the operator the 100 TB pipeline
-    uses; ``pack_chunks`` below packs pre-existing chunk tables."""
+    uses."""
     from collections.abc import Iterator
 
     from .chunker import chunk_text
@@ -175,38 +175,4 @@ def pack_chunks_crossdoc(
 
     return fan_out(ranged, "range_id").groupBy("range_id").applyInPandas(
         pack_range, schema=CROSSDOC_SCHEMA
-    )
-
-
-def pack_chunks(
-    chunks: DataFrame,
-    max_group_bytes: int,
-    min_per_group: int = 1,
-) -> DataFrame:
-    """chunks(doc_id, start, end, n_bytes) → per-doc packed groups."""
-
-    def pack_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["start"]).reset_index(drop=True)
-        gids = pack_sizes(list(pdf["n_bytes"]), max_group_bytes, min_per_group)
-        pdf = pdf.assign(group_id=gids)
-        agg = (
-            pdf.groupby("group_id")
-            .agg(
-                doc_id=("doc_id", "first"),
-                n_items=("n_bytes", "size"),
-                group_bytes=("n_bytes", "sum"),
-                start=("start", "min"),
-                end=("end", "max"),
-            )
-            .reset_index()
-        )
-        return agg[["doc_id", "group_id", "n_items", "group_bytes", "start", "end"]]
-
-    # NOT fanned out (round-15): unlike pack_chunks_crossdoc's ~157
-    # heavy range groups, the per-doc groups here are tiny and the
-    # stage already rides the chunker's partitioning — fan_out measured
-    # neutral (0.44-0.52 s either way), so the extra exchange is not
-    # adopted (guide §1: keep only measured wins).
-    return chunks.select("doc_id", "start", "end", "n_bytes").groupBy("doc_id").applyInPandas(
-        pack_one, schema=PACKED_SCHEMA
     )

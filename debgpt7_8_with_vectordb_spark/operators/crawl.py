@@ -11,7 +11,7 @@ corpus actually runs, all as one declarative DataFrame DAG:
    same-URL dedup: the same page fetched under different spellings
    collapses to ONE row (first by crawl date, ties on raw URL — a
    deterministic keep rule, not dropDuplicates' partition luck);
-4. boilerplate removal (functions/boilerplate.extract_main_content);
+4. boilerplate removal (functions/boilerplate.extract_main_text);
 5. exact content dedup on the md5 of the main text (mirror-site
    collapse), same deterministic keep rule;
 6. length floor on the surviving main text.
@@ -84,8 +84,7 @@ def curate_crawl(
         )
         .select("url_norm", *[F.col(f"_keep.{c}").alias(c) for c in keep_cols])
     )
-    # extract_main_content keys on long doc ids; crawl keys are md5
-    # strings, so the pipeline uses a string-id twin of that stage
+    # crawl keys are md5 strings of the normalized URL
     docs = (
         pages.select(
             F.md5(F.col("url_norm")).alias("doc_id"),
@@ -119,8 +118,10 @@ def curate_crawl(
 
 
 def _extract_main_str_ids(docs: DataFrame) -> DataFrame:
-    """``extract_main_content`` twin for string doc ids carrying the
-    crawl columns through the Arrow pass."""
+    """Arrow-batched boilerplate stage: page HTML -> main text plus the
+    monitor columns (kept/total blocks, boilerplate ratio), carrying the
+    crawl columns through. NULL text for NULL html; a page with zero
+    blocks reports ratio NULL (nothing to judge)."""
     import pandas as pd
 
     from ..functions.boilerplate import extract_main_text
@@ -161,8 +162,7 @@ def finalize_curated(
     """The funnel TAIL over an already URL-deduplicated page set
     ``(doc_id, url, domain, fetched_at, html)``: boilerplate removal,
     length floor, exact content dedup with the lexicographic keep rule.
-    Shared by the batch funnel epilogues (stream_curate's drain, the
-    curate_upsert snapshot reader) — in production this is the periodic
+    stream_curate's drain runs it; in production this is the periodic
     compaction pass over the incrementally maintained URL-keyed table."""
     extracted = _extract_main_str_ids(best_pages)
     floored = extracted.filter(F.length("text") >= min_text_chars)

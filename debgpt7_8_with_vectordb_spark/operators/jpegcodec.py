@@ -1,14 +1,12 @@
-"""JPEG codec (ITU-T T.81), zero dependencies beyond numpy: baseline
-sequential AND progressive, both directions.
+"""JPEG decoder (ITU-T T.81), zero dependencies beyond numpy: baseline
+sequential AND progressive.
 
-Round-7 follow-through on the "lossy codecs stay stubbed" list: JPEG is
-struct + Huffman + an 8x8 DCT — all stdlib/numpy expressible — so it
-graduates from ``decode_image_stub`` to a real default, the same way
-PNG/GIF/BMP/PNM did. The container has no image libraries, so the
-forward encoders here are the test oracle: the suite round-trips
-encoder->decoder, pins the exactly-representable cases (constant blocks
-at quality 100) byte-for-byte, and pins progressive decode bit-identical
-to baseline decode of the same quantized coefficients.
+JPEG is struct + Huffman + an 8x8 DCT — all stdlib/numpy expressible.
+The forward encoders that build the test inputs live in
+``tests/media_fixtures.py``: the suite round-trips encoder->decoder,
+pins the exactly-representable cases (constant blocks at quality 100)
+byte-for-byte, and pins progressive decode bit-identical to baseline
+decode of the same quantized coefficients.
 
 Decoder (``decode_jpeg_pixels``): sequential (SOF0/SOF1) and progressive
 (SOF2) DCT frames — marker walk, DQT (8- and 16-bit precision), DHT
@@ -23,19 +21,6 @@ chroma upsample, JFIF YCbCr->RGB. Lossless, hierarchical and
 arithmetic-coded frames return None from the pixel decoder;
 ``parse_jpeg_header`` still reads their dimensions (the metadata half a
 curation filter needs never requires entropy decode).
-
-Encoders (``encode_jpeg_baseline`` / ``encode_jpeg_progressive``):
-RGB->YCbCr (JFIF), optional 2x2 box-filter chroma subsample, FDCT,
-Annex-K quantization tables scaled by the libjpeg quality formula,
-zigzag, DC-differential + run-length AC Huffman coding, 0xFF byte
-stuffing, optional restart markers; the progressive encoder emits
-either a spectral-selection-only script or the full successive-
-approximation progression (G.1.2.3 emit ordering for refinement
-correction bits and EOB runs). The Huffman tables are canonical
-two-length tables built HERE rather than the Annex-K defaults — valid
-per spec, deliberately non-standard so the decoder's canonical
-code-builder is exercised on tables it has never seen (files are
-larger; compression ratio is not what fixtures are for).
 
 Reference analog: reference reader.py:310-333 decodes real media content
 via libraries (pypdf pages); this module keeps the engine's decode
@@ -58,41 +43,6 @@ ZIGZAG = (
     53, 60, 61, 54, 47, 55, 62, 63,
 )
 
-# Annex K.1 quantization tables, natural (row-major) order
-QUANT_LUMA = (
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-)
-QUANT_CHROMA = (
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-)
-
-# Encoder-side canonical Huffman tables (NOT Annex K — see module doc).
-# DC: 12 category symbols split over lengths 3/4/5; AC: all 256 RRRRSSSS
-# symbols over lengths 8/9. Both satisfy the canonical-code constraint
-# (never reach the all-ones code of the longest length).
-_ENC_DC_BITS = (0, 0, 4, 7, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-_ENC_DC_VALS = tuple(range(12))
-_ENC_AC_BITS = (0, 0, 0, 0, 0, 0, 0, 128, 128, 0, 0, 0, 0, 0, 0, 0)
-_ENC_AC_VALS = tuple(range(256))
-# distinct shapes for table-id 1 so multi-table routing is exercised
-# (a BITS count is one byte, so 256 symbols must span >= two lengths)
-_ENC_DC1_BITS = (0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-_ENC_AC1_BITS = (0, 0, 0, 0, 0, 0, 0, 1, 255, 0, 0, 0, 0, 0, 0, 0)
-
 
 class _JpegError(Exception):
     """Internal: any structural/entropy inconsistency; the public
@@ -108,27 +58,6 @@ def _dct_matrix():
     c = np.cos((2 * n[None, :] + 1) * n[:, None] * np.pi / 16) / 2.0
     c[0] /= np.sqrt(2.0)
     return c
-
-
-def _scaled_quant(base, quality: int):
-    """libjpeg quality scaling: 1..100 -> per-entry clamp to [1, 255]."""
-    quality = min(100, max(1, int(quality)))
-    scale = 5000 // quality if quality < 50 else 200 - quality * 2
-    return [min(255, max(1, (b * scale + 50) // 100)) for b in base]
-
-
-def _canonical_codes(bits, vals):
-    """symbol -> (length, code) from the BITS/HUFFVAL lists (Annex C)."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (length, code)
-            k += 1
-            code += 1
-        code <<= 1
-    return out
 
 
 def _decode_table(bits, vals):
@@ -152,582 +81,6 @@ def _decode_table(bits, vals):
 def _extend(v: int, t: int) -> int:
     """Spec F.12 EXTEND: map t received magnitude bits to a signed value."""
     return v - (1 << t) + 1 if v < (1 << (t - 1)) else v
-
-
-# ---------------------------------------------------------------- encoder
-
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, length: int) -> None:
-        if not length:
-            return
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.buf.append(byte)
-            if byte == 0xFF:  # stuff so entropy data never forms a marker
-                self.buf.append(0x00)
-        self.acc &= (1 << self.nbits) - 1
-
-    def pad_to_byte(self) -> None:
-        if self.nbits:
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-
-    def marker(self, m: int) -> None:
-        self.pad_to_byte()
-        self.buf += bytes((0xFF, m))
-
-
-def _encode_block(bw, zz, pred, dctab, actab) -> int:
-    """Huffman-encode one quantized zigzag block; returns its DC value."""
-    diff = zz[0] - pred
-    t = int(diff).bit_length() if diff >= 0 else int(-diff).bit_length()
-    length, code = dctab[t]
-    bw.write(code, length)
-    if t:
-        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            length, code = actab[0xF0]  # ZRL
-            bw.write(code, length)
-            run -= 16
-        s = v.bit_length() if v > 0 else (-v).bit_length()
-        length, code = actab[(run << 4) | s]
-        bw.write(code, length)
-        bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if run:
-        length, code = actab[0x00]  # EOB
-        bw.write(code, length)
-    return int(zz[0])
-
-
-def _box2(plane):
-    """2x2 box-filter downsample with edge replication to even dims."""
-    import numpy as np
-
-    h, w = plane.shape
-    if h % 2:
-        plane = np.vstack([plane, plane[-1:]])
-    if w % 2:
-        plane = np.hstack([plane, plane[:, -1:]])
-    return (
-        plane[0::2, 0::2] + plane[0::2, 1::2]
-        + plane[1::2, 0::2] + plane[1::2, 1::2]
-    ) / 4.0
-
-
-def _prepare_components(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int,
-    quality: int,
-    subsample: bool,
-):
-    """Shared forward-transform front end: color convert, optional 2x2
-    chroma downsample, pad to the MCU block grid, FDCT, quantize,
-    zigzag. Returns (comp_meta, quantized, qluma, qchroma, mcux, mcuy)
-    where comp_meta = [(hi, vi, tq), ...] and quantized[i] is an
-    (pbh, pbw, 64) int32 array of zigzag-ordered blocks."""
-    import numpy as np
-
-    if channels not in (1, 3):
-        raise ValueError("JPEG encoders here support 1 or 3 channels")
-    arr = (
-        np.frombuffer(pixels, dtype=np.uint8, count=width * height * channels)
-        .reshape(height, width, channels)
-        .astype(np.float64)
-    )
-    qluma = _scaled_quant(QUANT_LUMA, quality)
-    qchroma = _scaled_quant(QUANT_CHROMA, quality)
-    if channels == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        if subsample:
-            comps = [(y, 2, 2, 0), (_box2(cb), 1, 1, 1), (_box2(cr), 1, 1, 1)]
-        else:
-            comps = [(y, 1, 1, 0), (cb, 1, 1, 1), (cr, 1, 1, 1)]
-    else:
-        comps = [(arr[..., 0], 1, 1, 0)]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    cmat = _dct_matrix()
-    qtabs = (
-        np.asarray(qluma, dtype=np.float64).reshape(8, 8),
-        np.asarray(qchroma, dtype=np.float64).reshape(8, 8),
-    )
-    zz = np.asarray(ZIGZAG)
-    quantized = []
-    for plane, hi, vi, tq in comps:
-        pw, ph = 8 * mcux * hi, 8 * mcuy * vi
-        plane = np.pad(
-            plane,
-            ((0, ph - plane.shape[0]), (0, pw - plane.shape[1])),
-            mode="edge",
-        )
-        blocks = (
-            plane.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3) - 128.0
-        )
-        coefs = np.einsum("ux,ijxy,vy->ijuv", cmat, blocks, cmat)
-        q = np.rint(coefs / qtabs[tq]).astype(np.int32)
-        quantized.append(q.reshape(ph // 8, pw // 8, 64)[:, :, zz])
-    return [(hi, vi, tq) for _, hi, vi, tq in comps], quantized, qluma, qchroma, mcux, mcuy
-
-
-def encode_jpeg_baseline(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    quality: int = 90,
-    subsample: bool = False,
-    restart_interval: int = 0,
-    exif: bytes | None = None,
-) -> bytes:
-    """Encode interleaved top-down RGB (channels=3) or grayscale
-    (channels=1) bytes as a baseline sequential JFIF file. ``subsample``
-    emits 4:2:0 (Y at 2x2, chroma at 1x1); otherwise 4:4:4. ``exif``
-    embeds a pre-built APP1 body (see ``build_test_exif``)."""
-    comps, quantized, qluma, qchroma, mcux, mcuy = _prepare_components(
-        width, height, pixels, channels, quality, subsample
-    )
-
-    out = bytearray(b"\xff\xd8")
-    out += (  # APP0 JFIF v1.1, no thumbnail
-        b"\xff\xe0" + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 1, 1, 0, 0)
-    )
-    if exif:
-        out += b"\xff\xe1" + struct.pack(">H", len(exif) + 2) + exif
-
-    def dqt(tq: int, table) -> bytes:
-        body = bytes([tq]) + bytes(table[ZIGZAG[i]] for i in range(64))
-        return b"\xff\xdb" + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc: int, th: int, bits, vals) -> bytes:
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
-
-    out += dqt(0, qluma)
-    sof = b"\x08" + struct.pack(">HH", height, width) + bytes([len(comps)])
-    for idx, (hi, vi, tq) in enumerate(comps):
-        sof += bytes([idx + 1, (hi << 4) | vi, tq])
-    enc_dc = (_canonical_codes(_ENC_DC_BITS, _ENC_DC_VALS),)
-    enc_ac = (_canonical_codes(_ENC_AC_BITS, _ENC_AC_VALS),)
-    if channels == 3:
-        out += dqt(1, qchroma)
-        enc_dc += (_canonical_codes(_ENC_DC1_BITS, _ENC_DC_VALS),)
-        enc_ac += (_canonical_codes(_ENC_AC1_BITS, _ENC_AC_VALS),)
-    out += b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    out += dht(0, 0, _ENC_DC_BITS, _ENC_DC_VALS)
-    out += dht(1, 0, _ENC_AC_BITS, _ENC_AC_VALS)
-    if channels == 3:
-        out += dht(0, 1, _ENC_DC1_BITS, _ENC_DC_VALS)
-        out += dht(1, 1, _ENC_AC1_BITS, _ENC_AC_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([len(comps)])
-    for idx, (_, _, tq) in enumerate(comps):
-        sos += bytes([idx + 1, (tq << 4) | tq])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-
-    bw = _BitWriter()
-    preds = [0] * len(comps)
-    rst = 0
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.marker(0xD0 + rst % 8)
-            rst += 1
-            preds = [0] * len(comps)
-        my, mx = divmod(m, mcux)
-        for ci, (hi, vi, tq) in enumerate(comps):
-            for v in range(vi):
-                for hh in range(hi):
-                    blk = quantized[ci][my * vi + v, mx * hi + hh]
-                    preds[ci] = _encode_block(
-                        bw, blk, preds[ci], enc_dc[tq], enc_ac[tq]
-                    )
-    bw.pad_to_byte()
-    out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _enc_dc_first(bw, dctab, dc: int, pred: int, al: int) -> int:
-    """Progressive DC-first: category + magnitude bits of the
-    point-transformed (arithmetic shift) DC differential."""
-    val = dc >> al
-    diff = val - pred
-    t = diff.bit_length() if diff >= 0 else (-diff).bit_length()
-    length, code = dctab[t]
-    bw.write(code, length)
-    if t:
-        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    return val
-
-
-def _emit_eobrun(bw, actab, n: int) -> None:
-    """EOBn symbol for a run of n blocks: category floor(log2 n) +
-    that many low-order bits of n (spec G.1.2.2)."""
-    nbits = n.bit_length() - 1
-    length, code = actab[nbits << 4]
-    bw.write(code, length)
-    if nbits:
-        bw.write(n & ((1 << nbits) - 1), nbits)
-
-
-def _enc_ac_first_block(bw, actab, zzblk, ss, se, al, eobrun) -> int:
-    """Progressive AC-first for one block: run/size coding of the
-    point-transformed band, EOB-run accumulation across blocks."""
-    r = 0
-    for k in range(ss, se + 1):
-        t = int(zzblk[k])
-        mag = (-t if t < 0 else t) >> al
-        if mag == 0:
-            r += 1
-            continue
-        if eobrun:
-            _emit_eobrun(bw, actab, eobrun)
-            eobrun = 0
-        while r > 15:
-            length, code = actab[0xF0]
-            bw.write(code, length)
-            r -= 16
-        s = mag.bit_length()
-        length, code = actab[(r << 4) | s]
-        bw.write(code, length)
-        bw.write(mag if t > 0 else (1 << s) - 1 - mag, s)
-        r = 0
-    if r:
-        eobrun += 1
-        if eobrun == 0x7FFF:
-            _emit_eobrun(bw, actab, eobrun)
-            eobrun = 0
-    return eobrun
-
-
-def _flush_eobrun_refine(bw, actab, st) -> None:
-    """Emit the pending EOB run and the correction bits deferred with
-    it (spec G.1.2.3 emit order: symbol, extra bits, buffered bits)."""
-    if st["eobrun"] <= 0:
-        return
-    _emit_eobrun(bw, actab, st["eobrun"])
-    st["eobrun"] = 0
-    for b in st["bits"]:
-        bw.write(b, 1)
-    st["bits"] = []
-
-
-def _enc_ac_refine_block(bw, actab, zzblk, ss, se, al, st) -> None:
-    """Progressive AC-refinement for one block: correction bits for
-    history coefficients ride after the next emitted symbol (or with
-    the EOB run); newly-nonzero coefficients emit run/1 + sign. ZRLs
-    are suppressed past the last newly-nonzero index so trailing
-    history bits fold into the EOB run."""
-    absv = []
-    last_new = ss - 1
-    for k in range(ss, se + 1):
-        t = int(zzblk[k])
-        mag = (-t if t < 0 else t) >> al
-        absv.append(mag)
-        if mag == 1:
-            last_new = k
-    r = 0
-    pend = []  # correction bits since the last emitted symbol
-    for k in range(ss, se + 1):
-        mag = absv[k - ss]
-        if mag == 0:
-            r += 1
-            continue
-        while r > 15 and k <= last_new:
-            _flush_eobrun_refine(bw, actab, st)
-            length, code = actab[0xF0]
-            bw.write(code, length)
-            r -= 16
-            for b in pend:
-                bw.write(b, 1)
-            pend = []
-        if mag > 1:  # history coefficient: defer its correction bit
-            pend.append(mag & 1)
-            continue
-        _flush_eobrun_refine(bw, actab, st)
-        length, code = actab[(r << 4) | 1]
-        bw.write(code, length)
-        bw.write(0 if int(zzblk[k]) < 0 else 1, 1)
-        for b in pend:
-            bw.write(b, 1)
-        pend = []
-        r = 0
-    if r > 0 or pend:
-        st["eobrun"] += 1
-        st["bits"].extend(pend)
-        if st["eobrun"] == 0x7FFF:
-            _flush_eobrun_refine(bw, actab, st)
-
-
-def encode_jpeg_progressive(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    quality: int = 90,
-    subsample: bool = False,
-    spectral_only: bool = False,
-) -> bytes:
-    """Encode a progressive (SOF2) JFIF file carrying the SAME
-    quantized coefficients as ``encode_jpeg_baseline`` at equal
-    settings — decodes bit-identically to the baseline file, which is
-    the round-trip oracle. Default script uses both spectral selection
-    and successive approximation (DC 1+1 bits, AC 2-level refinement,
-    libjpeg-style progression); ``spectral_only`` emits the simpler
-    DC-then-AC-band script with no refinement scans."""
-    comps, quantized, qluma, qchroma, mcux, mcuy = _prepare_components(
-        width, height, pixels, channels, quality, subsample
-    )
-    hmax = max(c[0] for c in comps)
-    vmax = max(c[1] for c in comps)
-    grids = []  # non-interleaved (nbw, nbh) per component (spec A.2.2)
-    for hi, vi, _ in comps:
-        cw = -(-(width * hi) // hmax)
-        ch = -(-(height * vi) // vmax)
-        grids.append((-(-cw // 8), -(-ch // 8)))
-    nc = len(comps)
-    everyone = list(range(nc))
-    if spectral_only:
-        script = [(everyone, 0, 0, 0, 0)]
-        script += [([ci], 1, 63, 0, 0) for ci in range(nc)]
-    else:
-        script = [(everyone, 0, 0, 0, 1)]
-        script += [([ci], 1, 5, 0, 2) for ci in range(nc)]
-        script += [([ci], 6, 63, 0, 2) for ci in range(nc)]
-        script += [([ci], 1, 63, 2, 1) for ci in range(nc)]
-        script += [(everyone, 0, 0, 1, 0)]
-        script += [([ci], 1, 63, 1, 0) for ci in range(nc)]
-
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xe0" + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 1, 1, 0, 0)
-    )
-
-    def dqt(tq: int, table) -> bytes:
-        body = bytes([tq]) + bytes(table[ZIGZAG[i]] for i in range(64))
-        return b"\xff\xdb" + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc: int, th: int, bits, vals) -> bytes:
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
-
-    out += dqt(0, qluma)
-    sof = b"\x08" + struct.pack(">HH", height, width) + bytes([nc])
-    for idx, (hi, vi, tq) in enumerate(comps):
-        sof += bytes([idx + 1, (hi << 4) | vi, tq])
-    enc_dc = (_canonical_codes(_ENC_DC_BITS, _ENC_DC_VALS),)
-    enc_ac = (_canonical_codes(_ENC_AC_BITS, _ENC_AC_VALS),)
-    if channels == 3:
-        out += dqt(1, qchroma)
-        enc_dc += (_canonical_codes(_ENC_DC1_BITS, _ENC_DC_VALS),)
-        enc_ac += (_canonical_codes(_ENC_AC1_BITS, _ENC_AC_VALS),)
-    out += b"\xff\xc2" + struct.pack(">H", len(sof) + 2) + sof
-    out += dht(0, 0, _ENC_DC_BITS, _ENC_DC_VALS)
-    out += dht(1, 0, _ENC_AC_BITS, _ENC_AC_VALS)
-    if channels == 3:
-        out += dht(0, 1, _ENC_DC1_BITS, _ENC_DC_VALS)
-        out += dht(1, 1, _ENC_AC1_BITS, _ENC_AC_VALS)
-
-    for comp_list, ss, se, ah, al in script:
-        sos = bytes([len(comp_list)])
-        for ci in comp_list:
-            tq = comps[ci][2]
-            sos += bytes([ci + 1, (tq << 4) | tq])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-        bw = _BitWriter()
-        if ss == 0 and len(comp_list) > 1:  # interleaved DC scan
-            preds = [0] * nc
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                for ci in comp_list:
-                    hi, vi, tq = comps[ci]
-                    for v in range(vi):
-                        for hh in range(hi):
-                            blk = quantized[ci][my * vi + v, mx * hi + hh]
-                            if ah == 0:
-                                preds[ci] = _enc_dc_first(
-                                    bw, enc_dc[tq], int(blk[0]), preds[ci], al
-                                )
-                            else:
-                                bw.write((int(blk[0]) >> al) & 1, 1)
-        else:  # non-interleaved: raster over the component's own grid
-            ci = comp_list[0]
-            hi, vi, tq = comps[ci]
-            nbw, nbh = grids[ci]
-            pred = 0
-            eobrun = 0
-            st = {"eobrun": 0, "bits": []}
-            for m in range(nbw * nbh):
-                my, mx = divmod(m, nbw)
-                blk = quantized[ci][my, mx]
-                if ss == 0:
-                    if ah == 0:
-                        pred = _enc_dc_first(bw, enc_dc[tq], int(blk[0]), pred, al)
-                    else:
-                        bw.write((int(blk[0]) >> al) & 1, 1)
-                elif ah == 0:
-                    eobrun = _enc_ac_first_block(
-                        bw, enc_ac[tq], blk, ss, se, al, eobrun
-                    )
-                else:
-                    _enc_ac_refine_block(bw, enc_ac[tq], blk, ss, se, al, st)
-            if eobrun:
-                _emit_eobrun(bw, enc_ac[tq], eobrun)
-            _flush_eobrun_refine(bw, enc_ac[tq], st)
-        bw.pad_to_byte()
-        out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def build_test_exif(
-    orientation: int = 1,
-    make: str = "",
-    model: str = "",
-    datetime: str = "",
-) -> bytes:
-    """Forward EXIF APP1 body builder (fixture oracle): "Exif\\0\\0" +
-    a little-endian TIFF with one IFD carrying Orientation (0x0112),
-    Make (0x010F), Model (0x0110) and DateTimeOriginal-in-IFD0 as
-    DateTime (0x0132)."""
-    entries = []
-    tail = bytearray()
-
-    def ascii_entry(tag: int, text: str):
-        data = text.encode("ascii") + b"\x00"
-        if len(data) <= 4:
-            entries.append(struct.pack("<HHI", tag, 2, len(data)) + data.ljust(4, b"\x00"))
-        else:
-            entries.append((tag, data))  # offset resolved after layout
-
-    entries.append(struct.pack("<HHIHH", 0x0112, 3, 1, orientation, 0))
-    if make:
-        ascii_entry(0x010F, make)
-    if model:
-        ascii_entry(0x0110, model)
-    if datetime:
-        ascii_entry(0x0132, datetime)
-    n = len(entries)
-    ifd_fixed = 8 + 2 + 12 * n + 4  # header + count + entries + next ptr
-    out_entries = b""
-    for e in entries:
-        if isinstance(e, bytes):
-            out_entries += e
-        else:
-            tag, data = e
-            out_entries += struct.pack("<HHII", tag, 2, len(data), ifd_fixed + len(tail))
-            tail += data
-    tiff = (
-        b"II*\x00" + struct.pack("<I", 8)
-        + struct.pack("<H", n) + out_entries + struct.pack("<I", 0)
-        + bytes(tail)
-    )
-    return b"Exif\x00\x00" + tiff
-
-
-def parse_jpeg_exif(payload: bytes) -> dict | None:
-    """EXIF metadata from the first APP1 "Exif" segment: a TIFF IFD0
-    walk (both byte orders) for the curation-relevant tags —
-    orientation (1-8, rotate/flip normalization key), camera make /
-    model, capture datetime. Returns a dict with those keys (missing
-    tags omitted) or None when no EXIF segment exists. Malformed TIFF
-    inside APP1 -> None (same quarantine contract as the decoders)."""
-    n = len(payload)
-    if n < 4 or payload[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    body = None
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            return None
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xD9, 0xDA):
-            return None  # scan/EOI reached without an EXIF APP1
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        if seglen < 2 or pos + 2 + seglen > n:
-            return None
-        if marker == 0xE1 and payload[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            body = payload[pos + 10 : pos + 2 + seglen]
-            break
-        pos += 2 + seglen
-    if body is None:
-        return None
-    try:
-        return _parse_exif_tiff(body)
-    except Exception:
-        return None
-
-
-_EXIF_TAGS = {0x0112: "orientation", 0x010F: "make", 0x0110: "model",
-              0x0132: "datetime", 0x9003: "datetime"}
-
-
-def _parse_exif_tiff(body: bytes) -> dict | None:
-    if body[:4] == b"II*\x00":
-        e = "<"
-    elif body[:4] == b"MM\x00*":
-        e = ">"
-    else:
-        return None
-    (ifd_off,) = struct.unpack(e + "I", body[4:8])
-    out: dict = {}
-    (count,) = struct.unpack(e + "H", body[ifd_off : ifd_off + 2])
-    for i in range(count):
-        off = ifd_off + 2 + 12 * i
-        tag, typ = struct.unpack(e + "HH", body[off : off + 4])
-        (cnt,) = struct.unpack(e + "I", body[off + 4 : off + 8])
-        name = _EXIF_TAGS.get(tag)
-        if name is None:
-            continue
-        if typ == 3 and cnt == 1:  # SHORT
-            (v,) = struct.unpack(e + "H", body[off + 8 : off + 10])
-            out[name] = int(v)
-        elif typ == 2:  # ASCII, NUL-terminated, possibly offset-stored
-            raw = (
-                body[off + 8 : off + 8 + cnt]
-                if cnt <= 4
-                else body[
-                    struct.unpack(e + "I", body[off + 8 : off + 12])[0] :
-                ][:cnt]
-            )
-            if len(raw) < cnt:
-                return None
-            out[name] = raw.split(b"\x00")[0].decode("ascii", "replace")
-    return out or None
 
 
 # ---------------------------------------------------------------- decoder

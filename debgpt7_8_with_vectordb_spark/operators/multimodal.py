@@ -2,33 +2,23 @@
 
 Design for a 100 TB media corpus: payloads live in a ``binary`` column
 (or content-addressed object-store paths) beside typed metadata columns;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages so bytes cross the JVM↔Python boundary once per
-batch, never per row.
+decode stages run as Arrow-batched ``mapInPandas`` stages so bytes
+cross the JVM↔Python boundary once per batch, never per row.
 
-Codec status (round 7): HEADER-METADATA decode is REAL for PNG / GIF /
-BMP / PNM / JPEG / TIFF / WebP / WAV / MP3 / FLAC / Ogg / AIFF / AU /
-MP4 / AVI / Matroska-WebM (zero-dependency struct parsers, golden-byte
-pinned), and PIXEL/SAMPLE decode is REAL for the stdlib-decodable
-subset — PNG 8/16-bit (zlib inflate + all five scanline filters,
-paletted PLTE mapping, Adam7 interlace, high-byte 16-bit
-presentation), BMP 24/32bpp uncompressed + 8bpp paletted incl. RLE8,
-TIFF strips (uncompressed/PackBits), 8/16-bit PNM
-P2/P3/P5/P6, GIF (from-scratch LZW + palette + interlace), JPEG both
-baseline and progressive (from-scratch Huffman + IDCT + successive-
-approximation scans + chroma upsample, jpegcodec.py),
-WAV PCM 8/16-bit (``decode_image_pixels`` / ``decode_wav_samples``),
-with feature-extract / resize / PCM-stats stages running on the decoded
-content. Still honestly stubbed, because they genuinely need codec
-libraries absent in this container:
-- ``decode_image_stub``: lossy WebP (VP8 — metadata decodes; VP8L
-  lossless pixels decode for real since round 8, webplcodec.py) and
-  lossy AUDIO/VIDEO codecs (MP3 / H.264 frame decode — ffmpeg
-  territory); JPEG decodes for real since round 7, baseline AND
-  progressive (jpegcodec.py);
-- ``fake_decode_metadata``: the deterministic md5-derived fake kept
-  for the oracled plumbing query (testdata payloads are text bytes,
-  not image files).
+HEADER-METADATA decode covers PNG / GIF / BMP / PNM / JPEG / TIFF /
+WebP / WAV / MP3 / FLAC / Ogg / AIFF / AU / MP4 / AVI / Matroska-WebM
+(zero-dependency struct parsers, golden-byte pinned). PIXEL decode
+(``decode_image_pixels``) covers the stdlib-decodable subset — PNG
+8/16-bit (zlib inflate + all five scanline filters, paletted PLTE
+mapping, Adam7 interlace, high-byte 16-bit presentation), BMP 24/32bpp
+uncompressed + 8bpp paletted incl. RLE8, TIFF strips
+(uncompressed/PackBits), 8/16-bit PNM P2/P3/P5/P6, GIF (LZW + palette +
+interlace), JPEG baseline and progressive (jpegcodec.py) and lossless
+WebP/VP8L (webplcodec.py). Lossy WebP (VP8) and lossy audio/video
+frames need codec libraries and are not decoded.
+``fake_decode_metadata`` is the deterministic md5-derived fake kept for
+the oracled plumbing query (testdata payloads are text bytes, not image
+files).
 """
 
 from __future__ import annotations
@@ -227,104 +217,6 @@ def _decode_tiff_pixels(payload: bytes):
     return "tiff", int(w), int(h), int(spp), bytes(out)
 
 
-def encode_test_tiff_pixels(
-    width: int,
-    height: int,
-    pixels: bytes,
-    spp: int = 3,
-    packbits: bool = False,
-    big_endian: bool = False,
-    rows_per_strip: int | None = None,
-    white_is_zero: bool = False,
-) -> bytes:
-    """Forward TIFF writer (fixture oracle): strip-organized 8-bit
-    chunky layout, optional PackBits compression (independent run
-    encoder), either byte order, multi-strip via rows_per_strip."""
-    e = ">" if big_endian else "<"
-    rps = rows_per_strip or height
-    strips = []
-    for y0 in range(0, height, rps):
-        rows = min(rps, height - y0)
-        raw = pixels[y0 * width * spp : (y0 + rows) * width * spp]
-        if white_is_zero and spp == 1:
-            raw = bytes(255 - v for v in raw)
-        if packbits:
-            enc = bytearray()
-            i = 0
-            while i < len(raw):
-                run = 1
-                while (
-                    i + run < len(raw) and raw[i + run] == raw[i] and run < 127
-                ):
-                    run += 1
-                if run >= 2:
-                    enc += bytes([257 - run, raw[i]])
-                    i += run
-                else:
-                    lit = i
-                    while (
-                        i < len(raw) and i - lit < 128
-                        and not (
-                            i + 2 < len(raw)
-                            and raw[i] == raw[i + 1] == raw[i + 2]
-                        )
-                    ):
-                        i += 1
-                    enc += bytes([i - lit - 1]) + raw[lit:i]
-            strips.append(bytes(enc))
-        else:
-            strips.append(raw)
-    photo = 0 if (white_is_zero and spp == 1) else (1 if spp == 1 else 2)
-    n_entries = 9
-    ifd_off = 8
-    data_off = ifd_off + 2 + 12 * n_entries + 4
-    # strip offset/count arrays (LONG) live right after the IFD
-    arr_bytes = 0 if len(strips) == 1 else 4 * len(strips) * 2
-    strip0 = data_off + arr_bytes
-    offs, pos = [], strip0
-    for s in strips:
-        offs.append(pos)
-        pos += len(s)
-
-    def entry(tag, typ, cnt, value_bytes):
-        return struct.pack(e + "HHI", tag, typ, cnt) + value_bytes
-
-    def long_inline(v):
-        return struct.pack(e + "I", v)
-
-    def short_inline(v):
-        return struct.pack(e + "HH", v, 0)
-
-    if len(strips) == 1:
-        off_entry = entry(273, 4, 1, long_inline(offs[0]))
-        cnt_entry = entry(279, 4, 1, long_inline(len(strips[0])))
-        tail = b""
-    else:
-        off_entry = entry(273, 4, len(strips), long_inline(data_off))
-        cnt_entry = entry(
-            279, 4, len(strips), long_inline(data_off + 4 * len(strips))
-        )
-        tail = b"".join(struct.pack(e + "I", o) for o in offs)
-        tail += b"".join(struct.pack(e + "I", len(s)) for s in strips)
-    entries = (
-        entry(256, 4, 1, long_inline(width))
-        + entry(257, 4, 1, long_inline(height))
-        + entry(258, 3, 1, short_inline(8))
-        + entry(259, 3, 1, short_inline(32773 if packbits else 1))
-        + entry(262, 3, 1, short_inline(photo))
-        + off_entry
-        + entry(277, 3, 1, short_inline(spp))
-        + entry(278, 4, 1, long_inline(rps))
-        + cnt_entry
-    )
-    bom = b"MM\x00*" if big_endian else b"II*\x00"
-    return (
-        bom + struct.pack(e + "I", ifd_off)
-        + struct.pack(e + "H", n_entries) + entries + struct.pack(e + "I", 0)
-        + tail + b"".join(strips)
-    )
-
-
 def _parse_tiff_header(payload: bytes):
     """TIFF 6.0: endianness from the byte-order mark, first IFD walk,
     ImageWidth (256) / ImageLength (257) as SHORT or LONG inline
@@ -517,25 +409,6 @@ def attach_binary_payload(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).cast("binary").alias("payload"),
         F.lit("image/fake").alias("media_type"),
-    )
-
-
-def decode_image_stub(payload: bytes) -> object:
-    """Codec-library decoder entry point. Since round 7 the
-    zero-dependency subset has a REAL default: PNG 8-bit, BMP 24/32bpp,
-    PNM, GIF incl. LZW+interlace, baseline+progressive JPEG
-    (``operators/jpegcodec.py``) and — round 8 — lossless WebP/VP8L
-    (``operators/webplcodec.py``) in ``decode_image_pixels``; WAV PCM
-    in ``decode_wav_samples``. This stub now covers only formats that
-    genuinely require codec libraries absent in this container: lossy
-    WebP (VP8 intra frames), lossy audio/video frame decode
-    (MP3 / H.264 / ...) and the rare non-Huffman JPEG variants
-    (arithmetic-coded / lossless / hierarchical)."""
-    raise NotImplementedError(
-        "VP8/MP3/H.264 lossy-frame decode requires ffmpeg-class codecs; "
-        "wire the real codec here in production — JPEG "
-        "(baseline + progressive) and lossless formats are handled by "
-        "decode_image_pixels/decode_wav_samples"
     )
 
 
@@ -1211,37 +1084,19 @@ def synthesize_test_video(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return ids.select(id_col).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def frame_sample_stub(media: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled frame index.
-    Frame decode itself is stubbed (no ffmpeg here); the fan-out schema
-    and per-payload explode are real."""
-    n_frames = (F.octet_length("payload") % 100 + 1).alias("n_frames")
-    return (
-        media.select("doc_id", n_frames)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth))
-            ).alias("frame_idx"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# PIXEL / PCM decode — round 7: the content half of the codec seam.
+# PIXEL decode: the content half of the codec seam.
 #
-# The r6 header codecs answered "what is this file" (format, dims, rate)
-# with zero dependencies; these decoders answer "what are the bytes" for
-# every format whose PIXEL/SAMPLE layout is pure stdlib territory:
+# The header codecs answer "what is this file" (format, dims, rate)
+# with zero dependencies; these decoders answer "what are the pixels"
+# for every format whose pixel layout is pure stdlib territory:
 #   - PNG 8-bit gray/RGB/gray+alpha/RGBA, non-interlaced (zlib inflate
 #     + the five scanline filters incl. Paeth, PNG spec §9);
 #   - BMP 24/32bpp uncompressed BI_RGB (bottom-up padded rows, BGR(A)
 #     order normalized to RGB(A));
-#   - PNM P5/P6 binary and P2/P3 ASCII, maxval <= 255;
-#   - WAV PCM 8-bit unsigned / 16-bit signed LE samples.
+#   - PNM P5/P6 binary and P2/P3 ASCII, maxval <= 255.
 # GIF pixels (LZW + palette + interlace) and JPEG — baseline AND
-# progressive (jpegcodec.py) — decode for real too; only lossy
-# audio/video codecs (MP3/H.264) stay behind ``decode_image_stub``.
+# progressive (jpegcodec.py) — decode too.
 #
 # Perf note for 100 TB: the per-byte unfilter loops below are the
 # stdlib-only fallback; in production the decoder slot is the same
@@ -1777,61 +1632,11 @@ def decode_image_pixels(
     return None
 
 
-def decode_wav_samples(
-    payload: bytes,
-) -> tuple[int, int, int, list[int]] | None:
-    """REAL PCM sample decode, zero dependencies: returns
-    ``(channels, sample_rate, bits, samples)`` with samples channel-
-    interleaved in frame order — 8-bit unsigned, or 16/24/32-bit
-    signed little-endian per the WAV spec — or None for
-    non-PCM/compressed audio."""
-    hdr = _parse_or_none(parse_wav_header, payload)
-    if hdr is None:
-        return None
-    _fmt, channels, rate, bits, _n = hdr
-    if bits not in (8, 16, 24, 32):
-        return None
-    # locate the data chunk body (same walk as parse_wav_header)
-    pos, n = 12, len(payload)
-    while pos + 8 <= n:
-        tag = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        if tag == b"data":
-            body = payload[pos + 8 : pos + 8 + size]
-            if bits == 16:
-                usable = len(body) - len(body) % 2
-                samples = list(
-                    struct.unpack(f"<{usable // 2}h", body[:usable])
-                )
-            elif bits == 24:  # 3-byte little-endian signed
-                usable = len(body) - len(body) % 3
-                samples = [
-                    int.from_bytes(body[i : i + 3], "little", signed=True)
-                    for i in range(0, usable, 3)
-                ]
-            elif bits == 32:
-                usable = len(body) - len(body) % 4
-                samples = list(
-                    struct.unpack(f"<{usable // 4}i", body[:usable])
-                )
-            else:
-                samples = list(body)
-            return channels, rate, bits, samples
-        pos += 8 + size + (size & 1)
-    return None
-
-
-def _pattern_px(x: int, y: int, c: int, seed: int) -> int:
-    """The deterministic test-pixel pattern shared by the patterned
-    writers AND the SQL oracle: arithmetic on (x, y, channel, seed) that
-    makes pixel sums, corners and orientation all oracle-predictable."""
-    return (x + 7 * y + 11 * c + seed) % 256
-
-
 def _pattern_rgb_array(width: int, height: int, seed: int):
-    """(h, w, 3) uint8 array of ``_pattern_px`` via numpy broadcasting —
-    the vectorized form of the shared pattern formula (per-pixel Python
-    loops were the writers' hot path in the bench)."""
+    """(h, w, 3) uint8 array of the shared test-pixel pattern
+    ``(x + 7*y + 11*c + seed) % 256`` via numpy broadcasting. The SQL
+    oracle replays the same formula, so pixel sums, corners and
+    orientation are all oracle-predictable."""
     import numpy as np
 
     x = np.arange(width, dtype=np.int32)[None, :, None]
@@ -1844,8 +1649,8 @@ def encode_test_image_patterned(
     fmt: str, width: int, height: int, seed: int
 ) -> bytes:
     """Patterned RGB writer for the pixel-decode round-trip: same
-    containers as ``encode_test_image`` but with ``_pattern_px`` pixel
-    data instead of zero filler. The PNG variant cycles the row filter
+    containers as ``encode_test_image`` but with ``_pattern_rgb_array``
+    pixel data instead of zero filler. The PNG variant cycles the row filter
     type through 0-4 (y % 5) so the oracled query exercises EVERY
     unfilter path, not just the trivial one; writers apply the forward
     filter transforms independently of the decoder's reverse ones
@@ -2013,91 +1818,14 @@ def decode_image_pixel_stats(media: DataFrame) -> DataFrame:
     )
 
 
-TAGS_SCHEMA = (
-    "doc_id long, title string, artist string, album string, "
-    "language string, year string"
-)
-
-
-def decode_audio_tags(media: DataFrame) -> DataFrame:
-    """Arrow-batched ID3v2 tag stage — the audio twin of
-    ``decode_image_exif``: title/artist/album/language/year text
-    frames from the tag prefixing scraped MP3s. NULL row when no tag."""
-    from .audio_headers import parse_id3_tags
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [
-                _parse_or_none(
-                    parse_id3_tags, bytes(p) if p is not None else b""
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    **{
-                        col: [t.get(col) if t else None for t in parsed]
-                        for col in ("title", "artist", "album", "language", "year")
-                    },
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, schema=TAGS_SCHEMA
-    )
-
-
-EXIF_SCHEMA = (
-    "doc_id long, orientation int, make string, model string, "
-    "taken_at string"
-)
-
-
-def decode_image_exif(media: DataFrame) -> DataFrame:
-    """Arrow-batched EXIF stage: JPEG APP1 TIFF walk for the curation
-    tags (orientation 1-8 — the rotate/flip normalization key — camera
-    make/model, capture datetime). NULL row when the payload has no
-    EXIF segment or isn't a JPEG; orientation-aware dedup pipelines
-    filter on this BEFORE paying pixel decode + rotation."""
-    from .jpegcodec import parse_jpeg_exif
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [
-                parse_jpeg_exif(bytes(p) if p is not None else b"")
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orientation": pd.array(
-                        [t.get("orientation") if t else None for t in parsed],
-                        dtype="Int32",
-                    ),
-                    "make": [t.get("make") if t else None for t in parsed],
-                    "model": [t.get("model") if t else None for t in parsed],
-                    "taken_at": [
-                        t.get("datetime") if t else None for t in parsed
-                    ],
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, schema=EXIF_SCHEMA
-    )
-
-
 def synthesize_test_media_patterned(
     ids: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Patterned-pixel writer half of the pixel round-trip: rotates
-    png/bmp/ppm/gif/tiff/webp on the id (the round-8 widening adds the
-    two lossless codecs shipped since r6 — TIFF strips and VP8L — per
-    VERDICT r7 #4) with dimensions and pattern seed by fixed arithmetic
-    the oracle replays. The GIF palette is constructed so
-    pal[(x+7y+seed)%256][c] == _pattern_px(x,y,c,seed) — one pattern
-    formula covers all six containers, LZW/VP8L and all."""
+    png/bmp/ppm/gif/tiff/webp on the id with dimensions and pattern seed
+    by fixed arithmetic the oracle replays. The GIF palette is
+    constructed so pal[(x+7y+seed)%256][c] == (x+7y+11c+seed)%256 — one
+    pattern formula covers all six containers, LZW/VP8L and all."""
     fmts = ("png", "bmp", "ppm", "gif", "tiff", "webp")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2289,273 +2017,3 @@ def encode_test_gif(width: int, height: int, seed: int) -> bytes:
         b"GIF89a" + lsd + bytes(pal) + idesc + b"\x08" + bytes(blocks)
         + b"\x00" + b"\x3b"
     )
-
-
-# ---------------------------------------------------------------------------
-# Feature extraction & resize — the remaining verbs of the multimodal
-# mandate (decode / feature-extract / resize / frame-sample), now running
-# on REAL decoded pixels/samples instead of payload hashes.
-# ---------------------------------------------------------------------------
-
-
-def resize_nearest(
-    pixels: bytes, w: int, h: int, ch: int, new_w: int, new_h: int
-) -> bytes:
-    """Nearest-neighbor resample of a row-major interleaved pixel
-    buffer. src index = floor(dst * src_dim / dst_dim) — the standard
-    half-open mapping, exactly reproducible in SQL (integer division),
-    which is what makes a resize stage oracle-able."""
-    if new_w <= 0 or new_h <= 0:
-        raise ValueError("resize target must be positive")
-    out = bytearray()
-    for y in range(new_h):
-        sy = y * h // new_h
-        row = sy * w * ch
-        for x in range(new_w):
-            sx = x * w // new_w
-            out += pixels[row + sx * ch : row + (sx + 1) * ch]
-    return bytes(out)
-
-
-def image_features(
-    pixels: bytes, w: int, h: int, ch: int
-) -> tuple[float, float, int, int]:
-    """Curation-grade pixel statistics: mean brightness, contrast
-    (population std of the byte stream), min, max. Cheap signals a
-    filter pass runs BEFORE any model sees the image (all-black /
-    all-white / low-contrast screening)."""
-    n = len(pixels)
-    if n == 0:
-        return 0.0, 0.0, 0, 0
-    s = sum(pixels)
-    mean = s / n
-    var = sum((b - mean) ** 2 for b in pixels) / n
-    return mean, var**0.5, min(pixels), max(pixels)
-
-
-def audio_features(
-    samples: list[int], channels: int, rate: int, bits: int
-) -> tuple[float, float, int]:
-    """PCM statistics: duration seconds, RMS amplitude (normalized to
-    full scale), peak absolute sample — the clipping / silence
-    screening signals."""
-    if not samples or channels <= 0 or rate <= 0:
-        return 0.0, 0.0, 0
-    n_frames = len(samples) // channels
-    full = float((1 << (bits - 1)) if bits == 16 else 128)
-    if bits == 8:  # unsigned: center first
-        centered = [s - 128 for s in samples]
-    else:
-        centered = samples
-    rms = (sum(s * s for s in centered) / len(centered)) ** 0.5 / full
-    return n_frames / rate, rms, max(abs(s) for s in centered)
-
-
-IMAGE_FEATURES_SCHEMA = (
-    "doc_id long, fmt string, width int, height int, channels int, "
-    "brightness double, contrast double, px_min int, px_max int"
-)
-
-
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode→feature stage: real pixel decode feeding
-    ``image_features``; NULL row for undecodable payloads. numpy
-    vectorizes the per-image math (the Python loop is per image, not
-    per pixel)."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                t = decode_image_pixels(
-                    bytes(payload) if payload is not None else b""
-                )
-                if t is None:
-                    rows.append((doc_id, None, None, None, None, None, None, None, None))
-                    continue
-                fmt, w, h, ch, px = t
-                arr = np.frombuffer(px, dtype=np.uint8)
-                rows.append(
-                    (
-                        doc_id, fmt, w, h, ch,
-                        float(arr.mean()) if arr.size else 0.0,
-                        float(arr.std()) if arr.size else 0.0,
-                        int(arr.min()) if arr.size else 0,
-                        int(arr.max()) if arr.size else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "channels",
-                    "brightness", "contrast", "px_min", "px_max",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32", "channels": "Int32",
-                    "px_min": "Int32", "px_max": "Int32",
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
-RESIZED_SCHEMA = (
-    "doc_id long, fmt string, width int, height int, "
-    "n_values long, pixel_sum long, first_px int, last_px int"
-)
-
-
-def resize_image_stats(media: DataFrame, new_w: int, new_h: int) -> DataFrame:
-    """decode → nearest-neighbor resize → integer stats, one Arrow
-    stage. The thumbnail pass of a vision-data pipeline: every image
-    lands at (new_w, new_h) regardless of source dims; stats instead of
-    raw bytes keep the stage oracle-able and the shuffle tiny."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                t = decode_image_pixels(
-                    bytes(payload) if payload is not None else b""
-                )
-                if t is None:
-                    rows.append((doc_id, None, None, None, None, None, None, None))
-                    continue
-                fmt, w, h, ch, px = t
-                rz = resize_nearest(px, w, h, ch, new_w, new_h)
-                rows.append(
-                    (
-                        doc_id, fmt, new_w, new_h,
-                        len(rz), sum(rz), rz[0], rz[-1],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height",
-                    "n_values", "pixel_sum", "first_px", "last_px",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "n_values": "Int64", "pixel_sum": "Int64",
-                    "first_px": "Int32", "last_px": "Int32",
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
-PCM_STATS_SCHEMA = (
-    "doc_id long, channels int, sample_rate int, bits int, "
-    "n_samples long, sample_sum long, sample_min int, sample_max int, "
-    "duration_ms long"
-)
-
-
-def decode_audio_samples(
-    payload: bytes,
-) -> tuple[int, int, int, list[int]] | None:
-    """Container dispatch for SAMPLE decode: WAV PCM here; FLAC
-    (lossless rice/LPC decode, ``operators/flaccodec.py``), AIFF and
-    Sun .au PCM (``operators/audio_headers.py``) by magic.
-    Returns ``(channels, sample_rate, bits, samples)`` interleaved, or
-    None for lossy codecs (MP3/...) and malformed payloads."""
-    if payload[:4] == b"fLaC":
-        from .flaccodec import decode_flac_samples
-
-        return decode_flac_samples(payload)
-    if payload[:4] == b"FORM":
-        from .audio_headers import decode_aiff_samples
-
-        return _parse_or_none(decode_aiff_samples, payload)
-    if payload[:4] == b".snd":
-        from .audio_headers import decode_au_samples
-
-        return _parse_or_none(decode_au_samples, payload)
-    return decode_wav_samples(payload)
-
-
-def decode_audio_pcm_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched SAMPLE decode stage — the audio twin of
-    ``decode_image_pixel_stats``: integer statistics over the decoded
-    sample stream (sum / min / max pin the actual waveform bytes, not
-    just the header), duration in integer milliseconds. Decodes WAV
-    PCM and FLAC (lossless — identical stats for identical audio);
-    NULL row for lossy/malformed payloads."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                t = decode_audio_samples(
-                    bytes(payload) if payload is not None else b""
-                )
-                if t is None:
-                    rows.append((doc_id,) + (None,) * 8)
-                    continue
-                ch, rate, bits, samples = t
-                n_frames = len(samples) // ch if ch else 0
-                rows.append(
-                    (
-                        doc_id, ch, rate, bits, len(samples),
-                        sum(samples),
-                        min(samples) if samples else None,
-                        max(samples) if samples else None,
-                        (n_frames * 1000) // rate if rate else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channels", "sample_rate", "bits",
-                    "n_samples", "sample_sum", "sample_min", "sample_max",
-                    "duration_ms",
-                ],
-            ).astype(
-                {
-                    "channels": "Int32", "sample_rate": "Int32",
-                    "bits": "Int32", "n_samples": "Int64",
-                    "sample_sum": "Int64", "sample_min": "Int32",
-                    "sample_max": "Int32", "duration_ms": "Int64",
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, schema=PCM_STATS_SCHEMA
-    )
-
-
-def encode_test_wav_patterned(
-    channels: int, sample_rate: int, bits: int, n_frames: int, seed: int
-) -> bytes:
-    """Patterned PCM writer: sample for frame f, channel c is
-    ``((f * 13 + c * 5 + seed) % 97) - 48`` (16-bit signed) or the same
-    shifted to 80..176 (8-bit unsigned) — closed-form arithmetic an
-    oracle replays without touching bytes."""
-    vals = [
-        ((f * 13 + c * 5 + seed) % 97) - 48
-        for f in range(n_frames)
-        for c in range(channels)
-    ]
-    if bits == 16:
-        data = struct.pack(f"<{len(vals)}h", *vals)
-    elif bits == 8:
-        data = bytes(v + 128 for v in vals)
-    else:
-        raise ValueError("patterned writer supports 8/16-bit PCM")
-    block = channels * (bits // 8)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * block, block, bits
-    )
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks

@@ -510,13 +510,13 @@ def context_injection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle-handoff tokens: resolve_oracles() substitutes the corpus-keyed
-# literal path per sf_dir; the query writes the same path via
-# oracle_artifact_path — no global shared file (round-3 caveat retired).
+# literal path per sf_dir; the query reads and writes the same path via
+# oracle_artifact_path, and that file is the trained-artifact cache.
 _IVF_CENTROIDS = "__IVF_CENTROIDS__"
 _IVF_K, _IVF_SEED = 8, 42
-# parameter-bearing cache tags (round 5): bumping k/seed re-keys both
-# the handoff artifact and the private index caches — a stale artifact
-# trained under the old constants can never be read back silently
+# parameter-bearing cache tags: bumping k/seed re-keys both the handoff
+# artifact and the private index cache — a stale artifact trained under
+# the old constants can never be read back silently
 tag_artifact(_IVF_CENTROIDS, f"k{_IVF_K}s{_IVF_SEED}")
 
 @query(
@@ -565,24 +565,23 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in with a real learned clustering; cluster_id becomes the
     partition column at scale so the probe is partition pruning.
 
-    FULLY ORACLED (round 3; was the last `no_oracle` driver row): the
-    query persists the seeded centroid table to parquet — the stored
-    half of a real IVF index — and assignment is a rounded-argmin
-    EXPRESSION over that table (operators/ann.assign_clusters), not
-    KMeansModel.transform, so DuckDB replays normalize → assign →
-    probe-selection → exact top-5 bit-for-bit from the same artifact.
-    KMeans training itself (the part SQL cannot replay) only produces
-    the centroid table the oracle consumes — and since it is seeded and
-    deterministic per corpus, the trained centroids are CACHED keyed on
-    the embeddings file identity (the signature-table pattern): warm
-    runs skip spark.ml entirely and pay only assignment + probe. Recall
+    FULLY ORACLED: the query persists the seeded centroid table to
+    parquet (the oracle-handoff file) — the stored half of a real IVF
+    index — and assignment is a rounded-argmin EXPRESSION over that
+    table (operators/ann.assign_clusters), not KMeansModel.transform,
+    so DuckDB replays normalize → assign → probe-selection → exact
+    top-5 bit-for-bit from the same artifact. KMeans training itself
+    (the part SQL cannot replay) only produces the centroid table the
+    oracle consumes — and since it is seeded and deterministic per
+    corpus, that handoff file doubles as the cache, keyed on the
+    embeddings file identity: warm runs skip spark.ml entirely and pay
+    only assignment + probe. Recall
     properties stay pinned in tests/test_ann.py (nprobe=k ⇒ recall 1.0;
     monotone)."""
-    from ..operators.ann import persist_centroids, probe_ivf
+    from ..operators.ann import probe_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
-    persist_centroids(centroids, oracle_artifact_path(_IVF_CENTROIDS, sf_dir))
     qv = [float(x) for x in indexed.filter("id = 2").select("nv").head()[0]]
     return probe_ivf(indexed, centroids, qv, nprobe=2, topk=5)
 
@@ -596,7 +595,9 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     parquet, so the ``cluster_id isin(probes)`` filter is ON-DISK
     partition pruning (PartitionFilters in the scan, PLANS.md), not an
     in-memory filter over a recomputed assignment: warm calls skip
-    spark.ml AND the assignment pass entirely."""
+    spark.ml AND the assignment pass entirely. The centroid table IS the
+    oracle-handoff file (the PCA/BPE pattern): the oracle replays from
+    exactly the centroids the index was assigned with."""
     import os
 
     import pyarrow.parquet as pq
@@ -604,15 +605,9 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     from ..operators.ann import build_ivf_index, persist_centroids
     from ..operators.artifacts import corpus_cache_path
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    cent_path = corpus_cache_path(
-        src,
-        f"ivf_k{_IVF_K}_s{_IVF_SEED}_v1",
-        "/tmp/spark_graft_artifacts/ivf_centroid_cache",
-        ext=".parquet",
-    )
+    cent_path = oracle_artifact_path(_IVF_CENTROIDS, sf_dir)
     idx_path = corpus_cache_path(
-        src,
+        os.path.join(sf_dir, "embeddings.parquet"),
         f"ivf_idx_k{_IVF_K}_s{_IVF_SEED}_v1",
         "/tmp/spark_graft_artifacts/ivf_index",
     )
@@ -707,7 +702,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    _persist_pq_codebooks(books, oracle_artifact_path(_PQ_CODEBOOKS, sf_dir))
     qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
     codes = pq_encode_np(normed, books)
     return pq_adc_topk(codes, books, qv, topk=5)
@@ -741,21 +735,16 @@ def _persist_pq_codebooks(books: list[list[list[float]]], path: str) -> None:
 def _pq_codebooks_cached(
     spark: SparkSession, sf_dir: str, normed: DataFrame
 ) -> list[list[list[float]]]:
-    """Per-corpus codebook cache — the _ivf_index_cached pattern."""
+    """Per-corpus codebook cache: the oracle-handoff file IS the cache
+    (the PCA/BPE pattern), so the oracle replays from exactly the
+    codebooks the query encoded with."""
     import os
 
     import pyarrow.parquet as pq
 
     from ..operators.ann import build_pq_codebooks
-    from ..operators.artifacts import corpus_cache_path
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    path = corpus_cache_path(
-        src,
-        f"pq_m{_PQ_M}_k{_PQ_KSUB}_s{_PQ_SEED}_v1",
-        "/tmp/spark_graft_artifacts/pq_codebook_cache",
-        ext=".parquet",
-    )
+    path = oracle_artifact_path(_PQ_CODEBOOKS, sf_dir)
     if os.path.exists(path):
         tbl = pq.read_table(path).to_pydict()
         books: dict[int, dict[int, list[float]]] = {}
@@ -831,7 +820,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist). Real embedding manifolds have low intrinsic dimension
     and quantize far better; the gate exists precisely to measure that
     on the corpus at hand before trusting the codes table. The
-    favorable regime is PINNED too (round 4): on a seeded 50-Gaussian
+    favorable regime is PINNED too: on a seeded 50-Gaussian
     mixture (tools/make_clustered_emb.py) this same query reads
     recall@10 = 1.0, and at 10x corpus (100 members/cluster) the ADC
     shortlist@100 + exact-rerank recipe reads 1.0 while direct
@@ -845,7 +834,6 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    _persist_pq_codebooks(books, oracle_artifact_path(_PQ_CODEBOOKS, sf_dir))
     qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
     qlit = F.array(*[F.lit(float(x)) for x in qv])
     exact = (
@@ -942,12 +930,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULLY ORACLED by composing the two component oracles: DuckDB
     replays coarse assignment → probe selection → per-subspace encode →
     LUT → ADC top-5 from the same two parquet artifacts."""
-    from ..operators.ann import (
-        persist_centroids,
-        pq_adc_topk,
-        pq_encode_np,
-        select_probes,
-    )
+    from ..operators.ann import pq_adc_topk, pq_encode_np, select_probes
 
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
@@ -956,8 +939,6 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    persist_centroids(centroids, oracle_artifact_path(_IVF_CENTROIDS, sf_dir))
-    _persist_pq_codebooks(books, oracle_artifact_path(_PQ_CODEBOOKS, sf_dir))
     qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
     probe = select_probes(centroids, qv, nprobe=2)
     cand = indexed.filter(F.col("cluster_id").isin(probe)).select("id", "nv")
@@ -1036,7 +1017,6 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    _persist_pq_codebooks(books, oracle_artifact_path(_PQ_CODEBOOKS, sf_dir))
     qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
     qlit = F.array(*[F.lit(float(x)) for x in qv])
     short = pq_adc_topk(pq_encode_np(normed, books), books, qv, topk=50).select("id")

@@ -169,17 +169,6 @@ def read_parquet_documents(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def pdf_decode_stub(payload: bytes) -> str:
-    """S9 pypdf entry point (reference reader.py:310-333 extracts page
-    text via pypdf). pypdf is absent in this container, so this name
-    remains the honest stub for the pypdf-backed path; the DEFAULT
-    decoder is now the real zero-dependency ``pdf_extract_text`` below
-    (round 6 — S9 graduates from seam-only to a working decoder)."""
-    raise NotImplementedError(
-        "pypdf not installed; read_pdf defaults to pdf_extract_text"
-    )
-
-
 # dict (non-greedy) immediately followed by the `stream` keyword; PDF
 # allows CR, LF or CRLF after it. Body delimiting happens in
 # _iter_pdf_streams: the dict's direct /Length wins (a compressed body

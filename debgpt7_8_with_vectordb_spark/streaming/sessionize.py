@@ -137,23 +137,6 @@ def windowed_counts_stream(
     )
 
 
-def run_to_memory_sink(
-    sessions: DataFrame, query_name: str = "sessions", await_termination: bool = True
-):
-    """Drain all available input (availableNow) into an in-memory table —
-    the test harness path; production uses a Delta/parquet sink."""
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
-
-
 def incremental_index_build(
     events: DataFrame,
     embed_batch: Callable[[DataFrame], DataFrame],

@@ -3,102 +3,21 @@
 `session_window` covers gap sessionization declaratively
 (streaming/sessionize.py); this module is the CUSTOM-state mechanism for
 semantics Spark's built-ins can't express (SURVEY §2.13): here, a
-per-conversation running profile (event count, value sum, last-seen
-timestamp) maintained incrementally across micro-batches — the streaming
-twin of the reference's per-conversation bookkeeping (its `messages`
-table + append hooks, frontend.py:200-221), kept up to date as events
-arrive instead of recomputed per query.
+per-user ordered funnel maintained incrementally across micro-batches.
 
 State discipline at 100 TB/day:
-- state is ONE small row per conversation (three numbers), not events;
-- a processing-time timeout expires conversations idle for 1 h — the
+- state is a pruned candidate frontier per user, not event history;
+- a processing-time timeout expires users idle for 1 h — the
   watermark-equivalent bound that keeps the store finite;
-- expired profiles are EMITTED (flagged final) before removal, so the
-  downstream sink sees every conversation exactly once after it quiets.
+- expired users are EMITTED (flagged final) before removal, so the
+  downstream sink sees every user exactly once after it quiets.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = (
-    "user_id long, n_events long, total_value double, last_ts timestamp, final boolean"
-)
-STATE_SCHEMA = "n long, total double, last_ts_us long"
-
-
-def _make_update_profile(idle_timeout_ms: int | None):
-    def update_profile(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            n, total, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                    "final": [True],
-                }
-            )
-            return
-
-        n, total, last_us = state.get if state.exists else (0, 0.0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        state.update((n, total, last_us))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-                "final": [False],
-            }
-        )
-
-    return update_profile
-
-
-def running_profiles(
-    events: DataFrame, idle_timeout_ms: int | None = 3600 * 1000
-) -> DataFrame:
-    """events(user_id, ts, value, ...) stream → incremental per-user
-    profile updates (one row per user per micro-batch, plus a final row
-    when the idle timeout evicts the state).
-
-    ``idle_timeout_ms=None`` disables eviction — REQUIRED for
-    drain-style runs (``trigger(availableNow=True)``): with a
-    processing-time timeout registered, the micro-batch loop keeps
-    running empty batches until every timeout fires, so an availableNow
-    query never terminates. Continuous deployments keep the timeout so
-    idle conversations are finalized and evicted (bounded state)."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return events.groupBy("user_id").applyInPandasWithState(
-        _make_update_profile(idle_timeout_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
-    )
-
 
 FUNNEL_OUTPUT_SCHEMA = "user_id long, stage long, final boolean"
 FUNNEL_STATE_SCHEMA = "min_signup long, clicks array<long>, purchases array<long>"
@@ -184,8 +103,11 @@ def funnel_states(
     current t3 (each min is non-increasing, so candidates above it are
     dead) — bounded by pre-conversion activity, not event history.
 
-    ``idle_timeout_ms=None`` for drain-style runs (availableNow; see
-    running_profiles); continuous deployments keep the timeout so
+    ``idle_timeout_ms=None`` disables eviction — REQUIRED for
+    drain-style runs (``trigger(availableNow=True)``): with a
+    processing-time timeout registered, the micro-batch loop keeps
+    running empty batches until every timeout fires, so an availableNow
+    query never terminates. Continuous deployments keep the timeout so
     converted/quiet users are emitted final and evicted."""
     timeout = (
         GroupStateTimeout.NoTimeout

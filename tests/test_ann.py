@@ -2,13 +2,37 @@
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
+from debgpt7_8_with_vectordb_spark.functions.vector import cosine_similarity
 from debgpt7_8_with_vectordb_spark.operators.ann import (
     build_ivf_index,
     probe_ivf,
-    recall_at_k,
 )
+
+
+def recall_at_k(
+    indexed: DataFrame,
+    centroids: list[list[float]],
+    query_vec: list[float],
+    nprobe: int,
+    k: int = 10,
+) -> float:
+    """recall@k of the IVF probe vs exact scoring over the same rows."""
+    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    exact = {
+        r["id"]
+        for r in indexed.select(
+            "id", F.round(cosine_similarity(F.col("nv"), qlit), 6).alias("score")
+        )
+        .orderBy(F.desc("score"), F.asc("id"))
+        .limit(k)
+        .collect()
+    }
+    approx = {r["id"] for r in probe_ivf(indexed, centroids, query_vec, nprobe, k).collect()}
+    return len(exact & approx) / float(k)
 
 
 @pytest.fixture(scope="module")

@@ -12,8 +12,6 @@ import pytest
 
 from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
     encode_test_flac,
-    encode_test_mp3,
-    encode_test_ogg,
     parse_audio_header,
     parse_flac_header,
     parse_mp3_header,
@@ -23,6 +21,7 @@ from debgpt7_8_with_vectordb_spark.operators.multimodal import (
     decode_audio_metadata,
     encode_test_wav,
 )
+from tests.media_fixtures import encode_test_mp3, encode_test_ogg
 
 
 def test_mp3_cbr_roundtrip_mpeg1():
@@ -145,71 +144,11 @@ def test_spark_stage_mixed_corpus(spark):
     assert rows[6]["fmt"] is None and rows[7]["fmt"] is None
 
 
-# ---------------------------------------------------------- ID3v2 tags
-
-
-def test_id3_tags_roundtrip_all_encodings():
-    from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
-        build_test_id3,
-        parse_id3_tags,
-    )
-
-    fields = {
-        "title": "Grand Chanson",
-        "artist": "Ünïcødé Ârtist",
-        "album": "日本語アルバム",
-        "language": "fra",
-        "year": "2023",
-    }
-    for ver in (3, 4):
-        tag = build_test_id3(version=ver, **fields)
-        raw = encode_test_mp3(2, 44100, 3, id3=tag)
-        assert parse_id3_tags(raw) == fields, ver
-        # the frame walk must not break the audio frame walk
-        assert parse_mp3_header(raw) == ("mp3", 2, 44100, None, 3 * 1152)
-
-
-def test_id3_tags_absent_or_malformed():
-    from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
-        build_test_id3,
-        parse_id3_tags,
-    )
-
-    assert parse_id3_tags(encode_test_mp3(2, 44100, 2)) is None
-    assert parse_id3_tags(b"") is None
-    assert parse_id3_tags(b"ID3\x04\x00\x00\x00\x00\x00") is None  # short
-    tag = bytearray(build_test_id3(title="x"))
-    tag[6] |= 0x80  # non-syncsafe size byte: corrupt
-    assert parse_id3_tags(bytes(tag)) is None
-
-
-def test_audio_tags_spark_stage(spark):
-    from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
-        build_test_id3,
-    )
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        decode_audio_tags,
-    )
-
-    tagged = encode_test_mp3(
-        2, 44100, 2, id3=build_test_id3(title="T", language="deu")
-    )
-    df = spark.createDataFrame(
-        [(1, tagged), (2, encode_test_mp3(1, 22050, 2)), (3, None)],
-        "doc_id long, payload binary",
-    )
-    rows = {r["doc_id"]: r for r in decode_audio_tags(df).collect()}
-    assert rows[1]["title"] == "T" and rows[1]["language"] == "deu"
-    assert rows[1]["artist"] is None
-    assert rows[2]["title"] is None and rows[3]["title"] is None
-
-
 # ------------------------------------------------------- AIFF / AU
 
 
 def test_aiff_roundtrip_and_f80_rate():
     from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
-        decode_aiff_samples,
         encode_test_aiff,
         parse_aiff_header,
     )
@@ -217,18 +156,12 @@ def test_aiff_roundtrip_and_f80_rate():
     samples = [i * 7 % 251 - 125 for i in range(400)]
     raw = encode_test_aiff(2, 44100, 16, samples)
     assert parse_aiff_header(raw) == ("aiff", 2, 44100, 16, 400)
-    assert decode_aiff_samples(raw) == (2, 44100, 16, samples)
-    # 8-bit AIFF is SIGNED
-    s8 = [(i % 255) - 127 for i in range(100)]
-    raw8 = encode_test_aiff(1, 8000, 8, s8)
-    assert decode_aiff_samples(raw8) == (1, 8000, 8, s8)
     assert parse_aiff_header(raw[:20]) is None
     assert parse_aiff_header(b"FORMxxxxWAVE") is None
 
 
 def test_au_roundtrip_and_edge():
     from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
-        decode_au_samples,
         encode_test_au,
         parse_au_header,
     )
@@ -236,16 +169,14 @@ def test_au_roundtrip_and_edge():
     samples = [i * 13 % 1999 - 999 for i in range(300)]
     raw = encode_test_au(2, 16000, 16, samples)
     assert parse_au_header(raw) == ("au", 2, 16000, 16, 300)
-    assert decode_au_samples(raw) == (2, 16000, 16, samples)
     # unknown-size convention (0xFFFFFFFF)
     import struct as _s
 
     unk = raw[:8] + _s.pack(">I", 0xFFFFFFFF) + raw[12:]
-    assert decode_au_samples(unk) == (2, 16000, 16, samples)
+    assert parse_au_header(unk) == ("au", 2, 16000, 16, 300)
     # mu-law (encoding 1): metadata real, bits/samples None
     mulaw = raw[:12] + _s.pack(">I", 1) + raw[16:]
     assert parse_au_header(mulaw) == ("au", 2, 16000, None, None)
-    assert decode_au_samples(mulaw) is None
     assert parse_au_header(b".sndshort") is None
 
 
@@ -254,15 +185,8 @@ def test_aiff_au_through_stage_dispatch(spark):
         encode_test_aiff,
         encode_test_au,
     )
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        decode_audio_metadata,
-        decode_audio_samples,
-    )
-
     aiff = encode_test_aiff(1, 22050, 16, list(range(-50, 50)))
     au = encode_test_au(1, 8000, 8, [0, 1, -1, 127, -128])
-    assert decode_audio_samples(aiff)[3] == list(range(-50, 50))
-    assert decode_audio_samples(au)[3] == [0, 1, -1, 127, -128]
     df = spark.createDataFrame(
         [(1, aiff), (2, au)], "doc_id long, payload binary"
     )

@@ -7,8 +7,12 @@ carries every r1-anchor query, and small catalogs pass through whole.
 """
 
 import json
+import sys
 
 import bench
+
+sys.path.insert(0, "tools")
+from calib_probe import _parse_nprobes  # noqa: E402
 
 
 def _payload(times):
@@ -290,3 +294,58 @@ def test_budget_measured_in_bytes_not_chars():
     assert len(line.encode()) <= bench._STDOUT_BUDGET or json.loads(
         line
     )["queries"].keys() == {n for n in bench._R1_ANCHOR}
+
+
+# ---------------------------------------------------------------- calib_probe argv
+
+
+def test_calib_probe_argv_parse(capsys):
+    assert _parse_nprobes(["calib_probe.py"]) == 3
+    assert _parse_nprobes(["calib_probe.py", "7"]) == 7
+    assert _parse_nprobes(["calib_probe.py", "0"]) == 1
+    # non-numeric: default + usage note, no ValueError
+    assert _parse_nprobes(["calib_probe.py", "fast"]) == 3
+    err = capsys.readouterr().err
+    assert "usage" in err and "'fast'" in err
+
+
+# ---------------------------------------------------------------- budget overflow warning
+
+
+def test_budgeted_line_warns_when_floor_exceeds_budget(capsys):
+    # a future payload key large enough that the anchor floor + drained
+    # breach lists can never fit: the overflow must be VISIBLE
+    times = {n: 1.0 for n in bench._R1_ANCHOR}
+    payload = {
+        "metric": "headline_queries_total_wall",
+        "value": 1.0,
+        "unit": "sec",
+        "queries": times,
+        "sf": 0.1,
+        "breaches_raw": ["x:9.99"] * 3,
+        "breaches_calib": ["x:9.99"] * 3,
+        "future_giant_key": "y" * (bench._STDOUT_BUDGET + 100),
+    }
+    line = bench._budgeted_line(payload)
+    err = capsys.readouterr().err
+    assert "exceeds" in err and str(bench._STDOUT_BUDGET) in err
+    # the line itself is still valid JSON with the anchors intact
+    parsed = json.loads(line)
+    assert set(bench._R1_ANCHOR) <= set(parsed["queries"])
+    # breach lists were drained before the warning fired, with true
+    # counts preserved
+    assert parsed["breaches_raw"] == [] and parsed["breaches_raw_n"] == 3
+
+
+def test_budgeted_line_quiet_when_fits(capsys):
+    line = bench._budgeted_line(
+        {
+            "metric": "headline_queries_total_wall",
+            "value": 1.0,
+            "unit": "sec",
+            "queries": {"a": 1.0},
+            "sf": 0.1,
+        }
+    )
+    assert json.loads(line)["queries"] == {"a": 1.0}
+    assert capsys.readouterr().err == ""

@@ -1,15 +1,13 @@
-"""Boilerplate removal (functions/boilerplate.py): block signals,
-jusText-style classification + neighborhood rule, and the Spark stage
-with its monitor columns."""
+"""Boilerplate removal (functions/boilerplate.py): block signals and
+jusText-style classification + neighborhood rule. The Spark stage with
+its monitor columns runs inside the crawl pipeline
+(tests/test_crawl_pipeline.py)."""
 
 from __future__ import annotations
-
-import pytest
 
 from debgpt7_8_with_vectordb_spark.functions.boilerplate import (
     classify_blocks,
     extract_blocks,
-    extract_main_content,
     extract_main_text,
 )
 
@@ -72,22 +70,3 @@ def test_classifier_link_density():
 def test_truncated_html_is_tolerated():
     text, kept, total = extract_main_text(PAGE[: len(PAGE) // 2])
     assert "Sentence number 0" in text
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from debgpt7_8_with_vectordb_spark.session import get_spark
-
-    return get_spark(shuffle_partitions=4)
-
-
-def test_spark_stage_and_monitor_columns(spark):
-    df = spark.createDataFrame(
-        [(1, PAGE), (2, "<nav><a href='/'>only chrome</a></nav>"), (3, None)],
-        "doc_id long, html string",
-    )
-    rows = {r["doc_id"]: r for r in extract_main_content(df).collect()}
-    assert "Sentence number 0" in rows[1]["main_text"]
-    assert 0.0 < rows[1]["boilerplate_ratio"] < 1.0
-    assert rows[2]["main_text"] == "" and rows[2]["boilerplate_ratio"] == 1.0
-    assert rows[3]["main_text"] is None and rows[3]["blocks_total"] is None

@@ -5,7 +5,6 @@ random bytes (the 100 TB malformed-media contract)."""
 
 from __future__ import annotations
 
-import struct
 import zlib
 
 from hypothesis import given, settings
@@ -14,10 +13,8 @@ from hypothesis import strategies as st
 from debgpt7_8_with_vectordb_spark.operators.multimodal import (
     _lzw_decode,
     decode_image_pixels,
-    decode_wav_samples,
     encode_test_gif,
     encode_test_image_patterned,
-    resize_nearest,
 )
 from debgpt7_8_with_vectordb_spark.sources.readers import (
     _pdf_lzw_decode,
@@ -127,8 +124,6 @@ def test_pixel_and_wav_decode_never_raise(blob):
         payload = prefix + blob
         r = decode_image_pixels(payload)
         assert r is None or isinstance(r, tuple)
-        r = decode_wav_samples(payload)
-        assert r is None or isinstance(r, tuple)
 
 
 @settings(max_examples=40, deadline=None)
@@ -150,53 +145,7 @@ def test_pdf_lzw_never_crashes(data):
     assert out is None or isinstance(out, bytes)
 
 
-# -- resize: structural invariants ----------------------------------------
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.integers(1, 16), st.integers(1, 16), st.integers(1, 3),
-    st.integers(1, 16), st.integers(1, 16), st.randoms(use_true_random=False),
-)
-def test_resize_invariants(w, h, ch, nw, nh, rng):
-    px = bytes(rng.randrange(256) for _ in range(w * h * ch))
-    out = resize_nearest(px, w, h, ch, nw, nh)
-    assert len(out) == nw * nh * ch
-    # corner preservation: dst (0,0) is src (0,0)
-    assert out[:ch] == px[:ch]
-    # identity resize is exact
-    assert resize_nearest(px, w, h, ch, w, h) == px
-
-
 # ------------------------------------------ round-7 session-2 codecs
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    samples=st.lists(
-        st.integers(min_value=-(2**15), max_value=2**15 - 1),
-        min_size=1, max_size=600,
-    ),
-    channels=st.sampled_from([1, 2]),
-    blocksize=st.sampled_from([16, 100, 256]),
-    strategy=st.sampled_from(["fixed", "verbatim", "lpc1"]),
-)
-def test_flac_roundtrip_property(samples, channels, blocksize, strategy):
-    """FLAC is lossless: ANY 16-bit signal round-trips exactly through
-    any subframe strategy and blocking."""
-    from debgpt7_8_with_vectordb_spark.operators.flaccodec import (
-        decode_flac_samples,
-        encode_test_flac_stream,
-    )
-
-    if channels == 2 and len(samples) % 2:
-        samples = samples[:-1]
-    if not samples:
-        samples = [0, 0]
-    raw = encode_test_flac_stream(
-        channels, 8000, 16, samples, blocksize=blocksize, strategy=strategy
-    )
-    assert decode_flac_samples(raw) == (channels, 8000, 16, samples)
 
 
 @settings(max_examples=30, deadline=None)
@@ -216,6 +165,8 @@ def test_jpeg_decode_total_property(w, h, seed, quality, subsample, progressive)
 
     from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
         decode_jpeg_pixels,
+    )
+    from tests.media_fixtures import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
@@ -243,14 +194,9 @@ def test_session2_parsers_never_raise(blob):
     """Totality across the session-2 parsers on arbitrary bytes."""
     from debgpt7_8_with_vectordb_spark.operators.audio_headers import (
         parse_audio_header,
-        parse_id3_tags,
-    )
-    from debgpt7_8_with_vectordb_spark.operators.flaccodec import (
-        decode_flac_samples,
     )
     from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
         decode_jpeg_pixels,
-        parse_jpeg_exif,
         parse_jpeg_header,
     )
     from debgpt7_8_with_vectordb_spark.sources.readers import (
@@ -258,8 +204,7 @@ def test_session2_parsers_never_raise(blob):
         zip_member_texts,
     )
 
-    for fn in (parse_audio_header, parse_id3_tags, decode_flac_samples,
-               decode_jpeg_pixels, parse_jpeg_exif, parse_jpeg_header):
+    for fn in (parse_audio_header, decode_jpeg_pixels, parse_jpeg_header):
         fn(blob)
     parse_warc_records(blob)
     zip_member_texts(blob)

@@ -1,11 +1,12 @@
-"""Invariants for the round-4 curation queries: domain_quota,
-tfidf_topterms, quality_classifier."""
+"""Invariants for the curation queries: domain_quota, tfidf_topterms,
+quality_classifier, and the simhash near-dup pairs and bit votes."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from debgpt7_8_with_vectordb_spark.plans import QUERIES
+from debgpt7_8_with_vectordb_spark.plans.dedup_queries import _simhash_votes
 
 SF = "/root/testdata/sf0.001"
 
@@ -130,3 +131,35 @@ def test_simhash_pairs_exact_recall_vs_bruteforce(spark):
         for r in QUERIES["dedup_simhash_pairs"](spark, SF).collect()
     }
     assert got == brute and brute
+
+
+def test_simhash_votes_match_bitfold_semantics(spark):
+    # brute-force reference: per bit, vote = sum(+1 if bit set else -1),
+    # bit set in the simhash iff vote > 0 — including the all-zero
+    # cases (empty array, NULL array) and exact tie votes (bit NOT set)
+    rows = [
+        (1, [0b1011, 0b0011, 0b1000]),
+        (2, []),
+        (3, None),
+        (4, [0b1, 0b1, 0b10, 0b10]),  # exact ties on bits 0 and 1
+        (5, [(1 << 59) | 5]),  # top md5_long bit
+    ]
+
+    def ref(hs):
+        if not hs:
+            return 0
+        out = 0
+        for b in range(60):
+            vote = sum(1 if (h >> b) & 1 else -1 for h in hs)
+            if vote > 0:
+                out |= 1 << b
+        return out
+
+    df = spark.createDataFrame(rows, "doc_id long, hs array<long>")
+    got = {
+        r["doc_id"]: r["sh"]
+        for r in df.select(
+            "doc_id", _simhash_votes(60)("hs").alias("sh")
+        ).collect()
+    }
+    assert got == {i: ref(hs) for i, hs in rows}

@@ -3,16 +3,25 @@
 A 5-token boilerplate span is planted inside two otherwise-distinct
 documents; a third document shares nothing. The operator must mark
 exactly the planted windows, count covered positions per doc, and skip
-within-doc-only repeats.
+within-doc-only repeats. The explode-first window construction must equal
+the higher-order-function shape it replaced, and the lag-window coverage
+formula must equal the distinct covered-position count.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pytest
 
+from debgpt7_8_with_vectordb_spark.functions.hashing import md5_long
+from debgpt7_8_with_vectordb_spark.functions.text import tokens, word_shingles
 from debgpt7_8_with_vectordb_spark.plans import QUERIES
+from debgpt7_8_with_vectordb_spark.plans.dedup_queries import (
+    SUBSTR_WIN,
+    _substring_windows,
+)
 
 SPAN = "alpha beta gamma delta epsilon"
 
@@ -111,3 +120,48 @@ def test_clean_consistent_with_report(spark):
     for d, cov in rep.items():
         assert cln[d] == cov
     assert all(v == 0 for d, v in cln.items() if d not in rep)
+
+
+def test_substring_windows_match_retired_hof_shape(spark, sf_dir):
+    from debgpt7_8_with_vectordb_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    new = _substring_windows(docs)
+    toks = tokens(F.col("text"))
+    old_base = docs.filter(F.size(toks) >= SUBSTR_WIN).select(
+        "doc_id",
+        F.size(toks).alias("n_tokens"),
+        F.transform(
+            word_shingles(F.col("text"), SUBSTR_WIN), md5_long
+        ).alias("hs"),
+    )
+    old = old_base.select(
+        "doc_id", "n_tokens", F.posexplode("hs").alias("pos0", "h")
+    ).select("doc_id", "n_tokens", (F.col("pos0") + 1).alias("start"), "h")
+    assert new.exceptAll(old).count() == 0
+    assert old.exceptAll(new).count() == 0
+
+
+def test_interval_union_equals_distinct_position_count(spark):
+    # the lag-window coverage rewrite: sum(min(W, gap)) over sorted
+    # unique starts == |union of [start, start+W-1]| for every overlap
+    # pattern (adjacent, overlapping, disjoint, single)
+    import itertools
+
+    W = SUBSTR_WIN
+    for starts in [
+        [1],
+        [1, 2, 3],
+        [1, 6],
+        [1, 2, 10, 11, 30],
+        [5, 5 + W, 5 + 2 * W],
+        list(range(1, 20, 2)),
+    ]:
+        brute = len(
+            set(itertools.chain.from_iterable(range(s, s + W) for s in starts))
+        )
+        ssorted = sorted(starts)
+        formula = W + sum(
+            min(W, b - a) for a, b in zip(ssorted, ssorted[1:])
+        )
+        assert formula == brute, starts

@@ -1,6 +1,6 @@
-"""JPEG codec (operators/jpegcodec.py), baseline + progressive:
-encoder->decoder round-trips (the container has no image libraries, so
-the forward encoders are the oracle), exactly-representable pins,
+"""JPEG decoder (operators/jpegcodec.py), baseline + progressive:
+encoder->decoder round-trips (the forward encoders in
+tests/media_fixtures.py are the oracle), exactly-representable pins,
 sampling/restart/table-routing coverage, progressive-equals-baseline
 bit-identity (same quantized coefficients), the NULL-on-malformed
 contract, and the ``decode_image_pixels`` / ``parse_image_header``
@@ -16,13 +16,13 @@ import pytest
 from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
     ZIGZAG,
     decode_jpeg_pixels,
-    encode_jpeg_baseline,
     parse_jpeg_header,
 )
 from debgpt7_8_with_vectordb_spark.operators.multimodal import (
     decode_image_pixels,
     parse_image_header,
 )
+from tests.media_fixtures import encode_jpeg_baseline, encode_jpeg_progressive
 
 
 def _smooth_rgb(w: int, h: int, phase: float = 0.0) -> np.ndarray:
@@ -216,10 +216,6 @@ def test_randomized_roundtrip_bounded_error():
 
 
 def test_progressive_decodes_bit_identical_to_baseline():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
-
     for (w, h), sub, q in [
         ((30, 20), False, 95),
         ((30, 20), True, 90),
@@ -245,10 +241,6 @@ def test_progressive_decodes_bit_identical_to_baseline():
 
 
 def test_progressive_noisy_content_stresses_eob_runs():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
-
     rng = np.random.default_rng(5)
     gray = rng.integers(0, 256, size=(40, 56), dtype=np.uint8)
     bg = decode_jpeg_pixels(encode_jpeg_baseline(56, 40, gray.tobytes(), 1, 75))
@@ -270,9 +262,6 @@ def test_progressive_noisy_content_stresses_eob_runs():
 
 
 def test_progressive_truncated_and_dispatch():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
     from debgpt7_8_with_vectordb_spark.operators.multimodal import (
         decode_image_pixels as dip,
     )
@@ -284,73 +273,14 @@ def test_progressive_truncated_and_dispatch():
     assert decode_jpeg_pixels(pj[: len(pj) // 2]) is None
 
 
-# ------------------------------------------------------------- EXIF
+# ------------------------------------------------------------- APP1
 
 
-def test_exif_roundtrip_and_tags():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-        build_test_exif,
-        parse_jpeg_exif,
-    )
-
-    exif = build_test_exif(
-        orientation=6,
-        make="ACME",
-        model="SnapCam 3000",
-        datetime="2024:05:01 12:34:56",
-    )
-    j = encode_jpeg_baseline(
-        16, 16, bytes(16 * 16 * 3), 3, 85, exif=exif
-    )
-    got = parse_jpeg_exif(j)
-    assert got == {
-        "orientation": 6,
-        "make": "ACME",
-        "model": "SnapCam 3000",
-        "datetime": "2024:05:01 12:34:56",
-    }
-    # embedding EXIF must not perturb the pixel decode path
+def test_app1_segment_does_not_perturb_pixels():
+    # an EXIF-style APP1 segment is metadata the pixel decoder skips
+    app1 = b"Exif\x00\x00II*\x00\x08\x00\x00\x00\x00\x00\x00\x00\x00\x00"
     plain = decode_jpeg_pixels(encode_jpeg_baseline(16, 16, bytes(16 * 16 * 3), 3, 85))
+    j = encode_jpeg_baseline(16, 16, bytes(16 * 16 * 3), 3, 85, exif=app1)
+    assert b"\xff\xe1" in j
     assert decode_jpeg_pixels(j)[4] == plain[4]
-    # short ASCII values live inline in the 4-byte slot
-    tiny = build_test_exif(orientation=1, make="A")
-    j2 = encode_jpeg_baseline(8, 8, bytes(8 * 8 * 3), 3, 85, exif=tiny)
-    assert parse_jpeg_exif(j2) == {"orientation": 1, "make": "A"}
-
-
-def test_exif_absent_or_malformed_is_none():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-        build_test_exif,
-        parse_jpeg_exif,
-    )
-
-    plain = encode_jpeg_baseline(8, 8, bytes(8 * 8 * 3), 3, 85)
-    assert parse_jpeg_exif(plain) is None  # no APP1 at all
-    assert parse_jpeg_exif(b"\x89PNG") is None
-    broken = bytearray(build_test_exif(orientation=3, make="LONGMAKERNAME"))
-    broken[6:10] = b"XX\x00*"  # bad byte-order mark
-    j = encode_jpeg_baseline(8, 8, bytes(8 * 8 * 3), 3, 85, exif=bytes(broken))
-    assert parse_jpeg_exif(j) is None
-
-
-def test_exif_spark_stage():
-    from debgpt7_8_with_vectordb_spark.operators.jpegcodec import build_test_exif
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        decode_image_exif,
-    )
-    from debgpt7_8_with_vectordb_spark.session import get_spark
-
-    spark = get_spark(shuffle_partitions=4)
-    rows_in = [
-        (1, encode_jpeg_baseline(
-            8, 8, bytes(8 * 8 * 3), 3, 85,
-            exif=build_test_exif(orientation=8, model="X"),
-        )),
-        (2, encode_jpeg_baseline(8, 8, bytes(8 * 8 * 3), 3, 85)),
-        (3, b"not an image"),
-    ]
-    df = spark.createDataFrame(rows_in, "doc_id long, payload binary")
-    rows = {r["doc_id"]: r for r in decode_image_exif(df).collect()}
-    assert rows[1]["orientation"] == 8 and rows[1]["model"] == "X"
-    assert rows[2]["orientation"] is None
-    assert rows[3]["orientation"] is None
+    assert parse_jpeg_header(j)[:2] == (16, 16)

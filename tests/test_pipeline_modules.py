@@ -62,12 +62,7 @@ def test_injected_pdf_decoder_through_arrow_seam(spark, tmp_path):
     lacks pypdf, so a FAKE decoder is injected through the same
     mapInPandas slot a real one uses — bytes must arrive intact on the
     executor and the extracted text must flow back through Arrow."""
-    import pytest
-
-    from debgpt7_8_with_vectordb_spark.sources.readers import (
-        pdf_decode_stub,
-        read_any_path,
-    )
+    from debgpt7_8_with_vectordb_spark.sources.readers import read_any_path
 
     (tmp_path / "a.pdf").write_bytes(b"%PDF-1.4 alpha body")
     (tmp_path / "b.pdf").write_bytes(b"%PDF-1.4 beta")
@@ -85,9 +80,6 @@ def test_injected_pdf_decoder_through_arrow_seam(spark, tmp_path):
         "a.pdf": "pages=1 text=alpha body bytes=19",
         "b.pdf": "pages=1 text=beta bytes=13",
     }
-    # the default slot is the honest stub, not a silent fake
-    with pytest.raises(NotImplementedError):
-        pdf_decode_stub(b"%PDF")
 
 
 def test_injected_html_extractor_and_default_strip(spark, tmp_path):
@@ -399,49 +391,6 @@ def test_fanout_retry_counts_failures(spark):
 
     rows = fetch_urls(urls, always_500).collect()
     assert rows[0]["status"] == 500  # bounded retry gave up, status surfaced
-
-
-# ---------- custom stateful streaming ----------
-
-
-def test_stateful_running_profiles_match_batch(spark, sf_dir):
-    """applyInPandasWithState per-user profiles: after draining the feed,
-    the latest profile per user equals the batch groupBy answer."""
-    from debgpt7_8_with_vectordb_spark.streaming.sessionize import (
-        stream_events_from_dir,
-    )
-    from debgpt7_8_with_vectordb_spark.streaming.stateful import running_profiles
-    from debgpt7_8_with_vectordb_spark.tables import load_table
-
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        prof = running_profiles(ev, idle_timeout_ms=None)
-        q = (
-            prof.writeStream.format("memory")
-            .queryName("t_profiles")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    got = {
-        r["user_id"]: r
-        for r in spark.table("t_profiles").orderBy("user_id").collect()
-    }
-    batch = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
-        F.count("*").alias("n"), F.sum("value").alias("tv"), F.max("ts").alias("mx")
-    )
-    for b in batch.collect():
-        g = got[b["user_id"]]
-        assert g["n_events"] == b["n"]
-        assert abs(g["total_value"] - b["tv"]) < 1e-6
-        assert g["last_ts"] == b["mx"]
-        assert g["final"] is False  # drained before any idle timeout fired
 
 
 def test_source_cmd(spark):

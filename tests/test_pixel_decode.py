@@ -1,9 +1,7 @@
-"""Round-7 REAL pixel/PCM decode (VERDICT r6 next-round #1): the
-stdlib-decodable content subset graduates from stub to default —
-PNG 8-bit (inflate + all five scanline filters), BMP 24/32bpp
-uncompressed, PNM P2/P3/P5/P6, WAV PCM 8/16-bit. Pinned against
-golden external bytes, independent writer/decoder round-trips, and
-the Spark pixel-stats seam."""
+"""Pixel decode for the stdlib-decodable subset — PNG (inflate + all
+five scanline filters), BMP, PNM P2/P3/P5/P6, GIF, ICO, SVG dimensions.
+Pinned against golden external bytes, independent writer/decoder
+round-trips, and the Spark pixel-stats seam."""
 
 from __future__ import annotations
 
@@ -14,14 +12,12 @@ import zlib
 import pytest
 
 from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-    _pattern_px,
     decode_image_pixel_stats,
     decode_image_pixels,
-    decode_wav_samples,
     encode_test_image_patterned,
-    encode_test_wav,
     synthesize_test_media_patterned,
 )
+from tests.media_fixtures import pattern_px
 
 # the canonical 1x1 PNG data-URI file: single red-ish pixel via RGBA
 GOLDEN_PNG_1x1_RGBA = base64.b64decode(
@@ -65,7 +61,7 @@ def test_patterned_roundtrip_matches_pattern(fmt, wh):
     gfmt, gw, gh, ch, px = got
     assert (gw, gh, ch) == (w, h, 3)
     expect = bytes(
-        _pattern_px(x, y, c, 13)
+        pattern_px(x, y, c, 13)
         for y in range(h)
         for x in range(w)
         for c in range(3)
@@ -83,7 +79,7 @@ def test_png_all_five_filters_hit():
     assert ftypes == {0, 1, 2, 3, 4}
     got = decode_image_pixels(blob)
     assert got is not None and got[4] == bytes(
-        _pattern_px(x, y, c, 0)
+        pattern_px(x, y, c, 0)
         for y in range(10)
         for x in range(6)
         for c in range(3)
@@ -201,32 +197,6 @@ def test_pixel_decode_malformed_returns_none():
 
 
 # ---------------------------------------------------------------------------
-# WAV PCM samples
-# ---------------------------------------------------------------------------
-
-
-def test_wav_pcm16_roundtrip():
-    """Spec-built 16-bit stereo WAV with known samples."""
-    samples = [0, 1000, -1000, 32767, -32768, 7]
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, 2, 16000, 16000 * 4, 4, 16)
-    blob = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    assert decode_wav_samples(blob) == (2, 16000, 16, samples)
-
-
-def test_wav_pcm8_and_encoder_roundtrip():
-    blob = encode_test_wav(channels=1, sample_rate=8000, bits=8, n_samples=5)
-    got = decode_wav_samples(blob)
-    assert got == (1, 8000, 8, [0, 0, 0, 0, 0])  # silent encoder payload
-    assert decode_wav_samples(b"RIFFxxxxWAVE") is None
-    assert decode_wav_samples(b"") is None
-
-
-# ---------------------------------------------------------------------------
 # Spark pixel-stats seam
 # ---------------------------------------------------------------------------
 
@@ -243,12 +213,12 @@ def test_pixel_stats_spark_seam(spark):
         assert r["fmt"] == ("p6" if fmts[i % 6] == "ppm" else fmts[i % 6])
         assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
         expect_sum = sum(
-            _pattern_px(x, y, c, seed)
+            pattern_px(x, y, c, seed)
             for y in range(h) for x in range(w) for c in range(3)
         )
         assert r["pixel_sum"] == expect_sum
-        assert r["first_px"] == _pattern_px(0, 0, 0, seed)
-        assert r["last_px"] == _pattern_px(w - 1, h - 1, 2, seed)
+        assert r["first_px"] == pattern_px(0, 0, 0, seed)
+        assert r["last_px"] == pattern_px(w - 1, h - 1, 2, seed)
 
 
 def test_pixel_stats_null_row_for_unsupported(spark):
@@ -261,8 +231,7 @@ def test_pixel_stats_null_row_for_unsupported(spark):
 
 
 # ---------------------------------------------------------------------------
-# GIF pixels (round 7 follow-up: LZW implemented from the spec, GIF
-# leaves the stub list — only lossy codecs remain stubbed)
+# GIF pixels (LZW implemented from the spec)
 # ---------------------------------------------------------------------------
 
 
@@ -374,7 +343,7 @@ def test_gif_malformed_returns_none():
 
 
 # ---------------------------------------------------------------------------
-# PNG paletted (ctype 3), feature extraction, resize
+# PNG paletted (ctype 3), Adam7, 16-bit, low-depth; BMP 8bpp; ICO; SVG
 # ---------------------------------------------------------------------------
 
 
@@ -403,70 +372,6 @@ def test_png_paletted_decode():
         + chunk(b"IDAT", zlib.compress(b"\x00\x07\x00" * 2)) + chunk(b"IEND", b"")
     )
     assert decode_image_pixels(bad) is None
-
-
-def test_resize_nearest_mapping():
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import resize_nearest
-
-    # 4x1 gray -> 2x1: picks src x = 0,2
-    assert resize_nearest(bytes((10, 20, 30, 40)), 4, 1, 1, 2, 1) == bytes((10, 30))
-    # 1x1 -> 3x3 upsample replicates
-    assert resize_nearest(b"\x07", 1, 1, 1, 3, 3) == b"\x07" * 9
-    # RGB pixels move as units
-    px = bytes((1, 2, 3, 4, 5, 6))  # 2x1 RGB
-    assert resize_nearest(px, 2, 1, 3, 1, 1) == bytes((1, 2, 3))
-
-
-def test_image_and_audio_features():
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        audio_features,
-        image_features,
-    )
-
-    mean, std, lo, hi = image_features(bytes((0, 255)), 2, 1, 1)
-    assert (round(mean, 1), lo, hi) == (127.5, 0, 255)
-    assert round(std, 1) == 127.5
-
-    dur, rms, peak = audio_features([0, 16384, -16384, 0], 2, 8000, 16)
-    assert dur == 2 / 8000
-    assert round(rms, 4) == round((2 * 16384**2 / 4) ** 0.5 / 32768, 4)
-    assert peak == 16384
-    # 8-bit unsigned centers at 128
-    dur8, rms8, peak8 = audio_features([128, 128], 1, 100, 8)
-    assert (rms8, peak8) == (0.0, 0)
-
-
-def test_feature_and_resize_spark_stages(spark):
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        extract_image_features,
-        resize_image_stats,
-    )
-
-    ids = spark.range(8).selectExpr("id AS doc_id")
-    media = synthesize_test_media_patterned(ids)
-    feats = {r["doc_id"]: r for r in extract_image_features(media).collect()}
-    assert len(feats) == 8
-    for i in range(8):
-        r = feats[i]
-        assert r["fmt"] in ("png", "bmp", "p6", "gif", "tiff", "webp")
-        assert 0 <= r["brightness"] <= 255
-        assert r["px_min"] <= r["px_max"]
-
-    rz = {r["doc_id"]: r for r in resize_image_stats(media, 4, 4).collect()}
-    for i in range(8):
-        r = rz[i]
-        assert (r["width"], r["height"], r["n_values"]) == (4, 4, 48)
-        # corner pixels survive any resize: first_px is always the
-        # source (0,0) channel 0 = seed
-        assert r["first_px"] == i % 251
-
-    # undecodable payload -> NULL feature row, task alive
-    junk = spark.createDataFrame(
-        [(99, bytearray(b"not an image"), "application/octet-stream")],
-        "doc_id long, payload binary, media_type string",
-    )
-    assert extract_image_features(junk).collect()[0]["fmt"] is None
-    assert resize_image_stats(junk, 2, 2).collect()[0]["pixel_sum"] is None
 
 
 def test_png_adam7_interlaced_decode():
@@ -520,67 +425,6 @@ def test_png_adam7_interlaced_decode():
         assert got[:4] == ("png", w, h, ch)
         expect = b"".join(bytes(p) for p in full)
         assert got[4] == expect, (w, h, ch, ftype)
-
-
-def test_audio_pcm_stats_spark_stage(spark):
-    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
-        decode_audio_pcm_stats,
-        encode_test_wav_patterned,
-    )
-
-    rows = []
-    for i in range(10):
-        ch, rate, bits = 1 + i % 2, (8000, 16000)[i % 2], (8, 16)[(i // 2) % 2]
-        frames, seed = 5 + i * 3, i * 11
-        rows.append(
-            (i, bytearray(encode_test_wav_patterned(ch, rate, bits, frames, seed)), "audio/wav")
-        )
-    rows.append((99, bytearray(b"not audio"), "application/octet-stream"))
-    media = spark.createDataFrame(
-        rows, "doc_id long, payload binary, media_type string"
-    )
-    got = {r["doc_id"]: r for r in decode_audio_pcm_stats(media).collect()}
-    for i in range(10):
-        ch, rate, bits = 1 + i % 2, (8000, 16000)[i % 2], (8, 16)[(i // 2) % 2]
-        frames, seed = 5 + i * 3, i * 11
-        vals = [
-            ((f * 13 + c * 5 + seed) % 97) - 48
-            for f in range(frames)
-            for c in range(ch)
-        ]
-        if bits == 8:
-            vals = [v + 128 for v in vals]
-        r = got[i]
-        assert (r["channels"], r["sample_rate"], r["bits"]) == (ch, rate, bits)
-        assert r["n_samples"] == len(vals)
-        assert r["sample_sum"] == sum(vals)
-        assert (r["sample_min"], r["sample_max"]) == (min(vals), max(vals))
-        assert r["duration_ms"] == frames * 1000 // rate
-    assert got[99]["channels"] is None and got[99]["sample_sum"] is None
-
-
-def test_wav_24_and_32_bit_pcm():
-    import struct as _s
-
-    def wav(bits, frames):
-        block = bits // 8
-        if bits == 24:
-            data = b"".join(
-                int(v).to_bytes(3, "little", signed=True) for v in frames
-            )
-        else:
-            data = _s.pack(f"<{len(frames)}i", *frames)
-        fmt = _s.pack("<HHIIHH", 1, 1, 8000, 8000 * block, block, bits)
-        chunks = (
-            b"fmt " + _s.pack("<I", len(fmt)) + fmt
-            + b"data" + _s.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + _s.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    vals24 = [0, 1, -1, 8_388_607, -8_388_608, 123_456]
-    assert decode_wav_samples(wav(24, vals24)) == (1, 8000, 24, vals24)
-    vals32 = [0, 2**31 - 1, -(2**31), 42]
-    assert decode_wav_samples(wav(32, vals32)) == (1, 8000, 32, vals32)
 
 
 def test_png_16bit_high_byte_presentation():

@@ -1,9 +1,8 @@
-"""Round-7 streaming restart drill (VERDICT r6 #8): kill a stateful
-streaming query mid-feed and restart it from its checkpoint — the
-recovered run must produce exactly what an uninterrupted run (or the
-batch oracle) would. Covers the three stateful mechanisms:
+"""Streaming restart drill: kill a stateful streaming query mid-feed
+and restart it from its checkpoint — the recovered run must produce
+exactly what an uninterrupted run (or the batch oracle) would. Covers
+two stateful mechanisms:
 
-- ``running_profiles`` (applyInPandasWithState custom state),
 - ``attribution_join`` (stream-stream join buffers),
 - ``stream_dedup`` (dropDuplicatesWithinWatermark id state),
 
@@ -118,52 +117,6 @@ TRANCHE2 = [
     (6, _t(25), 1, "purchase", 7.0, ""),
     (7, _t(25), 3, "click", 7.0, ""),
 ]
-
-
-def test_running_profiles_restart_resumes_state(spark, two_tranche_dirs):
-    """Kill after tranche 1, restart on tranche 2 under a DIFFERENT
-    shuffle-partition conf: the recovered per-user profiles must count
-    tranche-1 events too — proof the applyInPandasWithState store came
-    back from the checkpoint, not from zero."""
-    from debgpt7_8_with_vectordb_spark.streaming.stateful import running_profiles
-
-    feed, ckpt = two_tranche_dirs
-    out = feed + "_out"
-    _write_batch(spark, TRANCHE1, feed, "t1.parquet", mtime=1_000_000)
-
-    with _with_partitions(spark, "8"):
-        _drain_update(
-            running_profiles(_stream(spark, feed), idle_timeout_ms=None),
-            out, ckpt,
-        )
-    rows1 = spark.read.parquet(out).collect()
-    b1_max = max(r["batch_id"] for r in rows1)
-    run1 = {r["user_id"]: r for r in rows1}
-    assert run1[1]["n_events"] == 3 and abs(run1[1]["total_value"] - 8.0) < 1e-9
-    assert run1[2]["n_events"] == 1
-
-    # the "crash": the query object is gone; only feed + checkpoint remain
-    _write_batch(spark, TRANCHE2, feed, "t2.parquet", mtime=2_000_000)
-
-    with _with_partitions(spark, "12"):  # restarted on a "rescaled" session
-        _drain_update(
-            running_profiles(_stream(spark, feed), idle_timeout_ms=None),
-            out, ckpt,
-        )
-    rows2 = [
-        r for r in spark.read.parquet(out).collect() if r["batch_id"] > b1_max
-    ]
-    assert rows2, "restart produced no new batches"
-    run2 = {r["user_id"]: r for r in rows2}
-
-    # user 1: 3 events before the crash + 2 after -> 5, value 8+10=18
-    assert run2[1]["n_events"] == 5
-    assert abs(run2[1]["total_value"] - 18.0) < 1e-9
-    assert run2[1]["last_ts"] == _t(25)
-    # user 3 is new post-restart; user 2 had no tranche-2 events, so the
-    # update-mode output of run 2 must NOT re-emit it
-    assert run2[3]["n_events"] == 1
-    assert 2 not in run2
 
 
 def test_attribution_join_restart_keeps_buffered_side(spark, two_tranche_dirs):

@@ -12,9 +12,9 @@ import numpy as np
 from debgpt7_8_with_vectordb_spark.operators.multimodal import (
     _packbits_decode,
     decode_image_pixels,
-    encode_test_tiff_pixels,
     parse_image_header,
 )
+from tests.media_fixtures import encode_test_tiff_pixels
 
 
 def _rgb(w: int, h: int, seed: int = 0) -> bytes:

@@ -1,15 +1,16 @@
-"""Scale tile for the round-7 media codec stages: JPEG pixel decode,
-4-container audio metadata, FLAC PCM sample stats.
+"""Scale tile for the media codec stages: JPEG pixel decode, audio
+metadata, video metadata.
 
 Times each Arrow-batched stage at N and 10N synthetic media rows on
 local[32] and reports wall growth plus the worst max/median task ratio
 from the Spark event log (straggler check, same protocol as the other
-SCALING.md tiles). All three stages are zero-shuffle scans, so the
+SCALING.md tiles). All stages are zero-shuffle scans, so the
 claim under test is linear growth + full parallelism — the shape that
 holds at 100 TB where the per-payload Python decoder slot swaps to a
 native codec through the same seam.
 
-Usage: python tools/scale_media_codecs.py [N]   (default 2000)
+Usage (from the repo root, so executors import the fixture encoders
+from ``tests/``): python tools/scale_media_codecs.py [N]   (default 2000)
 """
 
 from __future__ import annotations
@@ -22,19 +23,14 @@ import pyspark.sql.functions as F
 sys.path.insert(0, ".")
 
 from debgpt7_8_with_vectordb_spark.operators import multimodal as M
-from debgpt7_8_with_vectordb_spark.operators.flaccodec import (
-    encode_test_flac_stream,
-)
-from debgpt7_8_with_vectordb_spark.operators.jpegcodec import (
-    encode_jpeg_baseline,
-    encode_jpeg_progressive,
-)
+from debgpt7_8_with_vectordb_spark.operators.audio_headers import encode_test_flac
 from debgpt7_8_with_vectordb_spark.session import get_spark
+from tests.media_fixtures import encode_jpeg_baseline, encode_jpeg_progressive
 
 
 def media_df(spark, n: int):
     """n rows, round-robin over seven containers: baseline JPEG /
-    progressive JPEG / WAV PCM / FLAC / MP4 / AVI / MKV — payloads
+    progressive JPEG / WAV PCM / FLAC (header only) / MP4 / AVI / MKV — payloads
     built executor-side so the driver never materializes the corpus."""
 
     def gen(batches):
@@ -60,19 +56,9 @@ def media_df(spark, n: int):
                     )
                     payloads.append(encode_jpeg_progressive(w, h, px, 3, 80))
                 elif kind == 2:
-                    payloads.append(
-                        M.encode_test_wav_patterned(2, 8000, 16, 400, int(doc_id))
-                    )
+                    payloads.append(M.encode_test_wav(2, 8000, 16, 400))
                 elif kind == 3:
-                    samples = [
-                        ((f * 13 + c * 5 + int(doc_id)) % 97) - 48
-                        for f in range(400) for c in range(2)
-                    ]
-                    payloads.append(
-                        encode_test_flac_stream(
-                            2, 8000, 16, samples, stereo_mode="mid_side"
-                        )
-                    )
+                    payloads.append(encode_test_flac(2, 8000, 16, 400))
                 elif kind == 4:
                     payloads.append(
                         M.encode_test_mp4(1000, 5000 + doc_id % 97, 640, 360)
@@ -107,7 +93,6 @@ def main() -> None:
     stages = [
         ("image_pixel_stats(jpeg)", M.decode_image_pixel_stats),
         ("audio_metadata(4-way)", M.decode_audio_metadata),
-        ("audio_pcm_stats(wav+flac)", M.decode_audio_pcm_stats),
         ("video_metadata(dispatch)", M.decode_video_metadata),
     ]
     for scale, rows in (("1x", n), ("10x", 10 * n)):
