@@ -15,10 +15,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-#: DuckDB SQL fragment computing the identical value, for oracle strings.
-DUCKDB_MD5_LONG = "(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def md5_long(payload: Column) -> Column:
     """First 60 bits of md5(payload) as BIGINT, identical in DuckDB."""
     return F.conv(F.substring(F.md5(payload.cast("binary")), 1, 15), 16, 10).cast("long")

@@ -9,10 +9,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-#: tiny fixed stopword list used by quality scoring & language-ID
-STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-
-
 def tokens(text: Column) -> Column:
     """Whitespace tokenization, empty tokens dropped."""
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")

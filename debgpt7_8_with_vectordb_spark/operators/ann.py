@@ -3,24 +3,30 @@
 The reference's retrieval is exact brute force — the full index
 materialized in RAM per query (vectordb.py:203-208, an anti-pattern at
 any scale, SURVEY §4.1). The scale path (SURVEY §4.3.4): cluster the
-corpus with KMeans (spark.ml), store cluster_id as a PARTITION column,
-and serve a query by probing only the nprobe nearest clusters —
-partition pruning does the index's job. Exact scoring stays the recall
-oracle (`ann_recall` pattern, BASELINE.md §2).
+corpus with k-means, store cluster_id as a PARTITION column, and serve
+a query by probing only the nprobe nearest clusters — partition pruning
+does the index's job. Exact scoring stays the recall oracle
+(`ann_recall` pattern, BASELINE.md §2).
 
 Design notes:
-- vectors are L2-normalized BEFORE clustering so KMeans' euclidean
+- vectors are L2-normalized BEFORE clustering so k-means' euclidean
   objective orders like cosine (‖a−b‖² = 2−2·cos on unit vectors);
-- the centroid table is tiny (k × dim) → broadcast to rank clusters;
-- seeded KMeans keeps index builds reproducible (the engine-wide
-  determinism rule).
+- quantizers (IVF centroids, PQ codebooks) train on the driver from a
+  bounded sample of at most 256 rows per centroid, taken in
+  md5(seed|id) order, with first-k-distinct init and float64 Lloyd —
+  one Spark job at any corpus size, and replayable outside the JVM;
+- the stored index is always the rounded-argmin assignment to the
+  persisted centroids/codebooks, which the SQL oracles replay;
+- the centroid table is tiny (k × dim) → broadcast to rank clusters.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.hashing import md5_long
 from ..functions.vector import cosine_similarity, l2_normalize
 
 
@@ -70,41 +76,68 @@ def build_ivf_index(
 
     Returns the indexed DataFrame (id, nv unit vector, cluster_id) and
     the k centroids as plain python lists (driver-side — k×dim floats).
+    The centroids are trained on the driver from a bounded sample
+    (``_training_sample``, ``_train_kmeans``), so the corpus is scanned
+    twice at any size: once for the sample, once for the assignment.
+    Assignment uses the rounded-argmin formula (``assign_clusters_np``),
+    not the trainer's last assignment, so the stored index is exactly
+    replayable by a SQL oracle from the persisted centroid table.
     Production writes the DataFrame ``partitionBy('cluster_id')``.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
     normed = emb.select(
         F.col(id_col).alias("id"),
         l2_normalize(F.col(vec_col).cast("array<double>")).alias("nv"),
     )
-    # cache: KMeans scans its input once per iteration — uncached, every
-    # iteration would re-run the normalize + vector conversion subtree
-    feats = normed.withColumn("features", array_to_vector("nv")).cache()
-    try:
-        # a coarse quantizer doesn't need tight convergence: recall comes
-        # from nprobe, not centroid precision — cap the iterations and
-        # use random init (k-means|| adds ~5 extra distributed passes
-        # for centroid quality the probe doesn't need)
-        model = KMeans(
-            k=k,
-            seed=seed,
-            maxIter=max_iter,
-            initMode="random",
-            featuresCol="features",
-        ).fit(feats)
-        centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-        # assignment via the rounded-argmin formula (not model.transform)
-        # so the stored index is exactly replayable by a SQL oracle from
-        # the persisted centroid table — see assign_clusters(_np)
-        indexed = (
-            assign_clusters_np(feats.select("id", "nv"), centroids)
-            .localCheckpoint(eager=True)  # freeze assignments, release the cache
-        )
-    finally:
-        feats.unpersist()
+    sample = _training_sample(normed, k * _SAMPLE_PER_CENTROID, seed)
+    centroids = _train_kmeans(sample, k, max_iter).tolist()
+    indexed = assign_clusters_np(normed, centroids).localCheckpoint(eager=True)
     return indexed, centroids
+
+
+#: training rows per centroid — FAISS's cap for its coarse quantizers:
+#: more points barely move the centroids, and the sample bounds the
+#: driver-side training cost at any corpus size
+_SAMPLE_PER_CENTROID = 256
+
+
+def _training_sample(normed: DataFrame, n: int, seed: int) -> np.ndarray:
+    """The ``n`` rows of (id, nv) with the smallest
+    ``md5_long(concat_ws('|', seed, id))``, ties to the smaller id, as a
+    float64 matrix in that order: one TakeOrderedAndProject job. The
+    sample depends only on the ids and the seed — not on partitioning —
+    so hashlib or DuckDB can replay it."""
+    import pyarrow.compute as pc
+
+    key = md5_long(F.concat_ws("|", F.lit(str(seed)), F.col("id").cast("string")))
+    nv = normed.orderBy(key, "id").select("nv").limit(n).toArrow().column("nv")
+    if nv.null_count or len(set(pc.list_value_length(nv).to_pylist())) != 1:
+        raise ValueError("training needs one or more non-null vectors of one width")
+    return np.asarray(pc.list_flatten(nv), dtype=np.float64).reshape(len(nv), -1)
+
+
+def _train_kmeans(x: np.ndarray, k: int, max_iter: int = 8) -> np.ndarray:
+    """Lloyd's k-means on the rows of ``x`` → (k, dim) float64 centroids.
+
+    Init is the first k DISTINCT rows in sample order; with fewer
+    distinct rows, the earliest ones repeat so there are still k
+    centroids. Each round assigns every row to the argmin of
+    ``‖c‖² − 2·x·cᵀ`` (ties to the smaller index) and moves each
+    centroid to its members' mean; an empty cluster keeps its centroid.
+    Stops after ``max_iter`` rounds or once the assignment repeats."""
+    _, first = np.unique(x, axis=0, return_index=True)
+    cent = x[np.resize(np.sort(first)[:k], k)].copy()
+    assign = None
+    for _ in range(max_iter):
+        a = np.argmin((cent * cent).sum(axis=1) - 2.0 * (x @ cent.T), axis=1)
+        if assign is not None and np.array_equal(a, assign):
+            break
+        assign = a
+        counts = np.bincount(a, minlength=k)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, a, x)
+        hit = counts > 0
+        cent[hit] = sums[hit] / counts[hit, None]
+    return cent
 
 
 def select_probes(
@@ -254,41 +287,23 @@ PQ_KSUB = 16  # codebook entries per subspace (4-bit codes here)
 def build_pq_codebooks(
     normed: DataFrame, m: int = PQ_SUBSPACES, ksub: int = PQ_KSUB, seed: int = 42
 ) -> list[list[list[float]]]:
-    """Train one seeded KMeans per subspace on the sliced unit vectors.
-    Returns codebooks[m][ksub][dsub]. Same coarse-quantizer stance as
-    build_ivf_index: random init, capped iterations — code quality comes
-    from m×ksub resolution, not centroid convergence."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = len(normed.select("nv").head()[0])
+    """Train one codebook per subspace on the sliced unit vectors.
+    Returns codebooks[m][ksub][dsub]. One bounded sample of ``ksub *
+    256`` rows (``_training_sample``) is sliced for every subspace and
+    each slice trained by ``_train_kmeans`` on the driver — one Spark
+    job in all. Encoding stays ``pq_encode_np``'s rounded argmin, which
+    the SQL oracles replay from the persisted codebooks."""
+    sample = _training_sample(normed, ksub * _SAMPLE_PER_CENTROID, seed)
+    dim = sample.shape[1]
     # fail fast: trailing dims would be silently DROPPED by the slicing
     # below, and the SQL oracles hardcode the subspace width — a
     # non-divisible corpus must error, not quietly diverge cross-engine
     assert dim % m == 0, f"dim {dim} not divisible by m={m} subspaces"
     dsub = dim // m
-    books: list[list[list[float]]] = []
-    sliced = normed.select(
-        "id",
-        *[
-            F.slice("nv", s * dsub + 1, dsub).alias(f"sub{s}")
-            for s in range(m)
-        ],
-    ).cache()
-    try:
-        for s in range(m):
-            feats = sliced.select(array_to_vector(f"sub{s}").alias("features"))
-            model = KMeans(
-                k=ksub,
-                seed=seed + s,
-                maxIter=8,
-                initMode="random",
-                featuresCol="features",
-            ).fit(feats)
-            books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    finally:
-        sliced.unpersist()
-    return books
+    return [
+        _train_kmeans(sample[:, s * dsub : (s + 1) * dsub], ksub).tolist()
+        for s in range(m)
+    ]
 
 
 def pq_encode_np(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:

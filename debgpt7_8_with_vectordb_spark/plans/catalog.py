@@ -59,8 +59,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # Oracle SQL embeds a __TOKEN__; both the query (write side) and
 # resolve_oracles (read side) derive the same literal path from sf_dir.
 ORACLE_ARTIFACTS: dict[str, tuple[str, str]] = {
-    "__IVF_CENTROIDS__": ("embeddings.parquet", "ivf_handoff_v1"),
-    "__PQ_CODEBOOKS__": ("embeddings.parquet", "pq_handoff_v1"),
+    "__IVF_CENTROIDS__": ("embeddings.parquet", "ivf_handoff_v2"),
+    "__PQ_CODEBOOKS__": ("embeddings.parquet", "pq_handoff_v2"),
     "__PCA_COMPONENTS__": ("embeddings.parquet", "pca_handoff_v1"),
     "__BPE_MERGES__": ("documents.parquet", "bpe_handoff_v1"),
 }

@@ -1235,9 +1235,6 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UPW_RATES = {"en": 1.0, "zh": 2.5}  # epochs per stratum; rest 1.5
-
-
 @query(
     "sample_upweight",
     oracle=f"""

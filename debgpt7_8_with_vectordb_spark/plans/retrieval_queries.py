@@ -558,26 +558,25 @@ ORDER BY score DESC, id ASC LIMIT 5
 """,
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production ANN path end-to-end: seeded KMeans IVF build
-    (operators/ann.py — vectors normalized first so euclidean KMeans
+    """The production ANN path end-to-end: seeded k-means IVF build
+    (operators/ann.py — vectors normalized first so euclidean k-means
     orders like cosine) → probe the 2 cosine-nearest clusters → exact
     re-rank inside them, top-5. Replaces `ann_ivf`'s label-as-cluster
     stand-in with a real learned clustering; cluster_id becomes the
     partition column at scale so the probe is partition pruning.
 
-    FULLY ORACLED: the query persists the seeded centroid table to
-    parquet (the oracle-handoff file) — the stored half of a real IVF
-    index — and assignment is a rounded-argmin EXPRESSION over that
-    table (operators/ann.assign_clusters), not KMeansModel.transform,
-    so DuckDB replays normalize → assign → probe-selection → exact
-    top-5 bit-for-bit from the same artifact. KMeans training itself
-    (the part SQL cannot replay) only produces the centroid table the
-    oracle consumes — and since it is seeded and deterministic per
-    corpus, that handoff file doubles as the cache, keyed on the
-    embeddings file identity: warm runs skip spark.ml entirely and pay
-    only assignment + probe. Recall
-    properties stay pinned in tests/test_ann.py (nprobe=k ⇒ recall 1.0;
-    monotone)."""
+    FULLY ORACLED: the query persists the centroid table to parquet
+    (the oracle-handoff file) — the stored half of a real IVF index —
+    and assignment is the rounded-argmin formula over that table
+    (operators/ann.assign_clusters_np), not the trainer's own
+    assignment, so DuckDB replays normalize → assign → probe-selection
+    → exact top-5 bit-for-bit from the same artifact. Training (a
+    driver-side Lloyd on a hash-ordered sample) only produces the
+    centroid table the oracle consumes — and since it is deterministic
+    per corpus and seed, that handoff file doubles as the cache, keyed
+    on the embeddings file identity: warm runs skip training and pay
+    only the probe. Recall properties stay pinned in tests/test_ann.py
+    (nprobe=k ⇒ recall 1.0; monotone)."""
     from ..operators.ann import probe_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -595,7 +594,7 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     parquet, so the ``cluster_id isin(probes)`` filter is ON-DISK
     partition pruning (PartitionFilters in the scan, PLANS.md), not an
     in-memory filter over a recomputed assignment: warm calls skip
-    spark.ml AND the assignment pass entirely. The centroid table IS the
+    training AND the assignment pass entirely. The centroid table IS the
     oracle-handoff file (the PCA/BPE pattern): the oracle replays from
     exactly the centroids the index was assigned with."""
     import os
@@ -608,7 +607,7 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     cent_path = oracle_artifact_path(_IVF_CENTROIDS, sf_dir)
     idx_path = corpus_cache_path(
         os.path.join(sf_dir, "embeddings.parquet"),
-        f"ivf_idx_k{_IVF_K}_s{_IVF_SEED}_v1",
+        f"ivf_idx_k{_IVF_K}_s{_IVF_SEED}_v2",
         "/tmp/spark_graft_artifacts/ivf_index",
     )
     if not (
@@ -682,8 +681,8 @@ SELECT vec_id AS id, score FROM score ORDER BY score DESC, id ASC LIMIT 5
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT QUANTIZATION — the memory-scale ANN path beyond IVF and
     int8 (``embedding_quantize``): 64 unit-vector dims → 4 subspaces ×
-    16-entry codebooks (one seeded KMeans per subspace, cached per
-    corpus like the IVF centroids), every vector stored as 4 small
+    16-entry codebooks (k-means per subspace on one shared sample, cached
+    per corpus like the IVF centroids), every vector stored as 4 small
     codes, and queries scored by ASYMMETRIC DISTANCE — an m×ksub lookup
     table of query-to-codeword dots, so the scan never touches raw
     vectors. At 100 TB the codes table is ~16× smaller than the float32
@@ -692,8 +691,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULLY ORACLED like ann_ivf_kmeans: the persisted codebook parquet is
     the shared artifact; DuckDB replays normalize → per-subspace
-    rounded-argmin encode → LUT build → ADC top-5 from it. KMeans
-    training only produces the codebooks the oracle consumes."""
+    rounded-argmin encode → LUT build → ADC top-5 from it. Training
+    only produces the codebooks the oracle consumes."""
     from ..operators.ann import pq_adc_topk, pq_encode_np
 
     emb = load_table(spark, sf_dir, "embeddings")

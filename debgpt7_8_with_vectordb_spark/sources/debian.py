@@ -215,9 +215,6 @@ DEVREF_URL = (
     "developers-reference.en.txt"
 )
 
-_SEP_BY_LEVEL = {1: "***", 2: "===", 3: "---"}
-
-
 def split_manual_sections(text: str) -> list[tuple[str, str]]:
     """One scan over a plain-text manual whose section headers are
     underlined with '***'/'==='/'---' and start with a dotted number

@@ -11,6 +11,7 @@ from debgpt7_8_with_vectordb_spark.operators.ann import (
     build_ivf_index,
     probe_ivf,
 )
+from tests.test_loops import _jobs
 
 
 def recall_at_k(
@@ -82,3 +83,29 @@ def test_build_deterministic_with_seed(spark, sf_dir):
     assert sorted(map(tuple, a.select("id", "cluster_id").collect())) == sorted(
         map(tuple, b.select("id", "cluster_id").collect())
     )
+
+
+def test_build_runs_at_most_two_jobs(spark, sf_dir):
+    """Training reads one bounded sample (one job); the assignment pass
+    is the other. No per-iteration distributed passes."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    (_, cents), n_jobs = _jobs(
+        spark, "ivf_build", lambda: build_ivf_index(emb, k=8, seed=42)
+    )
+    assert len(cents) == 8
+    assert n_jobs <= 2
+
+
+def test_mostly_duplicate_corpus_gets_k_distinct_centroids(spark):
+    """Init takes the first k DISTINCT sampled vectors, so a corpus that
+    is mostly copies of one vector still yields k distinct centroids
+    when k distinct vectors exist."""
+    basis = [[1.0 if j == i else 0.0 for j in range(4)] for i in range(4)]
+    rows = [(i, basis[0]) for i in range(96)]
+    rows += [(96 + i, basis[i]) for i in range(1, 4)]
+    rows.append((99, [0.6, 0.8, 0.0, 0.0]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    indexed, cents = build_ivf_index(emb, k=5, seed=42)
+    assert len(cents) == 5
+    assert len({tuple(c) for c in cents}) == 5
+    assert indexed.select("cluster_id").distinct().count() == 5

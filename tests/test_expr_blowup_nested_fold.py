@@ -190,3 +190,15 @@ def test_unpaired_quote_in_unquoted_literal_stays_plain():
     # paired quotes still skip their parens
     s2 = "f('((' )x"
     assert audit._balanced_close(s2, 1) == 7
+
+
+def test_hash_embed_fold_evaluated_once_per_row(spark):
+    """l2_normalize binds its input once, so the 64-md5 fold of
+    hash_embed_expr appears once in the executed plan, not once per
+    reference the normalization makes."""
+    from debgpt7_8_with_vectordb_spark.operators.embedding import hash_embed_expr
+
+    df = spark.range(2).select(F.col("id").cast("string").alias("t"))
+    plan = _executed(df.select(hash_embed_expr(F.col("t"), 8).alias("v")))
+    assert plan.count("md5(") == 1
+    assert audit.find_invariant_lambda_exprs(plan) == 0

@@ -1,23 +1,28 @@
-"""Every top-level function and class in the package is reachable.
+"""Every top-level definition in the package is reachable.
 
 A static AST scan (no imports, no tracing) walks name references from
 the package's roots:
 
 - functions registered with ``@query`` or ``@register_source``;
-- module-level statements of every package module (assignments,
-  dispatch tables, decorators) — an import is a binding, not a use, so
-  module-level imports only resolve names;
+- module-level statements of every package module that are not
+  definitions (calls, dispatch-table updates, decorators) — an import
+  is a binding, not a use, so module-level imports only resolve names;
 - package ``__init__.py`` files, whose definitions and re-exports are the
   package's public surface;
 - ``cli.py`` and ``__main__.py``;
 - the entry-point module ``__spark_entry__.py``, ``bench.py`` and
   ``perfbench/*.py``.
 
-A name resolves through the module's own definitions and its imports
-(``from .x import f``, ``import a.b as m; m.f``), following re-exports.
-A definition that no root reaches is dead code and fails the test
-unless ``ALLOWLIST`` names it with the reason it stays. Allowlisted
-definitions count as roots, so their private helpers need no entry.
+Definitions are functions, classes and module-level assignments: a
+constant is reachable only when a root or a reachable definition reads
+it, and the names its value uses are reachable only through it. Dunder
+assignments (``__all__``) are read by the interpreter and count as
+roots. A name resolves through the module's own definitions and its
+imports (``from .x import f``, ``import a.b as m; m.f``), following
+re-exports. A definition that no root reaches is dead code and fails
+the test unless ``ALLOWLIST`` names it with the reason it stays.
+Allowlisted definitions count as roots, so their private helpers need
+no entry.
 """
 
 from __future__ import annotations
@@ -58,6 +63,28 @@ ALLOWLIST = {
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a module-level statement defines: a def/class name, or the
+    plain names an assignment binds (not subscript or attribute
+    targets, which mutate an existing object, and not dunders)."""
+    if isinstance(node, _DEFS):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+        and isinstance(n.ctx, ast.Store)
+        and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
+
+
 def _module_name(path: Path) -> str:
     parts = list(path.relative_to(REPO).with_suffix("").parts)
     if parts[-1] == "__init__":
@@ -70,7 +97,12 @@ class _Module:
         self.name = _module_name(path)
         self.is_pkg = path.name == "__init__.py"
         self.tree = ast.parse(path.read_text(), str(path))
-        self.defs = {n.name: n for n in self.tree.body if isinstance(n, _DEFS)}
+        # name -> every module-level statement defining it (first one
+        # gives the reported line)
+        self.defs: dict[str, list[ast.stmt]] = {}
+        for n in self.tree.body:
+            for name in _defined_names(n):
+                self.defs.setdefault(name, []).append(n)
         # local name -> (module, attribute or None for a module binding)
         self.aliases: dict[str, tuple[str, str | None]] = {}
         for node in ast.walk(self.tree):
@@ -159,22 +191,28 @@ def _scan(allowlist=ALLOWLIST):
     roots: set = set()
     for m in modules.values():
         whole_module_is_root = m.is_pkg or m.name in ROOT_MODULES
-        for name, node in m.defs.items():
+        for name, nodes in m.defs.items():
             key = ("def", m.name, name)
-            edges[key] = graph.refs(m, [node])
+            edges[key] = graph.refs(m, nodes)
             if (
                 whole_module_is_root
-                or any(_is_root_decorator(d) for d in node.decorator_list)
+                or any(
+                    _is_root_decorator(d)
+                    for n in nodes
+                    for d in getattr(n, "decorator_list", ())
+                )
                 or f"{m.name}.{name}" in allowlist
             ):
                 roots.add(key)
         statements = [
             n
             for n in m.tree.body
-            if not isinstance(n, _DEFS)
+            if not _defined_names(n)
             and (m.is_pkg or not isinstance(n, (ast.Import, ast.ImportFrom)))
         ]
-        decorators = [d for n in m.defs.values() for d in n.decorator_list]
+        decorators = [
+            d for n in m.tree.body if isinstance(n, _DEFS) for d in n.decorator_list
+        ]
         roots |= graph.refs(m, statements + decorators)
     for pattern in ROOT_FILES:
         for path in sorted(REPO.glob(pattern)):
@@ -195,10 +233,10 @@ def _scan(allowlist=ALLOWLIST):
 def test_every_package_definition_is_reachable():
     modules, reached = _scan()
     dead = [
-        f"{m.name}.{name} ({m.name.replace('.', '/')}.py:{node.lineno}, "
-        f"{node.end_lineno - node.lineno + 1} lines)"
+        f"{m.name}.{name} ({m.name.replace('.', '/')}.py:{nodes[0].lineno}, "
+        f"{nodes[0].end_lineno - nodes[0].lineno + 1} lines)"
         for m in modules.values()
-        for name, node in m.defs.items()
+        for name, nodes in m.defs.items()
         if ("def", m.name, name) not in reached
     ]
     assert not dead, (
