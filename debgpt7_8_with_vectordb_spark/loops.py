@@ -1,7 +1,7 @@
 """Driver-loop kit shared by the iterative operators.
 
-Every loop (connected components, paginated fetch, tree/compact reduce,
-BPE merge rounds, the corpus funnel) materializes a round with an eager
+Every loop (connected components, tree/compact reduce, BPE merge
+rounds, the corpus funnel) materializes a round with an eager
 ``localCheckpoint`` and reads its loop-control numbers off that same
 action, runs its rounds with AQE off and shuffle partitions sized from
 measured rows, and frees superseded rounds by exact checkpoint id.

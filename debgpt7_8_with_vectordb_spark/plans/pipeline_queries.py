@@ -243,8 +243,10 @@ def paginated_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15 recursive pagination (reference reader.py:586-670) as a
     catalog query: seed pages from the documents table (every 16th
     doc_id), walk the injected link graph — page://N links to
-    page://N+1 inside its 16-page archive — with the bounded
-    breadth-first driver loop in sources/fanout.py fetch_paginated.
+    page://N+1 inside its 16-page archive — with the task-local
+    breadth-first walk in sources/fanout.py fetch_paginated (one fetch
+    job whatever the archive depth). ``_chain_fetch`` is idempotent, as
+    that walk requires: a retried task re-fetches its whole walk.
 
     The link graph is deterministic, so the WHOLE walk — seeds, link
     following, per-page bodies, depths — is replayed by a recursive CTE

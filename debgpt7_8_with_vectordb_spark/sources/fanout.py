@@ -10,7 +10,10 @@ crossJoin — the F13 operator), and the fetch is an Arrow-batched
 cluster replaces the ThreadPool. Retry with bounded backoff lives inside
 the batch function (reference: tenacity 3×5s, reader.py:390-391); Spark
 task retries are the backstop (M5 hygiene: bounded attempts, idempotent
-batches).
+batches). Pagination (``fetch_paginated``) walks each task's link chains
+breadth-first inside that one fetch job, so its job count does not grow
+with archive depth; a retried task re-walks its chains, which the same
+idempotence covers.
 
 No network exists in this environment, so the transport is INJECTED
 (``fetcher``): tests pass a deterministic fake; production passes a
@@ -25,7 +28,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..loops import checkpoint_observed, loop_confs
+from ..loops import checkpoint_observed
 
 FETCHED_SCHEMA = "url string, status int, content string"
 
@@ -137,7 +140,7 @@ def fetch_urls_cached(
     return hits.union(fetched.withColumn("served_from", F.lit("fetch")))
 
 
-PAGED_SCHEMA = "url string, status int, content string, next_url string"
+WALKED_SCHEMA = "url string, depth int, status int, content string"
 
 
 def fetch_paginated(
@@ -147,104 +150,86 @@ def fetch_paginated(
 ) -> DataFrame:
     """S15 RECURSIVE pagination (reference reader.py:586-670: the
     mailing-list reader follows each page's 'next page' link until the
-    archive runs out): a bounded driver-loop page-walk.
+    archive runs out): a task-local breadth-first walk inside one fetch
+    job. Returns (url, depth, status, content).
 
-    ``fetcher(url) -> (status, content, next_url|None)``. Per round the
-    whole frontier fetches in parallel (Arrow-batched ``mapInArrow``),
-    the new links are LEFT-ANTI-joined against the visited set (cycle
-    safety), and the round's one action is the fetch's eager
-    ``localCheckpoint``. Rounds = max chain depth, not page count.
-    Returns (url, depth, status, content).
+    ``fetcher(url) -> (status, content, next_url|None)`` must be
+    idempotent: a retried task re-runs its whole walk. Each task of one
+    ``mapInArrow`` job reads all of its distinct seed URLs, marks them
+    seen, then fetches level by level for up to ``max_pages`` levels,
+    following a next link only if it is not yet seen. Rows leave the
+    task level by level in batches of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``; only URLs are held
+    across levels. The walk is pinned by one eager ``localCheckpoint``.
 
-    - Fetch-once: every fetch result is pinned by its eager checkpoint
-      before anything reads it; the visited set is a union of
-      projections of those checkpoints, so no plan can re-run a fetch.
-    - Retry-safe gates: loop control reads accumulators filled in the
-      fetch pass and tests only ``== 0`` — a retried task can inflate a
-      positive count but never turn zero into positive or back.
-    - The seed dedup runs with AQE on; the rounds run in
-      :func:`loop_confs`, sized from the previous round's link count.
+    - For a deterministic fetcher, each page reachable within
+      ``max_pages - 1`` hops of a seed appears once, at its minimum
+      depth over all seeds: one frontier partition is one global BFS;
+      with more, the rows reduce to ``min(struct(depth, status,
+      content))`` per url, lazily over the checkpoint (no shuffle on the
+      single-partition path).
+    - Cycles terminate: a seen URL is never followed again.
+    - A fetch that raises gives status 598 with empty content and ends
+      that chain.
+    - Empty seeds (or ``max_pages=0``) cost one job and never call the
+      fetcher.
+    - Fetch-once per task: a page is fetched at most once within a task;
+      a page reached from two tasks' seeds is fetched once per task, so
+      duplicate work is bounded by the frontier's partition count.
     """
-
     spark = seeds.sparkSession
-    sc = spark.sparkContext
-    acc: DataFrame = spark.createDataFrame(
-        [], "url string, status int, content string, next_url string, depth int"
-    )
     frontier, m = checkpoint_observed(
         seeds.select("url").distinct(), n=F.count(F.lit(1))
     )
-    n_frontier = m["n"]
-    visited_parts = [frontier.select("url")]  # + each round's nxt projection
-    # ~500k ≈ 32 MB of url keys per reduce partition
-    with loop_confs(spark, n_frontier, 500_000) as resize:
+    if m["n"] == 0 or max_pages <= 0:
+        return spark.createDataFrame([], WALKED_SCHEMA)
+    # <= 0 is Spark's "no limit": a non-empty level never reaches it
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def walk(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        import pyarrow as pa
+
+        def emit(rows, depth):
+            urls, st, ct = zip(*rows)
+            return pa.record_batch(
+                [
+                    pa.array(urls, pa.string()),
+                    pa.array([depth] * len(urls), pa.int32()),
+                    pa.array(st, pa.int32()),
+                    pa.array(ct, pa.string()),
+                ],
+                names=["url", "depth", "status", "content"],
+            )
+
+        level = [u for b in batches for u in b.column("url").to_pylist()]
+        seen = set(level)
         for depth in range(max_pages):
-            if n_frontier == 0:
+            rows, nxt_level = [], []
+            for url in level:
+                try:
+                    status, body, nxt = fetcher(url)
+                except Exception:
+                    status, body, nxt = 598, "", None
+                rows.append((url, status, body))
+                if len(rows) == batch_rows:
+                    yield emit(rows, depth)
+                    rows = []
+                if nxt is not None and nxt not in seen:
+                    seen.add(nxt)
+                    nxt_level.append(nxt)
+            if rows:
+                yield emit(rows, depth)
+            if not nxt_level:
                 break
-            resize(n_frontier)
-            a_rows = sc.accumulator(0)
-            a_links = sc.accumulator(0)
+            level = nxt_level
 
-            def run(
-                batches: "Iterator[pa.RecordBatch]", _r=a_rows, _l=a_links
-            ) -> "Iterator[pa.RecordBatch]":
-                import pyarrow as pa
-
-                for batch in batches:
-                    urls = batch.column("url").to_pylist()
-                    st, ct, nx = [], [], []
-                    links = 0
-                    for url in urls:
-                        try:
-                            status, body, nxt = fetcher(url)
-                        except Exception:
-                            status, body, nxt = 598, "", None
-                        st.append(status)
-                        ct.append(body)
-                        nx.append(nxt)
-                        if nxt is not None:
-                            links += 1
-                    _r.add(len(urls))
-                    _l.add(links)
-                    yield pa.record_batch(
-                        [
-                            pa.array(urls, pa.string()),
-                            pa.array(st, pa.int32()),
-                            pa.array(ct, pa.string()),
-                            pa.array(nx, pa.string()),
-                        ],
-                        names=["url", "status", "content", "next_url"],
-                    )
-
-            fetched = (
-                frontier.mapInArrow(run, schema=PAGED_SCHEMA)
-                .withColumn("depth", F.lit(depth))
-                .localCheckpoint(eager=True)
-            )
-            if a_rows.value == 0:
-                # lazily-built frontier turned out empty (every candidate
-                # link was already visited — cyclic/converging archive)
-                break
-            acc = acc.union(fetched.select(*acc.columns))
-            if a_links.value == 0:
-                break  # no page in this round links onward: walk is done
-            nxt = (
-                fetched.filter(F.col("next_url").isNotNull())
-                .select(F.col("next_url").alias("url"))
-                .distinct()
-            )
-            visited = visited_parts[0]
-            for p in visited_parts[1:]:
-                visited = visited.union(p)
-            # lazy: compiles into the NEXT round's fetch job
-            frontier = nxt.join(visited, "url", "left_anti")
-            n_frontier = a_links.value  # ≥ true frontier size: sizing + gate
-            visited_parts.append(
-                fetched.select(F.col("next_url").alias("url")).filter(
-                    F.col("url").isNotNull()
-                )
-            )
-    return acc.select("url", "depth", "status", "content")
+    walked = frontier.mapInArrow(walk, schema=WALKED_SCHEMA).localCheckpoint(
+        eager=True
+    )
+    if frontier.rdd.getNumPartitions() == 1:
+        return walked
+    best = F.min(F.struct("depth", "status", "content")).alias("best")
+    return walked.groupBy("url").agg(best).select("url", "best.*")
 
 
 def clean_fetched(fetched: DataFrame) -> DataFrame:

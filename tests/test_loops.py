@@ -92,6 +92,25 @@ def test_fetch_paginated_frontier_count_rides_checkpoint(spark):
     assert out.count() == 0
 
 
+def test_fetch_paginated_jobs_do_not_grow_with_depth(spark):
+    """The whole walk is the seed checkpoint plus one fetch job: a
+    4-page and an 8-page chain cost the same jobs, at most 3."""
+
+    def fetcher(url):
+        n = int(url.rsplit("/", 1)[1])
+        return 200, "x", f"p:/{n + 1}"
+
+    seeds = spark.createDataFrame([("p:/0",)], "url string")
+    counts = []
+    for pages in (4, 8):
+        out, n_jobs = _jobs(
+            spark, f"kit-fetch-{pages}", lambda: fetch_paginated(seeds, fetcher, pages)
+        )
+        assert out.count() == pages
+        counts.append(n_jobs)
+    assert counts[0] == counts[1] <= 3, counts
+
+
 def _cc_case(spark, tmp_path):
     nodes = spark.range(6).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
