@@ -19,6 +19,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from .bind import let
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -41,19 +43,10 @@ def l2_norm(v: Column) -> Column:
 def l2_normalize(v: Column) -> Column:
     """v / ‖v‖₂ with a zero-vector guard (reference embeddings.py:138-139).
 
-    The norm must NOT sit inside the per-element lambda:
-    ``transform(v, x -> x / norm)`` re-evaluates the aggregate fold for
-    EVERY element (higher-order functions are CodegenFallback — nothing
-    hoists the invariant subtree), turning O(d) into O(d²) per row.
-    ``array_repeat`` evaluates its element argument exactly once, so
-    zipping against a repeated-norm array keeps the fold at one
-    evaluation per row (audited by tools/expr_blowup_audit.py's
-    nested-fold detector).
-
-    The normalization references its input five times, and nothing
-    deduplicates a higher-order input, so ``v`` is bound once as the
-    lambda variable of a one-element ``transform``: an expensive input
-    (``hash_embed_expr``'s md5 fold) is evaluated once per row."""
+    The norm is zipped in as ``array_repeat(norm, size)``, which
+    evaluates it once; dividing by it inside a per-element lambda would
+    re-run the fold per element. ``v`` is bound with :func:`let`
+    because the normalization reads it five times."""
 
     def normalize(r: Column) -> Column:
         vd = _as_double(r)
@@ -62,7 +55,7 @@ def l2_normalize(v: Column) -> Column:
             F.zip_with(vd, F.array_repeat(norm, F.size(r)), lambda x, n: x / n)
         )
 
-    return F.element_at(F.transform(F.array(v), normalize), 1)
+    return let(v, normalize)
 
 
 def truncate_dim(v: Column, dim: int) -> Column:

@@ -14,17 +14,20 @@ pipeline applies before dedup:
 - at least 2 of the 8 paper stopwords (the/be/to/of/and/that/have/with)
   — the "is this prose at all" check.
 
-Everything is JVM-side Catalyst expressions over one staged projection
-(the round-5 rule: tokenize once, reference columns after) — zero
-Python, zero shuffle, whole-stage-codegen territory; the signals come
-back as columns so a corpus monitor can see WHICH gate fires, and
-``gopher_quality_filter`` applies the conjunction.
+Everything is JVM-side Catalyst expressions — zero Python, zero
+shuffle. The word and line arrays (and C4's kept lines) are bound once
+with ``functions.bind.materialize``, so composed passes and the
+gate filter read attributes instead of re-splitting the text. The
+signals come back as columns so a corpus monitor can see WHICH gate
+fires, and ``gopher_quality_filter`` applies the conjunction.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..functions.bind import materialize
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -38,10 +41,12 @@ def gopher_quality_signals(
 ) -> DataFrame:
     """Adds the signal columns; see module doc for the rule set."""
     text = F.coalesce(F.col(text_col), F.lit(""))
-    staged = docs.withColumn(
-        "_words",
-        F.filter(F.split(text, "[ \t\r\n\f\v]+"), lambda w: w != ""),
-    ).withColumn("_lines", F.filter(F.split(text, "\n"), lambda l: F.trim(l) != ""))
+    staged = materialize(
+        docs,
+        docs.columns,
+        _words=F.filter(F.split(text, "[ \t\r\n\f\v]+"), lambda w: w != ""),
+        _lines=F.filter(F.split(text, "\n"), lambda l: F.trim(l) != ""),
+    )
     n_words = F.size("_words")
     n_lines = F.size("_lines")
     total_chars = F.aggregate(
@@ -116,7 +121,7 @@ def c4_clean_lines(
     surviving lines and report how many were dropped. Documents whose
     every line drops keep an empty string (the caller's length floor
     decides their fate). All JVM expressions — one split, HOF filters,
-    re-join."""
+    re-join; the line array and the kept lines are each bound once."""
     text = F.coalesce(F.col(text_col), F.lit(""))
     lines = F.filter(F.split(text, "\n"), lambda l: F.trim(l) != "")
     keep = lambda l: (  # noqa: E731
@@ -133,13 +138,14 @@ def c4_clean_lines(
         & ~F.lower(l).rlike("javascript")
         & ~F.lower(l).rlike("cookie")
     )
-    return docs.withColumn("_lines", lines).select(
-        *[c for c in docs.columns if c != text_col],
-        F.array_join(F.filter("_lines", keep), "\n").alias(text_col),
+    rest = [c for c in docs.columns if c != text_col]
+    staged = materialize(docs, rest, _lines=lines)
+    staged = materialize(staged, [*rest, "_lines"], _kept=F.filter("_lines", keep))
+    return staged.select(
+        *rest,
+        F.array_join("_kept", "\n").alias(text_col),
         F.size("_lines").alias("lines_total"),
-        (F.size("_lines") - F.size(F.filter("_lines", keep))).alias(
-            "lines_dropped"
-        ),
+        (F.size("_lines") - F.size("_kept")).alias("lines_dropped"),
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _STREAM_SINK_SEQ = itertools.count()
 
+from ..functions.bind import let
 from ..functions.web import normalize_url_column
 from ..loops import capped_partitions
 from ..operators.crawl import curate_crawl, expand_sitemaps
@@ -170,27 +171,25 @@ def gopher_signals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _c4_lines_from_words(words):
-    """Chunk a MATERIALIZED words column into suffix-cycled lines.
-
-    ``words`` must be a bare column attribute behind an optimization
-    barrier, NOT the split/filter expression itself: referenced inside
-    the transform lambda, Catalyst's projection collapse would inline
-    the full tokenize and re-run it PER CHUNK — O(words x chunks) per
-    doc, the same invariant-expr-in-lambda class the expr-blowup audit
-    flags (r12; the fold variant was l2_normalize)."""
-    n_chunks = F.greatest(F.ceil(F.size(words) / 5), F.lit(1)).cast("int")
+    """Chunk a word array into suffix-cycled lines of 5 words. Every
+    chunk reads the array, so it is bound with :func:`let`."""
     suffix = lambda i: (  # noqa: E731
         F.when(i % 3 == 0, F.lit("."))
         .when(i % 3 == 1, F.lit(""))
         .otherwise(F.lit(" javascript needed"))
     )
-    lines = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat(
-            F.array_join(F.slice(words, i * 5 + 1, 5), " "), suffix(i)
-        ),
-    )
-    return F.array_join(lines, "\n")
+
+    def chunk(ws):
+        n_chunks = F.greatest(F.ceil(F.size(ws) / 5), F.lit(1)).cast("int")
+        lines = F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.concat(
+                F.array_join(F.slice(ws, i * 5 + 1, 5), " "), suffix(i)
+            ),
+        )
+        return F.array_join(lines, "\n")
+
+    return let(words, chunk)
 
 
 _C4_LINES_SQL = """
@@ -244,20 +243,11 @@ def c4_line_clean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate-phrase drop) over a derived multi-line corpus. The
     suffix cycle makes every rule fire; the oracle replays the identical
     HOF pipeline. Pure Catalyst, zero shuffle, scan-bound at 100 TB."""
-    # tokenize ONCE per doc behind a single-element struct-explode
-    # Generate barrier (the audit's fix pattern), then chunk from the
-    # materialized words attribute
-    docs = (
-        fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
-        .select(
-            "doc_id",
-            F.filter(F.split("text", r"\s+"), lambda w: w != "").alias(
-                "words"
-            ),
-        )
-        .select(F.explode(F.array(F.struct("doc_id", "words"))).alias("s"))
-        .select("s.doc_id", "s.words")
-        .select("doc_id", _c4_lines_from_words(F.col("words")).alias("text"))
+    docs = fan_out(load_table(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id",
+        _c4_lines_from_words(
+            F.filter(F.split("text", r"\s+"), lambda w: w != "")
+        ).alias("text"),
     )
     return c4_clean_lines(docs).select(
         "doc_id", "text", "lines_total", "lines_dropped"

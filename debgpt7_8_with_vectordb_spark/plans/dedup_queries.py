@@ -17,6 +17,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from ..functions.bind import materialize
 from ..functions.hashing import md5_long
 from ..functions.rounding import (
     half_up_ratio_nonneg,
@@ -136,19 +137,8 @@ def _ngram_jaccard_from(
     way at sf0.1), and materializing the whole corpus's token sets is
     exactly what you don't want at 100 TB.
 
-    EXACTLY-ONCE intersect (round 6): `inter` is referenced by the
-    admission filter AND the output ratio, and Catalyst's projection
-    collapse + filter pushdown inline the alias at every reference —
-    the whole query re-evaluated array_intersect ~3× per surviving
-    pair (measured 1.96 s at sf0.1 vs 0.60 s for a single-intersect
-    pass; this drift is what pushed the query to 1.96× of its r1
-    anchor, VERDICT r5 watch item). The struct-explode below is a
-    Generate BARRIER: projections don't collapse across it and the
-    admission filter can't push through it (it references generator
-    output), so the intersect is computed exactly once per pair and
-    everything above touches plain long attributes. Cost: one O(1)
-    single-element explode per pair. Re-measured: 0.60 s at sf0.1 —
-    0.65× of the r1 anchor, identical rows."""
+    The admission filter and the output ratio both read ``inter``, so
+    it is bound with :func:`materialize`."""
     t = docs.select(
         "doc_id",
         "lang",
@@ -160,30 +150,18 @@ def _ngram_jaccard_from(
     a = t.alias("a")
     b = t.alias("b")
     na, nb = F.size("a.hs"), F.size("b.hs")
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.len_band") == F.col("b.len_band"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).filter(
-        F.least(na, nb).cast("double") >= ratio * F.greatest(na, nb).cast("double")
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.size(F.array_intersect("a.hs", "b.hs")).cast("long").alias("inter"),
-        (na + nb).cast("long").alias("total"),
-    )
-    # Generate barrier: intersect evaluated exactly once per pair (see
-    # docstring); inter/total above this point are cheap attributes
-    pairs = pairs.select(
-        "doc_a",
-        "doc_b",
-        F.explode(F.array(F.struct("inter", "total"))).alias("it"),
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.col("it.inter").alias("inter"),
-        F.col("it.total").alias("total"),
+    pairs = materialize(
+        a.join(
+            b,
+            (F.col("a.lang") == F.col("b.lang"))
+            & (F.col("a.len_band") == F.col("b.len_band"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).filter(
+            F.least(na, nb).cast("double") >= ratio * F.greatest(na, nb).cast("double")
+        ),
+        [F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")],
+        inter=F.size(F.array_intersect("a.hs", "b.hs")).cast("long"),
+        total=(na + nb).cast("long"),
     )
     # Exact-integer 6dp jaccard (round 5, _jac_units): the division-
     # by-zero guard lives INSIDE the expression (greatest(union, 1) —
@@ -250,7 +228,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets. (First cut hashed each token 16× through md5 and shuffled a
     (doc × perm) explosion — 6× slower at sf0.1; measure, don't guess.)
     """
-    return _minhash_candidates(spark, sf_dir)
+    return _band_pairs(minhash_signature_table(spark, sf_dir))
 
 
 def minhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,24 +265,8 @@ def minhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_plan_cached(spark, path)
 
 
-def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = minhash_signature_table(spark, sf_dir)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def _minhash_candidates_from(docs: DataFrame) -> DataFrame:
-    bands = _minhash_bands_from(docs)
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing any (band, sig)."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -335,50 +297,35 @@ def _minhash_bands_from(docs: DataFrame, persist: bool = True) -> DataFrame:
         ).alias("bases"),
     ).filter(F.size("bases") > 0)  # token-less docs have no signature
 
-    # The mh array is BOUND as a lambda variable (single-element-array
-    # transform, the word_shingles trick) before the band sigs slice it:
-    # projecting mh through a plain select and slicing F.col("mh") lets
-    # CollapseProject inline the 32-permutation transform into every
-    # consumer (2 sigs + the mh column = 3 evaluations — measured 6.2 s
-    # vs 2.9 s for this checkpoint at sf0.1, the round-4 corpus_pipeline
-    # regression). The explode is a Generate barrier, so downstream
-    # projections can never pull the expensive subtree past it.
-    mh_expr = F.transform(
-        F.sequence(F.lit(0), F.lit(N_PERMS - 1)),
-        lambda p: F.array_min(
-            F.transform(
-                F.col("bases"), lambda x: ((1 + 2 * p) * x + 7919 * p) % _MH_P
-            )
+    # every band sig slices mh, so it is bound once
+    packed = materialize(
+        based,
+        ["doc_id"],
+        mh=F.transform(
+            F.sequence(F.lit(0), F.lit(N_PERMS - 1)),
+            lambda p: F.array_min(
+                F.transform(
+                    F.col("bases"), lambda x: ((1 + 2 * p) * x + 7919 * p) % _MH_P
+                )
+            ),
         ),
     )
-    n_bands = N_PERMS // BAND_SIZE
-    packed = based.select(
+    bands = packed.select(
         "doc_id",
-        F.explode(
+        F.posexplode(
             F.transform(
-                F.array(mh_expr),
-                lambda mh: F.struct(
-                    mh.alias("mh"),
+                F.sequence(F.lit(0), F.lit(N_PERMS // BAND_SIZE - 1)),
+                lambda b: F.array_join(
                     F.transform(
-                        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                        lambda b: F.struct(
-                            b.cast("int").alias("band"),
-                            F.array_join(
-                                F.transform(
-                                    F.slice(mh, b * BAND_SIZE + 1, F.lit(BAND_SIZE)),
-                                    lambda v: v.cast("string"),
-                                ),
-                                ",",
-                            ).alias("sig"),
-                        ),
-                    ).alias("bands"),
+                        F.slice("mh", b * BAND_SIZE + 1, F.lit(BAND_SIZE)),
+                        lambda v: v.cast("string"),
+                    ),
+                    ",",
                 ),
             )
-        ).alias("x"),
+        ).alias("band", "sig"),
+        "mh",
     )
-    bands = packed.select(
-        "doc_id", F.col("x.mh").alias("mh"), F.explode("x.bands").alias("bs")
-    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"), "mh")
     # materialize signatures ONCE for in-memory (DataFrame-input)
     # callers: the self-join broadcasts one side, so without this the
     # md5+32-permutation subtree executes twice. The sf_dir-backed
@@ -458,15 +405,20 @@ def verified_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/tmp/spark_graft_verified_pairs",
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _verify_candidates(spark, sf_dir).write.mode("overwrite").parquet(path)
+        _verify_candidates(
+            _band_pairs(minhash_signature_table(spark, sf_dir)),
+            load_table(spark, sf_dir, "documents"),
+        ).write.mode("overwrite").parquet(path)
     from ..tables import read_parquet_plan_cached
 
     return read_parquet_plan_cached(spark, path)
 
 
-def _verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    cand = _minhash_candidates(spark, sf_dir)
+def _verify_candidates(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs whose exact
+    token-hash-set jaccard is >= 0.8, after the 0.8 size-ratio
+    prefilter. ``inter`` feeds both the threshold and the output, so it
+    is bound with :func:`materialize`."""
     toksets = docs.select(
         "doc_id",
         F.array_distinct(
@@ -488,11 +440,14 @@ def _verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter = F.least(na, nb).cast("double") >= 0.8 * F.greatest(na, nb).cast(
         "double"
     )
-    inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
-    total = (na + nb).cast("long")
-    ju = _jac_units(inter, total)
+    ju = _jac_units(F.col("inter"), F.col("total"))
     return (
-        pairs.filter(prefilter)
+        materialize(
+            pairs.filter(prefilter),
+            ["doc_a", "doc_b"],
+            inter=F.size(F.array_intersect("hs_a", "hs_b")).cast("long"),
+            total=(na + nb).cast("long"),
+        )
         .filter(ju >= 800_000)
         .select("doc_a", "doc_b", (ju.cast("double") / 1e6).alias("jaccard"))
     )
@@ -642,31 +597,7 @@ def dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("digest")
     )
     sizes = reps.select("doc_id", "class_size")
-    cand = _minhash_candidates_from(reps)
-    toksets = reps.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(distinct_tokens(F.col("text")), lambda t: md5_long(t) % _MH_P)
-        ).alias("hs"),
-    )
-    pairs = (
-        # unhinted (see _verify_candidates): toksets grows with the
-        # distinct-text count; AQE decides broadcast vs shuffle.
-        cand.join(toksets.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("hs", "hs_a")
-        .join(toksets.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .withColumnRenamed("hs", "hs_b")
-    )
-    na, nb = F.size("hs_a"), F.size("hs_b")
-    prefilter = F.least(na, nb).cast("double") >= 0.8 * F.greatest(na, nb).cast("double")
-    inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
-    total = (na + nb).cast("long")
-    ju = _jac_units(inter, total)
-    verified = (
-        pairs.filter(prefilter)
-        .filter(ju >= 800_000)
-        .select("doc_a", "doc_b", (ju.cast("double") / 1e6).alias("jaccard"))
-    )
+    verified = _verify_candidates(_band_pairs(_minhash_bands_from(reps)), reps)
     return (
         # unhinted: sizes is one row per distinct text — corpus-scale.
         verified.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -762,6 +693,12 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(ticket < 10000 * rate).select("doc_id", "lang", "source")
 
 
+def batch_split(docs: DataFrame) -> int:
+    """First doc_id of the incremental batch, max(doc_id) / 2 truncated,
+    fetched to the driver; lower doc_ids are the prior corpus."""
+    return docs.agg((F.max("doc_id") / 2).cast("long")).head()[0]
+
+
 @query(
     "dedup_incremental",
     oracle="""
@@ -790,7 +727,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free. Near-dup incremental = the same anti-join on
     (band, sig) against the persisted signature table."""
     docs = load_table(spark, sf_dir, "documents")
-    split = docs.agg((F.max("doc_id") / 2).cast("long")).head()[0]
+    split = batch_split(docs)
     digest = F.md5(F.col("text").cast("binary"))
     prior = (
         docs.filter(F.col("doc_id") < split).select(digest.alias("digest")).distinct()
@@ -839,24 +776,16 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the train side is 100 TB), so it BROADCASTS: the check is one
     map-side join + per-doc count, no shuffle of the train corpus at
     all. Shingles are distinct-per-doc before the join, so count(*)
-    after it IS the distinct shared count.
-
-    Exactly-once shingling (round 6, the dedup_ngram_jaccard lesson):
-    the train branch references ``hs`` twice (size + explode), and
-    projection collapse re-inlined the shingle+md5+distinct tree at
-    each reference — the plan-marker audit showed the expression 3× in
-    the optimized plan. The single-element struct-explode below is a
-    Generate barrier making ``hs`` a plain attribute downstream;
-    measured 1.33 s → 0.68 s at sf0.1, identical rows (the win flows
-    into contamination_filter, which composes this)."""
+    after it IS the distinct shared count. The train branch reads
+    ``hs`` twice (size and explode), so it is bound with
+    :func:`materialize`."""
     docs = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = tokens(F.col("text"))
-    sh = docs.filter(F.size(toks) >= 3).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(word_shingles(F.col("text"), 3), md5_long)
-        ).alias("hs0"),
-    ).select("doc_id", F.explode(F.array("hs0")).alias("hs"))
+    sh = materialize(
+        docs.filter(F.size(toks) >= 3),
+        ["doc_id"],
+        hs=F.array_distinct(F.transform(word_shingles(F.col("text"), 3), md5_long)),
+    )
     ev = (
         sh.filter(F.col("doc_id") % 97 == 0)
         .select(F.explode("hs").alias("h"))
@@ -1340,7 +1269,7 @@ def dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped agg; both inputs are equi-join-blocked, so the gate scales
     like the queries it audits."""
     truth = jaccard_truth_table(spark, sf_dir)
-    cand = _minhash_candidates(spark, sf_dir).withColumn("hit", F.lit(1))
+    cand = _band_pairs(minhash_signature_table(spark, sf_dir)).withColumn("hit", F.lit(1))
     return _recall_tiers(spark, truth, cand)
 
 
@@ -1779,8 +1708,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch side is one day's delta; the screen is a band equi-join +
     left-anti/semi split, never touching prior TEXT at all. Same split
     convention as dedup_incremental (max(doc_id)//2)."""
-    docs = load_table(spark, sf_dir, "documents")
-    split = docs.agg((F.max("doc_id") / 2).cast("long")).head()[0]
+    split = batch_split(load_table(spark, sf_dir, "documents"))
     bands = minhash_signature_table(spark, sf_dir).select("doc_id", "band", "sig")
     prior = (
         bands.filter(F.col("doc_id") < split).select("band", "sig").distinct()

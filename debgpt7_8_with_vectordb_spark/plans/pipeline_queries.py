@@ -447,10 +447,13 @@ def stream_neardup_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Drained result ≡ the batch oracle — the equality that proves the
     streaming screen computes exactly the relational semantics."""
-    from ..plans.dedup_queries import _minhash_bands_from, minhash_signature_table
+    from ..plans.dedup_queries import (
+        _minhash_bands_from,
+        batch_split,
+        minhash_signature_table,
+    )
 
-    docs = load_table(spark, sf_dir, "documents")
-    split = docs.agg((F.max("doc_id") / 2).cast("long")).head()[0]
+    split = batch_split(load_table(spark, sf_dir, "documents"))
     prior = (
         minhash_signature_table(spark, sf_dir)
         .filter(F.col("doc_id") < split)

@@ -581,7 +581,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
-    qv = [float(x) for x in indexed.filter("id = 2").select("nv").head()[0]]
+    qv = get_query_vector(indexed, 2, id_col="id", vec_col="nv")
     return probe_ivf(indexed, centroids, qv, nprobe=2, topk=5)
 
 
@@ -701,7 +701,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
+    qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     codes = pq_encode_np(normed, books)
     return pq_adc_topk(codes, books, qv, topk=5)
 
@@ -833,7 +833,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
+    qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     qlit = F.array(*[F.lit(float(x)) for x in qv])
     exact = (
         normed.select(
@@ -938,7 +938,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
+    qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     probe = select_probes(centroids, qv, nprobe=2)
     cand = indexed.filter(F.col("cluster_id").isin(probe)).select("id", "nv")
     return pq_adc_topk(pq_encode_np(cand, books), books, qv, topk=5)
@@ -1016,7 +1016,7 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
     )
     books = _pq_codebooks_cached(spark, sf_dir, normed)
-    qv = [float(x) for x in normed.filter("id = 2").select("nv").head()[0]]
+    qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     qlit = F.array(*[F.lit(float(x)) for x in qv])
     short = pq_adc_topk(pq_encode_np(normed, books), books, qv, topk=50).select("id")
     return (
@@ -1087,10 +1087,7 @@ def ann_srp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = len(emb.select("embedding").head()[0])
     planes = _srp_planes(dim)
     sigs = srp_signatures(emb.select("vec_id", "embedding"), planes)
-    qv = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 2).select("embedding").head()[0]
-    ]
+    qv = get_query_vector(emb, 2)
     qbits = (
         np.round(
             np.asarray(qv, dtype=np.float64) @ np.asarray(planes, dtype=np.float64).T,
@@ -1169,7 +1166,7 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id filter can't push BELOW mapInPandas)
     import numpy as np
 
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 2).select("embedding").head()[0]]
+    qv = get_query_vector(emb, 2)
     qbits = np.round(np.asarray(qv, dtype=np.float64) @ np.asarray(planes, dtype=np.float64).T, 6) >= 0
     qsig = "".join("1" if b else "0" for b in qbits)
     qlit = F.array(*[F.lit(x) for x in qv])

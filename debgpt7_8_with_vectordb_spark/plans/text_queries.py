@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.bind import let
 from ..functions.hashing import md5_long
 from ..functions.text import char_shingles, tokens, word_shingles
 from ..loops import checkpoint_observed, loop_confs, release
@@ -1570,14 +1571,8 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # bind the hash array ONCE per row (the word_shingles trick) —
-    # referencing `hs` inside the window lambda would recompute the
-    # whole shingle+md5 subtree per window
-    mins = F.element_at(
-        F.transform(F.array(hs), lambda arr: mins_of(arr)), 1
-    )
     return docs.select(
-        "doc_id", F.explode(F.array_distinct(mins)).alias("fp")
+        "doc_id", F.explode(F.array_distinct(let(hs, mins_of))).alias("fp")
     )
 
 

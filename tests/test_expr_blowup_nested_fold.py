@@ -6,13 +6,15 @@ O(n^3) case pegged a core 25+ minutes before the fold was hoisted).
 The detector lives in tools/expr_blowup_audit.py (find_nested_folds);
 these tests plant an offender through a real Spark plan and pin that
 benign shapes (a top-level fold; a fold's own merge lambda) stay
-unflagged.
+unflagged. The last test pins the executed-plan marker counts of the
+queries that bind values with functions.bind.
 """
 
 import importlib.util
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 _here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
@@ -202,3 +204,32 @@ def test_hash_embed_fold_evaluated_once_per_row(spark):
     plan = _executed(df.select(hash_embed_expr(F.col("t"), 8).alias("v")))
     assert plan.count("md5(") == 1
     assert audit.find_invariant_lambda_exprs(plan) == 0
+
+
+#: Executed-plan marker counts at sf0.001 for the queries that reach a
+#: ``functions.bind`` site. They are ceilings: an expensive expression
+#: that the optimizer copies past its binding raises a count. Before the
+#: helpers, c4_line_clean carried split( 4 times and dedup_pipeline
+#: array_intersect 6 times; every other count is unchanged.
+BOUND_SITE_MARKERS = {
+    "dedup_ngram_jaccard": {"md5(": 2, "split(": 2, "array_intersect": 1},
+    "dedup_minhash_lsh": {},
+    "dedup_pipeline": {"md5(": 4, "array_intersect": 1},
+    "contamination_check": {"md5(": 2, "split(": 6},
+    "contamination_filter": {"md5(": 2, "split(": 6},
+    "c4_line_clean": {"split(": 3},
+    "gopher_signals": {"split(": 2, "array_intersect": 1, "aggregate(": 1},
+    "winnow_fingerprints": {"md5(": 1},
+    "vector_normalize": {"aggregate(": 5, "zip_with": 2},
+}
+PINNED_MARKERS = ("md5(", "split(", "array_intersect", "aggregate(", "zip_with")
+
+
+@pytest.mark.parametrize("name", sorted(BOUND_SITE_MARKERS))
+def test_bound_sites_do_not_multiply_markers(spark, sf_dir, name):
+    from debgpt7_8_with_vectordb_spark.plans import QUERIES
+
+    plan = _executed(QUERIES[name](spark, sf_dir))
+    counts = {m: plan.count(m) for m in PINNED_MARKERS}
+    ceilings = {m: BOUND_SITE_MARKERS[name].get(m, 0) for m in PINNED_MARKERS}
+    assert all(counts[m] <= ceilings[m] for m in PINNED_MARKERS), (counts, ceilings)

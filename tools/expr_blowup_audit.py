@@ -6,13 +6,22 @@ expensive per-row tree (array_intersect, shingle+md5+distinct, a fold)
 referenced by both a filter and a projection is re-evaluated per
 reference — a silent 2-5× CPU tax invisible to row-count correctness.
 
-This audit compiles every headline query and compares occurrence
+This audit compiles every headline query, plus the compositions in
+COMPOSITIONS that no registered query builds, and compares occurrence
 counts of expensive-expression markers between the ANALYZED plan (what
 the query declares) and the OPTIMIZED physical plan (what will run).
 Optimization must not multiply expensive work: a count that grows by
-2+ is flagged. Fix pattern: a single-element struct-explode (Generate
-barrier) between the expensive projection and its consumers — see
-_ngram_jaccard_from / contamination_check.
+2+ is flagged. Fix pattern: bind the value once with
+``functions.bind.let`` (consumed inside one expression) or
+``functions.bind.materialize`` (read by several columns or a later
+filter).
+
+Blind spot: duplication DECLARED in the code is in both plans, so the
+comparison cannot see it — ``c4_clean_lines`` wrote
+``filter(_lines, keep)`` twice and the analyzed count already carried
+both copies. Repeated expensive expressions in the source need the same
+helpers; tests/test_expr_blowup_nested_fold.py pins absolute marker
+counts for the queries that use them.
 
 Known-benign (suppressed):
 - pii_redact: regexp_count is REWRITTEN to size(regexp_extract_all)
@@ -206,6 +215,24 @@ def _invariant_in_lambda(plan: str, pattern: "re.Pattern[str]") -> int:
     return count
 
 
+def _curate_quality(spark, sf_dir):
+    """The curate workload's quality pass: C4 line cleaning feeding the
+    Gopher gates, the composition where filter pushdown once inlined
+    the cleaned text into every gate."""
+    from debgpt7_8_with_vectordb_spark.operators.quality_rules import (
+        c4_clean_lines,
+        gopher_quality_filter,
+    )
+    from debgpt7_8_with_vectordb_spark.tables import load_table
+
+    return gopher_quality_filter(
+        c4_clean_lines(load_table(spark, sf_dir, "documents"))
+    )
+
+
+COMPOSITIONS = {"curate_quality": _curate_quality}
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -216,11 +243,14 @@ def main() -> int:
     spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     flags = 0
-    for name in bench.HEADLINE:
-        if name in SKIP or name not in QUERIES:
-            continue
+    targets = [
+        (name, QUERIES[name])
+        for name in bench.HEADLINE
+        if name not in SKIP and name in QUERIES
+    ]
+    for name, build in targets + list(COMPOSITIONS.items()):
         try:
-            qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
+            qe = build(spark, sf_dir)._jdf.queryExecution()
             ana = qe.analyzed().toString()
             opt = qe.executedPlan().toString()
         except Exception as exc:
