@@ -84,14 +84,29 @@ def build_ivf_index(
     replayable by a SQL oracle from the persisted centroid table.
     Production writes the DataFrame ``partitionBy('cluster_id')``.
     """
-    normed = emb.select(
+    normed = unit_vectors(emb, id_col, vec_col)
+    centroids = train_ivf_centroids(normed, k, seed, max_iter)
+    indexed = assign_clusters_np(normed, centroids).localCheckpoint(eager=True)
+    return indexed, centroids
+
+
+def unit_vectors(
+    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(id, nv): each vector L2-normalized as array<double>."""
+    return emb.select(
         F.col(id_col).alias("id"),
         l2_normalize(F.col(vec_col).cast("array<double>")).alias("nv"),
     )
+
+
+def train_ivf_centroids(
+    normed: DataFrame, k: int, seed: int = 42, max_iter: int = 8
+) -> list[list[float]]:
+    """The k IVF centroids of the unit vectors ``normed`` (id, nv),
+    trained on the driver from the bounded md5-ordered sample."""
     sample = _training_sample(normed, k * _SAMPLE_PER_CENTROID, seed)
-    centroids = _train_kmeans(sample, k, max_iter).tolist()
-    indexed = assign_clusters_np(normed, centroids).localCheckpoint(eager=True)
-    return indexed, centroids
+    return _train_kmeans(sample, k, max_iter).tolist()
 
 
 #: training rows per centroid — FAISS's cap for its coarse quantizers:
@@ -192,30 +207,6 @@ def probe_ivf(
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(topk)
     )
-
-
-def persist_centroids(centroids: list[list[float]], path: str) -> str:
-    """Write the (tiny, k × dim) centroid table to ONE parquet file —
-    the stored half of the IVF index. Production writes it next to the
-    partitioned vector table; an external engine (here: the DuckDB
-    oracle) can then replay assignment + probe from it. Atomic replace
-    so a concurrent reader never sees a torn file."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tbl = pa.table(
-        {
-            "cluster_id": pa.array(range(len(centroids)), type=pa.int64()),
-            "centroid": pa.array(centroids, type=pa.list_(pa.float64())),
-        }
-    )
-    tmp = f"{path}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, path)
-    return path
 
 
 def srp_planes(dim: int, n_planes: int) -> list[list[float]]:

@@ -10,10 +10,13 @@ driver's weaker rows-only check.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators import artifacts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -69,10 +72,9 @@ _HANDOFF_ROOT = "/tmp/spark_graft_artifacts/oracle_handoff"
 
 
 def tag_artifact(token: str, params: str) -> None:
-    """Embed the TRAINING PARAMETERS in a handoff artifact's cache tag
-    (round 5, VERDICT r4 #5): the cache key was (corpus identity, name)
-    only, so bumping a constant like _PCA_K or N_MERGES would silently
-    read a stale artifact trained under the old value. The module that
+    """Embed the TRAINING PARAMETERS in a handoff artifact's cache tag,
+    so bumping a constant like _PCA_K or N_MERGES re-keys the artifact
+    instead of reading one trained under the old value. The module that
     owns each parameter calls this at import time (before any
     oracle_artifact_path use); idempotent under re-registration."""
     src_name, tag = ORACLE_ARTIFACTS[token]
@@ -83,12 +85,8 @@ def tag_artifact(token: str, params: str) -> None:
 
 def oracle_artifact_path(token: str, sf_dir: str) -> str:
     """The corpus-keyed path for one handoff artifact at one sf_dir."""
-    import os
-
-    from ..operators.artifacts import corpus_cache_path
-
     src_name, tag = ORACLE_ARTIFACTS[token]
-    return corpus_cache_path(
+    return artifacts.corpus_cache_path(
         os.path.join(sf_dir, src_name), tag, _HANDOFF_ROOT, ext=".parquet"
     )
 

@@ -12,6 +12,8 @@ query here has a full DuckDB oracle.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -26,6 +28,7 @@ from ..functions.rounding import (
     half_up_scaled_ratio_sql,
 )
 from ..functions.text import distinct_tokens, tokens, word_shingles
+from ..operators import artifacts
 from ..tables import fan_out, load_table
 from .catalog import query
 from .retrieval_queries import _cos
@@ -237,32 +240,28 @@ def minhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside the content digest) and written as a table; every
     downstream dedup query — ``dedup_minhash_lsh``, ``_verified``,
     ``_keep`` — reads the parquet instead of re-running the
-    md5+32-permutation subtree. (Round 1 recomputed signatures per query
-    behind a localCheckpoint; NOTES.md flagged the recompute.)
+    md5+32-permutation subtree.
 
-    Keyed on the documents file identity (path, mtime, size) so edge
-    corpora and regenerated testdata never read a stale table. At scale
-    the table is bucketed by (band, sig) — the band join's shuffle key —
-    making candidate generation shuffle-free at rest."""
-    import os
-
-    from ..operators.artifacts import corpus_cache_path
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    # sigv2: schema gained the raw 32-long mh array (sketch-fidelity
-    # gate reads it; band-join readers prune it at the parquet scan).
-    # Tag embeds the sketch parameters (the tag_artifact / qcw lesson,
-    # ADVICE r5 #3): an N_PERMS/BAND_SIZE bump retrains instead of
-    # silently reading signatures built under the old family.
-    path = corpus_cache_path(
-        src, f"sigv2_p{N_PERMS}b{BAND_SIZE}", "/tmp/spark_graft_signatures"
+    Keyed on the documents source stamp (operators/artifacts.py), so
+    edge corpora and regenerated testdata never read a stale table. At
+    scale the table is bucketed by (band, sig) — the band join's shuffle
+    key — making candidate generation shuffle-free at rest."""
+    # sigv2: the schema carries the raw 32-long mh array (the
+    # sketch-fidelity gate reads it; band-join readers prune it at the
+    # scan). The tag embeds the sketch parameters, so an
+    # N_PERMS/BAND_SIZE bump rebuilds instead of reading an old family.
+    path = artifacts.corpus_cache_path(
+        os.path.join(sf_dir, "documents.parquet"),
+        f"sigv2_p{N_PERMS}b{BAND_SIZE}",
+        "/tmp/spark_graft_signatures",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _minhash_bands_from(load_table(spark, sf_dir, "documents"), persist=False
-        ).write.mode("overwrite").parquet(path)
-    from ..tables import read_parquet_plan_cached
-
-    return read_parquet_plan_cached(spark, path)
+    return artifacts.persisted_table(
+        spark,
+        path,
+        lambda p: _minhash_bands_from(
+            load_table(spark, sf_dir, "documents"), persist=False
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
 def _band_pairs(bands: DataFrame) -> DataFrame:
@@ -390,28 +389,23 @@ def verified_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified ONCE per corpus (at ingest in production) and the (doc_a,
     doc_b, jaccard) table is read by ``dedup_minhash_verified``,
     ``dedup_clusters``, ``dedup_pipeline``-style consumers. Keyed on the
-    documents file identity so edge corpora / regenerated testdata never
+    documents source stamp so edge corpora / regenerated testdata never
     see a stale table; at scale it is bucketed by doc_a (the downstream
     join key)."""
-    import os
-
-    from ..operators.artifacts import corpus_cache_path
-
-    src = os.path.join(sf_dir, "documents.parquet")
     # params: upstream sketch family + the 0.8 verify ratio/threshold
-    path = corpus_cache_path(
-        src,
+    path = artifacts.corpus_cache_path(
+        os.path.join(sf_dir, "documents.parquet"),
         f"vpairs3_p{N_PERMS}b{BAND_SIZE}r80t80",
         "/tmp/spark_graft_verified_pairs",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _verify_candidates(
+    return artifacts.persisted_table(
+        spark,
+        path,
+        lambda p: _verify_candidates(
             _band_pairs(minhash_signature_table(spark, sf_dir)),
             load_table(spark, sf_dir, "documents"),
-        ).write.mode("overwrite").parquet(path)
-    from ..tables import read_parquet_plan_cached
-
-    return read_parquet_plan_cached(spark, path)
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
 def _verify_candidates(cand: DataFrame, docs: DataFrame) -> DataFrame:
@@ -1279,30 +1273,26 @@ def jaccard_truth_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature and verified-pair tables, and the same production
     argument: ground truth is computed ONCE per corpus snapshot (at
     ingest) and re-read by every monitoring run, not recomputed per
-    gate invocation. Keyed on documents file identity, so edge corpora
-    and regenerated testdata never see a stale table.
+    gate invocation. Keyed on the documents source stamp, so edge
+    corpora and regenerated testdata never see a stale table.
 
-    The ratio-0.8 size prefilter yields EXACTLY the pairs the previous
-    ratio-0.5-then-filter formulation did: jac >= 0.8 implies
+    The ratio-0.8 size prefilter yields EXACTLY the pairs a
+    ratio-0.5-then-filter formulation would: jac >= 0.8 implies
     min/max >= 0.8 (|A∩B| <= min, |A∪B| >= max), so no true pair is
     blocked away — and it is the blocking the DuckDB oracle replays."""
-    import os
-
-    from ..operators.artifacts import corpus_cache_path
-
-    src = os.path.join(sf_dir, "documents.parquet")
     # params: the blocked-exact truth pass's ratio/threshold (0.8/0.8)
-    path = corpus_cache_path(
-        src, "jtruth2_r80t80", "/tmp/spark_graft_verified_pairs"
+    path = artifacts.corpus_cache_path(
+        os.path.join(sf_dir, "documents.parquet"),
+        "jtruth2_r80t80",
+        "/tmp/spark_graft_verified_pairs",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
-        _ngram_jaccard_from(docs, ratio=0.8, threshold=0.8).write.mode(
-            "overwrite"
-        ).parquet(path)
-    from ..tables import read_parquet_plan_cached
-
-    return read_parquet_plan_cached(spark, path)
+    return artifacts.persisted_table(
+        spark,
+        path,
+        lambda p: _ngram_jaccard_from(
+            load_table(spark, sf_dir, "documents"), ratio=0.8, threshold=0.8
+        ).write.mode("overwrite").parquet(p),
+    )
 
 
 def _recall_tiers(spark: SparkSession, truth: DataFrame, cand: DataFrame) -> DataFrame:

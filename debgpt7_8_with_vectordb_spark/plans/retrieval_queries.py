@@ -7,10 +7,20 @@ can never flip an ordering; ties break on the id (SURVEY.md §7.7).
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.vector import cosine_similarity, l2_norm, l2_normalize, truncate_dim
+from ..operators import artifacts
+from ..operators.ann import (
+    assign_clusters_np,
+    build_pq_codebooks,
+    train_ivf_centroids,
+    unit_vectors,
+)
 from ..operators.retrieval import (
     get_query_vector,
     resolve_provenance,
@@ -587,7 +597,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """The stored IVF index, BOTH halves persisted per corpus (keyed on
-    the embeddings file identity): the trained centroid table (tiny
+    the embeddings source stamp): the trained centroid table (tiny
     parquet) and the indexed vector table written
     ``partitionBy('cluster_id')`` — one directory per cluster, exactly
     the billion-vector layout. Probing reads back from the partitioned
@@ -595,38 +605,39 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
     partition pruning (PartitionFilters in the scan, PLANS.md), not an
     in-memory filter over a recomputed assignment: warm calls skip
     training AND the assignment pass entirely. The centroid table IS the
-    oracle-handoff file (the PCA/BPE pattern): the oracle replays from
+    oracle-handoff file (the PCA/BPE pattern): the index is assigned
+    from the centroids read back from it, so the oracle replays from
     exactly the centroids the index was assigned with."""
-    import os
+    normed = unit_vectors(emb)
 
-    import pyarrow.parquet as pq
+    def train():
+        cents = train_ivf_centroids(normed, _IVF_K, _IVF_SEED)
+        return pa.table(
+            {
+                "cluster_id": pa.array(range(len(cents)), type=pa.int64()),
+                "centroid": pa.array(cents, type=pa.list_(pa.float64())),
+            }
+        )
 
-    from ..operators.ann import build_ivf_index, persist_centroids
-    from ..operators.artifacts import corpus_cache_path
-
-    cent_path = oracle_artifact_path(_IVF_CENTROIDS, sf_dir)
-    idx_path = corpus_cache_path(
+    tbl = artifacts.persisted_file(oracle_artifact_path(_IVF_CENTROIDS, sf_dir), train)
+    centroids = [list(c) for _, c in sorted(zip(tbl["cluster_id"], tbl["centroid"]))]
+    idx_path = artifacts.corpus_cache_path(
         os.path.join(sf_dir, "embeddings.parquet"),
         f"ivf_idx_k{_IVF_K}_s{_IVF_SEED}_v2",
         "/tmp/spark_graft_artifacts/ivf_index",
     )
-    if not (
-        os.path.exists(cent_path)
-        and os.path.exists(os.path.join(idx_path, "_SUCCESS"))
-    ):
-        indexed, centroids = build_ivf_index(emb, k=_IVF_K, seed=_IVF_SEED)
-        # one file per cluster directory — the cluster-local file layout
-        # a real index build ships to object storage
-        indexed.repartition("cluster_id").write.mode("overwrite").partitionBy(
-            "cluster_id"
-        ).parquet(idx_path)
-        persist_centroids(centroids, cent_path)
-    tbl = pq.read_table(cent_path).to_pydict()
-    order = sorted(range(len(tbl["cluster_id"])), key=lambda i: tbl["cluster_id"][i])
-    centroids = [list(tbl["centroid"][i]) for i in order]
-    from ..tables import read_parquet_plan_cached
-
-    return read_parquet_plan_cached(spark, idx_path), centroids
+    # one file per cluster directory — the cluster-local file layout
+    # a real index build ships to object storage
+    indexed = artifacts.persisted_table(
+        spark,
+        idx_path,
+        lambda p: assign_clusters_np(normed, centroids)
+        .repartition("cluster_id")
+        .write.mode("overwrite")
+        .partitionBy("cluster_id")
+        .parquet(p),
+    )
+    return indexed, centroids
 
 
 _PQ_CODEBOOKS = "__PQ_CODEBOOKS__"
@@ -696,39 +707,11 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import pq_adc_topk, pq_encode_np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        F.col("vec_id").alias("id"),
-        l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
-    )
+    normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     codes = pq_encode_np(normed, books)
     return pq_adc_topk(codes, books, qv, topk=5)
-
-
-def _persist_pq_codebooks(books: list[list[list[float]]], path: str) -> None:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    rows_s, rows_c, rows_v = [], [], []
-    for s, book in enumerate(books):
-        for c, cent in enumerate(book):
-            rows_s.append(s)
-            rows_c.append(c)
-            rows_v.append(cent)
-    tbl = pa.table(
-        {
-            "subspace": pa.array(rows_s, type=pa.int64()),
-            "cluster_id": pa.array(rows_c, type=pa.int64()),
-            "centroid": pa.array(rows_v, type=pa.list_(pa.float64())),
-        }
-    )
-    tmp = f"{path}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, path)
 
 
 def _pq_codebooks_cached(
@@ -737,24 +720,23 @@ def _pq_codebooks_cached(
     """Per-corpus codebook cache: the oracle-handoff file IS the cache
     (the PCA/BPE pattern), so the oracle replays from exactly the
     codebooks the query encoded with."""
-    import os
 
-    import pyarrow.parquet as pq
+    def train():
+        built = build_pq_codebooks(normed, m=_PQ_M, ksub=_PQ_KSUB, seed=_PQ_SEED)
+        rows = [(s, c, v) for s, book in enumerate(built) for c, v in enumerate(book)]
+        return pa.table(
+            {
+                "subspace": pa.array([r[0] for r in rows], type=pa.int64()),
+                "cluster_id": pa.array([r[1] for r in rows], type=pa.int64()),
+                "centroid": pa.array([r[2] for r in rows], type=pa.list_(pa.float64())),
+            }
+        )
 
-    from ..operators.ann import build_pq_codebooks
-
-    path = oracle_artifact_path(_PQ_CODEBOOKS, sf_dir)
-    if os.path.exists(path):
-        tbl = pq.read_table(path).to_pydict()
-        books: dict[int, dict[int, list[float]]] = {}
-        for s, c, v in zip(tbl["subspace"], tbl["cluster_id"], tbl["centroid"]):
-            books.setdefault(s, {})[c] = list(v)
-        return [
-            [books[s][c] for c in sorted(books[s])] for s in sorted(books)
-        ]
-    built = build_pq_codebooks(normed, m=_PQ_M, ksub=_PQ_KSUB, seed=_PQ_SEED)
-    _persist_pq_codebooks(built, path)
-    return built
+    tbl = artifacts.persisted_file(oracle_artifact_path(_PQ_CODEBOOKS, sf_dir), train)
+    books: dict[int, dict[int, list[float]]] = {}
+    for s, c, v in zip(tbl["subspace"], tbl["cluster_id"], tbl["centroid"]):
+        books.setdefault(s, {})[c] = list(v)
+    return [[books[s][c] for c in sorted(books[s])] for s in sorted(books)]
 
 
 @query(
@@ -828,10 +810,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import pq_adc_topk, pq_encode_np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        F.col("vec_id").alias("id"),
-        l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
-    )
+    normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     qlit = F.array(*[F.lit(float(x)) for x in qv])
@@ -932,10 +911,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import pq_adc_topk, pq_encode_np, select_probes
 
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        F.col("vec_id").alias("id"),
-        l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
-    )
+    normed = unit_vectors(emb)
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
@@ -1011,10 +987,7 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import pq_adc_topk, pq_encode_np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        F.col("vec_id").alias("id"),
-        l2_normalize(F.col("embedding").cast("array<double>")).alias("nv"),
-    )
+    normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
     qlit = F.array(*[F.lit(float(x)) for x in qv])
@@ -1356,17 +1329,17 @@ def _pca_components_cached(
     parquet (row pc_id=0 is the mean, 1..k the components) — the file
     IS the cache: the integer-exact Gram makes retraining bit-stable,
     so cold and warm runs produce the identical artifact."""
-    import os
+    tbl = artifacts.persisted_file(
+        oracle_artifact_path(_PCA_COMPONENTS, sf_dir),
+        lambda: _train_pca(spark, sf_dir),
+    )
+    by_id = dict(zip(tbl["pc_id"], tbl["vec"]))
+    return list(by_id[0]), [list(by_id[k]) for k in range(1, _PCA_K + 1)]
 
+
+def _train_pca(spark: SparkSession, sf_dir: str) -> pa.Table:
+    """(pc_id, vec): row 0 the mean, rows 1..k the components."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    path = oracle_artifact_path(_PCA_COMPONENTS, sf_dir)
-    if os.path.exists(path):
-        tbl = pq_.read_table(path).to_pydict()
-        by_id = dict(zip(tbl["pc_id"], tbl["vec"]))
-        return list(by_id[0]), [list(by_id[k]) for k in range(1, _PCA_K + 1)]
 
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(l2_normalize(F.col("embedding").cast("array<double>")).alias("embedding"))
@@ -1391,19 +1364,13 @@ def _pca_components_cached(
             v = -v
         comps.append([float(x) for x in v])
 
-    rows_id = list(range(_PCA_K + 1))
     rows_vec = [[float(x) for x in m]] + comps
-    tbl = pa.table(
+    return pa.table(
         {
-            "pc_id": pa.array(rows_id, type=pa.int64()),
+            "pc_id": pa.array(range(_PCA_K + 1), type=pa.int64()),
             "vec": pa.array(rows_vec, type=pa.list_(pa.float64())),
         }
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    pq_.write_table(tbl, tmp)
-    os.replace(tmp, path)
-    return [float(x) for x in m], comps
 
 
 @query(

@@ -8,6 +8,9 @@ All pure Catalyst expressions — per-row, no shuffle, no UDFs.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -15,6 +18,7 @@ from ..functions.bind import let
 from ..functions.hashing import md5_long
 from ..functions.text import char_shingles, tokens, word_shingles
 from ..loops import checkpoint_observed, loop_confs, release
+from ..operators import artifacts
 from ..operators.textprofile import repetition_counts
 from ..tables import fan_out, load_table
 from ..functions.rounding import (
@@ -1183,8 +1187,7 @@ _QC_BUCKETS = 4096  # hashed feature space — bounds the weight table
 # (stopword set + 50/50 blend constants + keep threshold + weight
 # scale), not just corpus + bucket count: changing the bootstrap
 # heuristic must RETRAIN, or the Spark side silently reuses stale
-# weights while the DuckDB oracle retrains inline — the stale-artifact
-# class tag_artifact was added to eliminate (ADVICE r5 #3).
+# weights while the DuckDB oracle retrains inline.
 import hashlib as _hashlib
 
 _QC_HEUR = _hashlib.md5(
@@ -1281,22 +1284,7 @@ def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -- train (cached per corpus like centroids/codebooks: the model
     # is fit once at ingest, read by every inference run; the key
     # embeds the bucket count so a _QC_BUCKETS bump retrains)
-    import json as _json
-    import os as _os
-
-    from ..operators.artifacts import corpus_cache_path
-
-    src = _os.path.join(sf_dir, "documents.parquet")
-    wpath = corpus_cache_path(
-        src,
-        f"qcw_b{_QC_BUCKETS}_h{_QC_HEUR}_v1",
-        "/tmp/spark_graft_artifacts/qc_weights",
-        ext=".json",
-    )
-    if _os.path.exists(wpath):
-        with open(wpath) as fh:
-            weights = _json.load(fh)
-    else:
+    def train():
         # bounded-key census + JVM-side ln (same libm pairing as
         # ngram_lm_score), collected as <=4096 rows — the centroid/BPE
         # class of bounded driver collect, run once per corpus.
@@ -1331,11 +1319,17 @@ def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         weights = [0] * _QC_BUCKETS
         for r in wdf.collect():
             weights[int(r["b"])] = int(r["wu"])
-        _os.makedirs(_os.path.dirname(wpath), exist_ok=True)
-        tmp = f"{wpath}.tmp-{_os.getpid()}"
-        with open(tmp, "w") as fh:
-            _json.dump(weights, fh)
-        _os.replace(tmp, wpath)  # atomic; concurrent first-builds race benignly
+        return pa.table({"wu": pa.array(weights, type=pa.int64())})
+
+    weights = artifacts.persisted_file(
+        artifacts.corpus_cache_path(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"qcw_b{_QC_BUCKETS}_h{_QC_HEUR}_v1",
+            "/tmp/spark_graft_artifacts/qc_weights",
+            ext=".parquet",
+        ),
+        train,
+    )["wu"]
 
     # -- infer: one array literal, zero-shuffle integer fold per row.
     # The literal is built from ONE parsed SQL string, not F.lit(list):
@@ -1587,32 +1581,29 @@ OVERLAP_MIN_SHARED = 3
 def winnow_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED winnowed-fingerprint table — computed once per
     corpus (at ingest, exactly like the minhash signature table, and
-    with the same file-identity cache key) and read by every
+    with the same source-stamp cache key) and read by every
     overlap-detection run. At rest it is bucketed by fp, the pairing
     join's shuffle key. Consumers pay census + join, never the
     shingle/hash/sliding-min pass again."""
-    import os
-
-    from ..operators.artifacts import corpus_cache_path
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    # tag embeds the winnowing parameters (k-gram width, window) —
-    # the tag_artifact / qcw stale-cache lesson
-    path = corpus_cache_path(
-        src, f"wfp1_k{WINNOW_K}w{WINNOW_W}", "/tmp/spark_graft_signatures"
+    # tag embeds the winnowing parameters (k-gram width, window)
+    path = artifacts.corpus_cache_path(
+        os.path.join(sf_dir, "documents.parquet"),
+        f"wfp1_k{WINNOW_K}w{WINNOW_W}",
+        "/tmp/spark_graft_signatures",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # keyed repartition (no explicit N) before the write: AQE
-        # coalesces the post-shuffle partitions to the advisory size,
-        # so the artifact lands as few, sensibly-sized, fp-clustered
-        # files at any scale (guide §6 output sizing) — without it the
-        # round-14 fan_out upstream would spray one tiny file per core
-        winnow_fingerprints(spark, sf_dir).repartition(F.col("fp")).write.mode(
-            "overwrite"
-        ).parquet(path)
-    from ..tables import read_parquet_plan_cached
-
-    return read_parquet_plan_cached(spark, path)
+    # keyed repartition (no explicit N) before the write: AQE coalesces
+    # the post-shuffle partitions to the advisory size, so the artifact
+    # lands as few, sensibly-sized, fp-clustered files at any scale
+    # (guide §6 output sizing) — without it the fan_out upstream would
+    # spray one tiny file per core
+    return artifacts.persisted_table(
+        spark,
+        path,
+        lambda p: winnow_fingerprints(spark, sf_dir)
+        .repartition(F.col("fp"))
+        .write.mode("overwrite")
+        .parquet(p),
+    )
 
 
 @query(
@@ -1885,26 +1876,18 @@ def _bpe_merges_cached(
     path runs bpe_train_merges (corpus census once, vocab-sized
     rounds); warm consumers — bpe_apply and its oracle — read the
     artifact."""
-    import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    path = oracle_artifact_path(_BPE_MERGES, sf_dir)
-    if not os.path.exists(path):
+    def train():
         rows = bpe_train_merges(spark, sf_dir).collect()
-        tbl = pa.table(
+        return pa.table(
             {
                 "merge_rank": pa.array([r["merge_rank"] for r in rows], type=pa.int64()),
                 "lhs": pa.array([r["lhs"] for r in rows]),
                 "rhs": pa.array([r["rhs"] for r in rows]),
             }
         )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pq_.write_table(tbl, tmp)
-        os.replace(tmp, path)
-    t = pq_.read_table(path).to_pydict()
+
+    t = artifacts.persisted_file(oracle_artifact_path(_BPE_MERGES, sf_dir), train)
     out = sorted(zip(t["merge_rank"], t["lhs"], t["rhs"]))
     return [(int(r), l, rh) for r, l, rh in out]
 

@@ -19,6 +19,7 @@ from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.artifacts import source_stamp
 from .session import apply_runtime_confs
 
 #: fan_out's memoized split-count probes — see fan_out's docstring
@@ -83,23 +84,10 @@ def _app_id(spark: SparkSession) -> str:
 
 
 def _plan_cache_key(spark: SparkSession, path: str) -> "tuple | None":
-    """(application, path, mtime, size), plus for a directory the newest
-    mtime and total size of the files under it: a part file rewritten in
-    place leaves the directory's own stamps unchanged."""
-    import os
-
+    """(application, path) plus the path's source stamp — the same
+    identity the persisted-artifact keys use."""
     try:
-        st = os.stat(path)
-        key = (_app_id(spark), path, st.st_mtime, st.st_size)
-        if os.path.isdir(path):
-            parts = [
-                os.stat(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs
-            ]
-            key += (
-                max((p.st_mtime for p in parts), default=0.0),
-                sum(p.st_size for p in parts),
-            )
-        return key
+        return (_app_id(spark), path) + source_stamp(path)
     except OSError:
         return None
 

@@ -1,10 +1,11 @@
-"""Cold-start correctness sweep (VERDICT r5 next-round #7).
+"""Cold-start correctness sweep.
 
 Warm runs can mask an artifact bug: if a cached handoff artifact (IVF
-centroids/index, PQ codebooks, PCA, BPE merges, classifier weights,
-minhash signature / verified-pair / jaccard-truth tables, fetch cache)
-is stale or was written by broken training code, every warm oracle
-check replays the same wrong artifact on BOTH engines and stays green.
+centroids/index, PQ codebooks, PCA, BPE merges, the parquet
+quality-classifier weights, minhash signature / verified-pair /
+jaccard-truth / winnow-fingerprint tables, fetch cache) is stale or
+was written by broken training code, every warm oracle check replays
+the same wrong artifact on BOTH engines and stays green.
 This sweep deletes every /tmp handoff root, then runs the FULL oracle
 gate — proving each train-then-replay query is green from a genuinely
 cold cache (training re-runs, persistence re-runs, the oracle reads the
@@ -25,7 +26,7 @@ import sys
 #: root appears; test_cold_sweep_roots pins the list against that grep)
 ARTIFACT_ROOTS = [
     "/tmp/spark_graft_artifacts",  # ivf/pq/pca/bpe/qc + oracle_handoff
-    "/tmp/spark_graft_signatures",  # minhash banded signature tables
+    "/tmp/spark_graft_signatures",  # minhash signature + winnow fp tables
     "/tmp/spark_graft_verified_pairs",  # verified-pair + jaccard-truth tables
     "/tmp/spark_graft_cachedfetch",  # URL fetch cache (cached_fetch)
 ]
