@@ -1,11 +1,12 @@
 """Driver-loop kit shared by the iterative operators.
 
-Every loop (connected components, tree/compact reduce, BPE merge
-rounds, the corpus funnel) materializes a round with an eager
-``localCheckpoint`` and reads its loop-control numbers off that same
-action, runs its rounds with AQE off and shuffle partitions sized from
-measured rows, and frees superseded rounds by exact checkpoint id.
-``scoped_confs`` is the package's one session-conf save/restore.
+Every loop (tree/compact reduce, BPE merge rounds, the corpus funnel)
+materializes a round with an eager ``localCheckpoint`` and reads its
+loop-control numbers off that same action, runs its rounds with AQE off
+and shuffle partitions sized from measured rows, and frees superseded
+rounds by exact checkpoint id with ``release`` (the connected-components
+fold frees its levels with it too). ``scoped_confs`` is the package's
+one session-conf save/restore.
 """
 
 from __future__ import annotations

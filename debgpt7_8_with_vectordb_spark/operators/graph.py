@@ -1,99 +1,82 @@
-"""Distributed connected components (duplicate-cluster canonicalization).
+"""Distributed connected components (duplicate-cluster canonicalization)
+as a spanning-forest fold.
 
-Min-label propagation PLUS pointer doubling: each round every node takes
-the min of (its own label, its neighbors' labels), then JUMPS — replaces
-its label with its label's label. Neighbor propagation alone needs
-O(diameter) rounds (a 64-doc duplicate chain = 63 rounds); the jump
-halves pointer depth every round, so chains converge in O(log diameter)
-rounds with the same per-round primitives (two equi-joins + a min
-groupBy — no new shuffle shapes, so the 100 TB story is unchanged).
+``_fold`` is a union-find over one task's edges: it attaches the larger
+root under the smaller and emits ``(node, root)`` for every node it
+touched — a spanning forest of that task's edges. Level 0 folds each
+edge partition; every further level folds pairs of forest partitions,
+until one partition is left. Invariants:
 
-Invariant: a node's label is always the id of some node in its own
-component (labels start as self-ids and only move along edges or along
-label pointers, both intra-component), and labels are monotone
-non-increasing — so the exact decimal label-sum is a convergence
-certificate, and the fixpoint (stable under neighbor-min ⇒ constant per
-component; component min keeps itself) is the component-min labeling.
-
-Reference has no equivalent (single-node SQLite client); this is pure
-engine, same iterative shape as operators/mapreduce.py's reduce loops.
+- Any split of the edge multiset gives the same components: the union
+  of per-partition spanning forests is connectivity-equivalent to the
+  union of the edges, so folding forests again loses no connection and
+  invents none. Edges may come in one direction only; duplicates and
+  self-loops are harmless.
+- The root is the component minimum: a set's root is only ever replaced
+  by a smaller one, so the one-partition level labels every node with
+  the least node of its component.
+- Each merge task holds at most the distinct nodes of its ≤ 2 inputs;
+  the last level holds every node that has an edge. The level count is
+  1 + ⌈log₂ (edge partitions)⌉, whatever the graph's diameter.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..loops import checkpoint_observed, loop_confs, release
+from ..loops import release
 
-#: Round cap — 2·log₂(n) + slack covers any graph pointer doubling can
-#: see; the certificate loop normally exits far earlier (near-clique
-#: duplicate classes: 1-2 rounds; planted 64-chain: ≤7, pinned in
-#: tests/test_graph_components.py).
-_MAX_ROUNDS = 30
-
-#: ~2M 16-byte (doc_id, lab) rows ≈ 32 MB per reduce partition
-_ROWS_PER_PART = 2_000_000
+_FOREST = "src long, dst long"
 
 
-def _label_sum():
-    # exact: decimal(38,0) cannot overflow on a sum of long ids
-    return F.sum(F.col("lab").cast("decimal(38,0)"))
+def _fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for b in batches:
+        for u, v in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+            ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes, pa.int64()), pa.array([find(n) for n in nodes], pa.int64())],
+        names=["src", "dst"],
+    )
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, int]:
     """Label every node with its component's min node id.
 
     ``nodes``: one column ``doc_id`` (long). ``edges``: columns
-    ``src``/``dst`` (long), assumed SYMMETRIC (caller unions both
-    directions). Returns (labels(doc_id, lab), rounds_run).
-
-    Monotone decimal-sum certificate: labels never increase, so an
-    unchanged exact label sum after neighbor-min means no label moved —
-    the loop stops there, before that round's pointer jump. The sums
-    and the node/edge counts ride the checkpoint actions.
+    ``src``/``dst`` (long), one direction per pair is enough. Returns
+    (labels(doc_id, lab), fold levels run); ``labels`` is checkpointed.
     """
-    sym, m = checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
-    n_edges = m["n"]
-    labels, m = checkpoint_observed(
-        nodes.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("doc_id").cast("long").alias("lab"),
-        ),
-        n=F.count(F.lit(1)),
-        s=_label_sum(),
+    forest = edges.select("src", "dst").mapInArrow(_fold, _FOREST)
+    forest, levels = forest.localCheckpoint(eager=True), 1
+    # coalesce only checkpointed input: on a live plan the narrow
+    # coalesce would pull the partition-local fold into fewer tasks
+    while (p := forest.rdd.getNumPartitions()) > 1:
+        merged = forest.coalesce(-(-p // 2)).mapInArrow(_fold, _FOREST)
+        merged = merged.localCheckpoint(eager=True)
+        release(forest)
+        forest, levels = merged, levels + 1
+    labels = (
+        nodes.select(F.col("doc_id").cast("long").alias("doc_id"))
+        .join(forest.withColumnRenamed("src", "doc_id"), "doc_id", "left")
+        .select("doc_id", F.coalesce("dst", "doc_id").alias("lab"))
+        .localCheckpoint(eager=True)
     )
-    n_nodes, prev_sum = m["n"], m["s"]
-    rounds = 0
-    with loop_confs(labels.sparkSession, max(n_nodes, n_edges), _ROWS_PER_PART):
-        for _ in range(_MAX_ROUNDS):
-            # 1. neighbor-min: each node sees the labels across its edges
-            nbr = sym.join(
-                labels.withColumnRenamed("doc_id", "dst"), "dst"
-            ).select(F.col("src").alias("doc_id"), "lab")
-            # checkpointed BEFORE the jump: cand is read twice there
-            cand, m = checkpoint_observed(
-                labels.union(nbr).groupBy("doc_id").agg(F.min("lab").alias("lab")),
-                s=_label_sum(),
-            )
-            rounds += 1
-            if m["s"] == prev_sum:  # fixpoint: cand ≡ labels
-                release(cand)
-                break
-            # 2. pointer jump: lab ← label OF the label (a self-equi-join;
-            #    least keeps monotonicity when the target hasn't caught up)
-            jumped = cand.alias("c").join(
-                cand.select(
-                    F.col("doc_id").alias("lab"), F.col("lab").alias("lab2")
-                ).alias("j"),
-                "lab",
-            )
-            nxt, m = checkpoint_observed(
-                jumped.select("doc_id", F.least("lab", "lab2").alias("lab")),
-                s=_label_sum(),
-            )
-            # round r reads only labels_{r-1}: free it and this cand
-            release(labels, cand)
-            labels, prev_sum = nxt, m["s"]
-    release(sym)
-    return labels, rounds
+    release(forest)
+    return labels, levels

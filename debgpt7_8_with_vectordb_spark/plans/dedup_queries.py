@@ -512,26 +512,27 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IVF cluster ≲ 10⁵ rows ⇒ ≤ 40 MB of float32 per task at d=64),
     so per-task memory stays flat at 100 TB.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        m = np.array(list(pdf["embedding"]), dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        s = m @ m.T
-        ai, bi = np.nonzero(np.triu(s >= 0.3 - 1e-9, k=1))
-        # enforce vec_a < vec_b regardless of intra-block row order
-        a, b = ids[ai], ids[bi]
-        a, b, sc = np.minimum(a, b), np.maximum(a, b), np.round(s[ai, bi], 6)
-        keep = sc >= 0.3
-        return pd.DataFrame({"vec_a": a[keep], "vec_b": b[keep], "score": sc[keep]})
-
     return emb.groupBy("label").applyInPandas(
-        score_block, schema="vec_a long, vec_b long, score double"
+        _score_cosine_block, schema="vec_a long, vec_b long, score double"
     )
+
+
+def _score_cosine_block(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Pairs of one block with cosine ≥ 0.3, ``vec_a < vec_b``. A zero
+    vector stays zeros (the ``l2_normalize`` convention), so it scores
+    0 against everything and pairs with nothing."""
+    ids = pdf["vec_id"].to_numpy()
+    m = np.array(list(pdf["embedding"]), dtype=np.float64)
+    norm = np.linalg.norm(m, axis=1, keepdims=True)
+    m = np.divide(m, norm, out=np.zeros_like(m), where=norm > 0)
+    s = m @ m.T
+    ai, bi = np.nonzero(np.triu(s >= 0.3 - 1e-9, k=1))
+    # enforce vec_a < vec_b regardless of intra-block row order
+    a, b = ids[ai], ids[bi]
+    a, b, sc = np.minimum(a, b), np.maximum(a, b), np.round(s[ai, bi], 6)
+    keep = sc >= 0.3
+    return pd.DataFrame({"vec_a": a[keep], "vec_b": b[keep], "score": sc[keep]})
 
 
 @query(
@@ -1022,6 +1023,21 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _clusters(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) for every ``nodes`` row:
+    ``cluster_id`` is the min id of its connected component over the
+    ``pairs`` edges (two id columns, one row per pair in either
+    direction) and ``cluster_size`` that component's node count."""
+    # imported per call, so a swapped graph.connected_components is seen
+    from ..operators.graph import connected_components
+
+    labels, _levels = connected_components(nodes, pairs.toDF("src", "dst"))
+    sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cluster_size"))
+    return labels.join(sizes, "lab").select(
+        "doc_id", F.col("lab").alias("cluster_id"), "cluster_size"
+    )
+
+
 @query(
     "dedup_clusters",
     oracle=f"""
@@ -1071,32 +1087,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical still attributes to it.
 
     Spark shape (reference has no equivalent; this is pure engine): the
-    iterative min-label + POINTER-DOUBLING loop in operators/graph.py —
-    per round, neighbor-min (equi-join + min-groupBy) then a label-jump
-    self-join (lab ← label of the label), loop until the exact decimal
-    label-sum stops falling (monotone ⇒ the sum IS the convergence
-    certificate). The jump halves pointer depth every round, so rounds
-    are O(log diameter) even on adversarial chain-shaped graphs (round 2
-    shipped plain propagation = O(diameter); the planted 64-doc chain in
-    tests/test_graph_components.py now pins ≤7 rounds). Duplicate
-    classes (near-cliques) still converge in 1-2.
+    spanning-forest fold in operators/graph.py over the verified pairs,
+    one row per pair — its level count follows the pair table's
+    partitions, not the graph's diameter, so a long duplicate chain
+    costs what a clique does.
 
     Oracle: transitive closure as a recursive CTE (min reachable id ≡
     component min — the UNION-distinct fixpoint terminates because the
     reachable-label set is finite).
     """
-    from ..operators.graph import connected_components
-
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup_minhash_verified(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    labels, _rounds = connected_components(docs.select("doc_id"), sym)
-    sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cluster_size"))
-    return labels.join(sizes, "lab").select(
-        "doc_id", F.col("lab").alias("cluster_id"), "cluster_size"
-    )
+    pairs = dedup_minhash_verified(spark, sf_dir)
+    return _clusters(docs.select("doc_id"), pairs.select("doc_a", "doc_b"))
 
 
 @query(
@@ -1131,31 +1133,21 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC duplicate clusters — the embedding-space twin of
     ``dedup_clusters``: cluster-blocked BLAS cosine pairs at ≥ 0.9
     (embedding_neardup's candidate shape, tightened to the semantic-dup
-    threshold SemDeDup-style pipelines use) → pointer-doubling connected
-    components → every vector labeled with its component's min vec_id +
-    size. The keep-rule downstream is 'keep cluster_id == vec_id' — one
+    threshold SemDeDup-style pipelines use) → connected components →
+    every vector labeled with its component's min vec_id + size. The
+    keep-rule downstream is 'keep cluster_id == vec_id' — one
     representative per semantic cluster.
 
     Scale shape: candidates never leave their blocking key (IVF
-    cluster / label — a partition column at rest), the component loop is
-    O(log diameter) rounds of equi-joins (operators/graph.py), and the
-    oracle replays the closure with a recursive CTE."""
-    from ..operators.graph import connected_components
-
+    cluster / label — a partition column at rest), the components are
+    the spanning-forest fold of operators/graph.py (levels follow the
+    pair partitions, not the diameter), and the oracle replays the
+    closure with a recursive CTE."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_neardup(spark, sf_dir).filter(F.col("score") >= 0.9)
-    sym = pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")).union(
-        pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
-    )
-    labels, _rounds = connected_components(
-        emb.select(F.col("vec_id").alias("doc_id")), sym
-    )
-    sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cluster_size"))
-    return labels.join(sizes, "lab").select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("lab").alias("cluster_id"),
-        "cluster_size",
-    )
+    return _clusters(
+        emb.select(F.col("vec_id").alias("doc_id")), pairs.select("vec_a", "vec_b")
+    ).select(F.col("doc_id").alias("vec_id"), "cluster_id", "cluster_size")
 
 
 @query(

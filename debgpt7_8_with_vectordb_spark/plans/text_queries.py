@@ -1445,6 +1445,10 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=F.count(F.lit(1)),
     )
     rows = []
+    # AQE off costs no skew guard here: AQE's skew split only acts on
+    # joins, and the pair groupBy().sum is partially aggregated map-side,
+    # so a heavy-hitter pair reaches its reducer as at most
+    # #map-partitions rows
     with loop_confs(spark, int(m["n"]), 2_000_000):  # ~2M vocab rows per part
         for r in range(1, N_MERGES + 1):
             pairs = (

@@ -1,7 +1,9 @@
-"""Round-7 container-metadata breadth: TIFF / WebP dimensions via
+"""Container-metadata breadth: TIFF / WebP dimensions via
 ``parse_image_header`` and AVI via the video dispatch — writer/parser
 round-trips, layout pins, NULL-on-malformed, and non-regression of the
-sibling containers that share magic prefixes (RIFF = WAV/AVI/WebP)."""
+sibling containers that share magic prefixes (RIFF = WAV/AVI/WebP).
+Malformed mp4 boxes, negative BMP widths and any parser exception come
+back as None (the ``_parse_or_none`` task fence), never as a crash."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import struct
 import pytest
 
 from debgpt7_8_with_vectordb_spark.operators.multimodal import (
+    _parse_or_none,
     decode_video_metadata,
     encode_test_avi,
     encode_test_mp4,
@@ -18,7 +21,9 @@ from debgpt7_8_with_vectordb_spark.operators.multimodal import (
     encode_test_webp,
     parse_avi_header,
     parse_image_header,
+    parse_mp4_header,
     parse_video_header,
+    parse_wav_header,
 )
 
 
@@ -172,3 +177,107 @@ def test_video_dispatch_covers_mkv(spark):
     )
 
     assert parse_video_header(encode_test_mkv("webm", 64, 48))[0] == "webm"
+
+
+# ---------------------------------------------------------------------------
+# mp4 / bmp: malformed boxes must yield None, never an exception
+# ---------------------------------------------------------------------------
+
+
+def _box(tag: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + tag + body
+
+
+def test_mp4_short_v1_mvhd_body_is_skipped_not_misread():
+    """A version-1 mvhd whose body is 28-31 bytes (v1 needs 32) used to
+    pass the >=28 guard and read duration past the box end — struct
+    error at EOF or a silent misread mid-file. Now it is skipped."""
+    for body_len in (20, 28, 30, 31):
+        mvhd = (b"\x01" + b"\x00" * (body_len - 1))
+        blob = _box(b"ftyp", b"isom\x00\x00\x02\x00") + _box(
+            b"moov", _box(b"mvhd", mvhd)
+        )
+        assert parse_mp4_header(blob) is None  # no timescale recovered
+    # exactly 32 bytes parses fine
+    mvhd32 = (
+        b"\x01\x00\x00\x00" + struct.pack(">QQ", 0, 0)
+        + struct.pack(">I", 48000) + struct.pack(">Q", 7)
+    )
+    blob = _box(b"ftyp", b"isom\x00\x00\x02\x00") + _box(
+        b"moov", _box(b"mvhd", mvhd32)
+    )
+    assert parse_mp4_header(blob) == ("mp4", 48000, 7, 0, 0, 0)
+
+
+def test_mp4_empty_tkhd_body_at_eof_no_indexerror():
+    """`ver = payload[b3]` on an EMPTY tkhd body used to IndexError when
+    the box ended the file; now the short body is skipped and the trak
+    still counts."""
+    mvhd = (
+        b"\x00\x00\x00\x00" + struct.pack(">II", 0, 0)
+        + struct.pack(">II", 1000, 5000)
+    )
+    trak = _box(b"trak", _box(b"tkhd", b""))
+    blob = _box(b"ftyp", b"isom\x00\x00\x02\x00") + _box(
+        b"moov", _box(b"mvhd", mvhd) + trak
+    )
+    assert parse_mp4_header(blob) == ("mp4", 1000, 5000, 0, 0, 1)
+
+
+def test_bmp_negative_width_returns_none():
+    """Negative int32 height is legal (top-down rows, abs()-normalized);
+    negative or zero width is corrupt and must NOT leak into the
+    metadata table where dimension filters would mis-handle it."""
+    def bmp(w: int, h: int) -> bytes:
+        info = struct.pack("<Iii", 40, w, h) + b"\x00" * 28
+        return b"BM" + struct.pack("<IHHI", 54, 0, 0, 54) + info
+
+    assert parse_image_header(bmp(-3, 2)) is None
+    assert parse_image_header(bmp(0, 2)) is None
+    assert parse_image_header(bmp(3, -2)) == ("bmp", 3, 2)
+
+
+def test_parse_or_none_fences_any_parser_exception():
+    """The decode stages route every per-payload parse through
+    _parse_or_none: one malformed file yields a NULL row instead of a
+    struct.error that kills the whole Spark task."""
+
+    def explode(payload: bytes):
+        raise struct.error("boom")
+
+    assert _parse_or_none(explode, b"x") is None
+    for parser in (parse_image_header, parse_wav_header, parse_mp4_header):
+        # deterministic byte-noise sweep: no exception escapes the fence
+        import random
+
+        rng = random.Random(6)
+        for n in (0, 1, 7, 64, 300):
+            blob = bytes(rng.randrange(256) for _ in range(n))
+            _parse_or_none(parser, blob)  # must not raise
+            # prefix-truncations of valid-ish magic starts
+            _parse_or_none(parser, b"\x89PNG\r\n\x1a\n" + blob)
+            _parse_or_none(parser, b"RIFF" + blob)
+            _parse_or_none(parser, struct.pack(">I", 20) + b"ftyp" + blob)
+
+
+def test_decode_video_metadata_survives_malformed_payload(spark):
+    """End-to-end through the Spark seam: the short-v1-mvhd payload that
+    used to raise now comes back as a NULL-metadata row alongside good
+    rows in the same Arrow batch."""
+    from debgpt7_8_with_vectordb_spark.operators.multimodal import (
+        decode_video_metadata,
+        encode_test_mp4,
+    )
+
+    bad = _box(b"ftyp", b"isom\x00\x00\x02\x00") + _box(
+        b"moov", _box(b"mvhd", b"\x01" + b"\x00" * 29)
+    )
+    rows = [
+        (1, bytearray(encode_test_mp4(90000, 270000, 1280, 720, 1)), "video/mp4"),
+        (2, bytearray(bad), "video/mp4"),
+    ]
+    media = spark.createDataFrame(
+        rows, "doc_id long, payload binary, media_type string"
+    )
+    got = {r["doc_id"]: r["fmt"] for r in decode_video_metadata(media).collect()}
+    assert got == {1: "mp4", 2: None}

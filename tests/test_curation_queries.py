@@ -1,12 +1,16 @@
 """Invariants for the curation queries: domain_quota, tfidf_topterms,
-quality_classifier, and the simhash near-dup pairs and bit votes."""
+quality_classifier, the simhash near-dup pairs and bit votes, and the
+embedding near-dup block scorer."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from debgpt7_8_with_vectordb_spark.plans import QUERIES
-from debgpt7_8_with_vectordb_spark.plans.dedup_queries import _simhash_votes
+from debgpt7_8_with_vectordb_spark.plans.dedup_queries import (
+    _score_cosine_block,
+    _simhash_votes,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -163,3 +167,21 @@ def test_simhash_votes_match_bitfold_semantics(spark):
         ).collect()
     }
     assert got == {i: ref(hs) for i, hs in rows}
+
+
+def test_cosine_block_zero_vector_scores_zero_without_dividing_by_zero():
+    """A zero vector stays zeros: no 0/0 in the block scorer, and it
+    pairs with nothing while the other rows still pair normally."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "vec_id": [7, 3, 5, 9],
+            "embedding": [[0.0, 0.0], [1.0, 0.0], [2.0, 0.1], [0.0, 0.0]],
+        }
+    )
+    with np.errstate(divide="raise", invalid="raise"):
+        out = _score_cosine_block(pdf)
+    assert list(zip(out["vec_a"], out["vec_b"])) == [(3, 5)]
+    assert out["score"].tolist() == [round(2.0 / np.hypot(2.0, 0.1), 6)]

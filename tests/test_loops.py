@@ -1,7 +1,7 @@
 """Driver-loop kit: conf scoping (every loop restores the confs it
 scopes, also on error), observed checkpoints, the job count the loops'
 control numbers cost, and the loop-control shortcuts' exact semantics
-(CC certificate, fetch-once, empty seeds)."""
+(fetch-once, empty seeds)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from debgpt7_8_with_vectordb_spark.loops import checkpoint_observed, loop_confs
-from debgpt7_8_with_vectordb_spark.operators.graph import connected_components
 from debgpt7_8_with_vectordb_spark.sources.fanout import fetch_paginated
 
 _AQE = "spark.sql.adaptive.enabled"
@@ -65,22 +64,6 @@ def test_checkpoint_observed_costs_one_job(spark):
     assert ckpt.count() == 10
 
 
-def test_connected_components_counts_ride_checkpoints(spark):
-    """No separate count jobs before the loop: two checkpoint actions
-    (edges, labels) carry the counts; round 1 adds the edge broadcast
-    and its cand checkpoint, which certifies the fixpoint."""
-    nodes = spark.range(5).select(F.col("id").alias("doc_id"))
-    edges = spark.createDataFrame([], "src long, dst long")
-    (labels, rounds), n_jobs = _jobs(
-        spark, "kit-cc", lambda: connected_components(nodes, edges)
-    )
-    assert rounds == 1
-    assert n_jobs == 4
-    assert sorted((r["doc_id"], r["lab"]) for r in labels.collect()) == [
-        (i, i) for i in range(5)
-    ]
-
-
 def test_fetch_paginated_frontier_count_rides_checkpoint(spark):
     """The seed frontier's size comes off its own checkpoint: with no
     seeds the whole call is that one job."""
@@ -111,17 +94,6 @@ def test_fetch_paginated_jobs_do_not_grow_with_depth(spark):
     assert counts[0] == counts[1] <= 3, counts
 
 
-def _cc_case(spark, tmp_path):
-    nodes = spark.range(6).select(F.col("id").alias("doc_id"))
-    pairs = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    sym = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels, _ = connected_components(nodes, sym)
-    got = {r["doc_id"]: r["lab"] for r in labels.collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5}
-
-
 def _fetch_case(spark, tmp_path):
     def fetcher(url):
         return 200, "x", None
@@ -150,8 +122,8 @@ def _bpe_case(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "case",
-    [_cc_case, _fetch_case, _bpe_case],
-    ids=["connected_components", "fetch_paginated", "bpe_train_merges"],
+    [_fetch_case, _bpe_case],
+    ids=["fetch_paginated", "bpe_train_merges"],
 )
 def test_loop_restores_scoped_confs(spark, tmp_path, case):
     """Every loop that scopes AQE and shuffle partitions hands the
@@ -159,34 +131,6 @@ def test_loop_restores_scoped_confs(spark, tmp_path, case):
     before = _confs(spark)
     case(spark, tmp_path)
     assert _confs(spark) == before
-
-
-def test_connected_components_restores_confs_on_error(spark):
-    before = _confs(spark)
-    nodes = spark.range(3).select(F.col("id").alias("doc_id"))
-    bad_edges = spark.createDataFrame([(0, 1)], "src long, wrong long")
-    try:
-        connected_components(nodes, bad_edges)
-    except Exception:
-        pass
-    assert _confs(spark) == before
-
-
-def test_cand_certificate_skips_final_jump_exactly(spark):
-    """The pre-jump fixpoint certificate (sum(cand) == sum(labels))
-    must terminate with the SAME labeling as running the jump — pinned
-    on a chain long enough that pointer doubling does real work."""
-    n = 32
-    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    sym = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels, rounds = connected_components(nodes, sym)
-    assert {r["lab"] for r in labels.collect()} == {0}
-    assert rounds <= 7  # log2(32)=5 + certificate + slack
 
 
 def test_fetch_paginated_empty_seeds_schema_and_no_rows(spark):

@@ -454,3 +454,66 @@ def test_rewrite_file_inplace_diff_and_atomicity(tmp_path):
     # unchanged rewrite -> empty diff
     assert rewrite_file_inplace(str(f), "alpha\nBETA\ngamma\n") == ""
     assert not (tmp_path / "notes.txt.inplace-tmp").exists()
+
+
+# ---------------------------------------------------------------------------
+# compaction recovery: vanished tmp must not delete the only copies
+# ---------------------------------------------------------------------------
+
+
+def test_recover_compaction_aborts_when_tmp_vanished(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Crash after the marker commit but before ANY shard move-in, then
+    the journaled tmp dir disappears (tmp-style cleanup / relocation).
+    Recovery must leave the old shards and the marker alone — deleting
+    st['old'] would destroy the only copies of the data."""
+    import shutil
+
+    from debgpt7_8_with_vectordb_spark.sinks import (
+        COMPACT_MARKER,
+        compact_corpus,
+        recover_compaction,
+        write_corpus,
+    )
+    from debgpt7_8_with_vectordb_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(40)
+    out = str(tmp_path / "corpus")
+    write_corpus(docs, out, partition_by=("lang",), max_records_per_file=5)
+    before = sorted(
+        tuple(r) for r in spark.read.parquet(out).select("doc_id", "lang").collect()
+    )
+
+    real_replace = os.replace
+    calls = {"n": 0}
+
+    def crash_after_marker(a, b):
+        calls["n"] += 1
+        if calls["n"] >= 2:  # 1 = marker commit, 2 = first move-in
+            raise OSError("simulated crash before any move-in")
+        real_replace(a, b)
+
+    monkeypatch.setattr(os, "replace", crash_after_marker)
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_corpus(spark, out, target_bytes=1 << 30)
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    markers = [
+        os.path.join(r, COMPACT_MARKER)
+        for r, _, fs in os.walk(out)
+        if COMPACT_MARKER in fs
+    ]
+    assert len(markers) == 1
+    import json
+
+    with open(markers[0]) as fh:
+        st = json.load(fh)
+    shutil.rmtree(st["tmp"])  # simulate external tmp cleanup
+
+    assert recover_compaction(out) == []  # aborted, nothing "recovered"
+    assert os.path.exists(markers[0])  # journal left for a re-run
+    after = sorted(
+        tuple(r) for r in spark.read.parquet(out).select("doc_id", "lang").collect()
+    )
+    assert after == before  # zero data loss

@@ -1,14 +1,13 @@
-"""10x scale check for the round-3 dedup additions (SCALING.md):
+"""10x scale check for the dedup families (SCALING.md):
 
 - dedup_recall (full blocked exact truth) vs dedup_recall_sampled
   (deterministic doc_id % 4 truth sample) at 1x and 10x — the sampled
   gate is the 100 TB recipe; this measures what it buys.
-- dedup_clusters at 10x with pointer doubling (round 2 measured the
-  plain-propagation loop at 340 s on 21.4M edges; the jump adds a
-  self-join per round but rounds stay 2-3 on near-clique graphs).
+- dedup_clusters at 10x: the connected-components fold over the
+  verified pairs, whose level count follows the pair partitions.
 - connected_components on the 10x verified-pair graph PLUS an injected
-  4096-node chain — the adversarial shape: plain propagation would need
-  4095 rounds; pointer doubling must stay ≤ ~log2 + slack.
+  4096-node chain — the shape that costs label propagation one round
+  per hop; the fold's levels must not grow with it.
 
 Usage: python tools/scale_dedup.py [one_x_dir ten_x_dir]
 (builds ten_x_dir via tools/make_scale10.py if missing)
@@ -35,6 +34,21 @@ def timed(label: str, fn) -> None:
     print(f"{label}: {round(time.time() - t0, 1)}s {out}", flush=True)
 
 
+def one_task_stage_ms(spark, group: str) -> list[int]:
+    """Executor run time (ms) of every 1-task stage job group ``group``
+    ran, in job order: the fold's last level is one of them."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            st = store.lastStageAttempt(sid)
+            if st.numTasks() == 1 and st.submissionTime().isDefined():
+                out.append(int(st.executorRunTime()))
+    return out
+
+
 def main() -> None:
     one_x = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     ten_x = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scale10"
@@ -56,7 +70,10 @@ def main() -> None:
             f"dedup_recall_sampled {label}",
             lambda d=d: noop(QUERIES["dedup_recall_sampled"](spark, d)),
         )
+    spark.sparkContext.setJobGroup("clusters", "dedup_clusters 10x")
     timed("dedup_clusters 10x", lambda: noop(QUERIES["dedup_clusters"](spark, ten_x)))
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    print(f"  1-task stage run ms: {one_task_stage_ms(spark, 'clusters')}", flush=True)
 
     # round-3 pipeline + embedding families (embeddings are tiled too)
     for name in (
@@ -73,7 +90,7 @@ def main() -> None:
             timed(f"{name} {label}", lambda n=name, d=d: noop(QUERIES[n](spark, d)))
 
     # adversarial chain: verified 10x edges + a 4096-node chain over
-    # fresh node ids; rounds must stay logarithmic
+    # fresh node ids; the fold's levels must not follow its length
     from debgpt7_8_with_vectordb_spark.plans.dedup_queries import (
         dedup_minhash_verified,
     )
@@ -87,7 +104,6 @@ def main() -> None:
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     edges = pairs.union(chain)
-    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     nodes = (
         spark.read.parquet(f"{ten_x}/documents.parquet")
         .select("doc_id")
@@ -95,11 +111,14 @@ def main() -> None:
     )
 
     t0 = time.time()
-    labels, rounds = connected_components(nodes, sym)
+    spark.sparkContext.setJobGroup("cc", "cc 10x+4096chain")
+    labels, rounds = connected_components(nodes, edges)
     n_clusters = labels.select("lab").distinct().count()
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     print(
         f"cc 10x+4096chain: {round(time.time() - t0, 1)}s rounds={rounds} "
-        f"clusters={n_clusters}",
+        f"clusters={n_clusters} "
+        f"1-task stage run ms: {one_task_stage_ms(spark, 'cc')}",
         flush=True,
     )
     spark.stop()

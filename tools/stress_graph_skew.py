@@ -1,33 +1,25 @@
-"""Pointer-doubling hot-label skew stress (VERDICT r5 next-round #5).
+"""Hot-component skew stress for the connected-components fold.
 
-The worry: connected_components' neighbor-min groupBy keys on dst and
-the jump self-join keys on labels — a mega-component concentrates both
-on the canonical label. This tool plants the adversarial graph and
-MEASURES it instead of asserting:
+The fold (operators/graph.py) has no join or groupBy key, so a
+mega-component cannot concentrate rows on one reducer. What it does
+bound is per-task memory: a level-0 task holds the distinct nodes of its
+edge partition, a merge task the distinct nodes of its ≤ 2 input
+forests, and the last level every node that has an edge. This tool plants
+the adversarial graph and MEASURES the levels, the wall and the per-task
+durations instead of asserting:
 
 - a 10^4-member near-clique (every member wired to 50 deterministic
   in-class neighbors — the bounded-degree shape a pair-emission cap
   produces; an uncapped clique's c^2 edges are the documented
   output-bound case, not a skew case),
-- two 10^4-node chains (worst case for round count: diameter 10^4,
-  pointer doubling must close it in ~log2 rounds),
+- two 10^4-node chains (diameter 10^4: the levels must not follow it),
 - 10^5 background pair-components (the realistic long tail).
 
-Task-duration skew is read from Spark's OWN event log (a dedicated
-session with spark.eventLog.enabled; the UI is off in this deployment):
-for every stage with meaningful work we report max/median task duration
-and flag stragglers >4x median. Why the hot label is structurally
-bounded anyway:
-
-- neighbor-min groupBy: partial (map-side) aggregation collapses each
-  partition's rows per key to ONE before the shuffle, so the reducer
-  for the canonical label receives at most #map-partitions rows, not
-  the component's degree sum;
-- jump self-join on lab: the build side is unique per key; the probe
-  side concentrates on the canonical label as convergence nears. AQE's
-  skew-join split (enabled session-wide) subdivides that partition at
-  runtime — and each row is two longs, so even a 10^8-member class is
-  ~1.6 GB on one key, within a split's reach.
+Edges are given in one direction per pair. Task durations are read from
+Spark's OWN event log (a dedicated session with spark.eventLog.enabled;
+the UI is off in this deployment): for every stage with meaningful work
+we report max/median task duration and flag stragglers >4x median;
+every cc-group stage is listed, the one-task last level included.
 
 Usage: python tools/stress_graph_skew.py [clique_n] [chain_n]
 Prints a summary block for SCALING.md.
@@ -57,7 +49,7 @@ def build_graph(
     spark, clique_n: int, chain_n: int, degree: int = 50, bg_n: int = 200_000
 ):
     """Planted graph: ids [0, clique_n) = near-clique; two chains after
-    it; then background 2-node components. Edges returned SYMMETRIC."""
+    it; then background 2-node components. One edge row per pair."""
     clique = spark.range(clique_n).select(F.col("id").alias("src"))
     # 50 deterministic in-class neighbors per node (hash arithmetic, no
     # rand() — reruns measure the same graph)
@@ -82,16 +74,13 @@ def build_graph(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     edges = clique_edges.union(chain1).union(chain2).union(bg)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
     # a real pair table arrives hash-distributed by key (it is the
     # output of a shuffle); without this the builder's union leaves one
     # partition holding the entire exploded clique — input pathology,
     # not the operator's
-    sym = sym.repartition(spark.sparkContext.defaultParallelism, "src")
+    edges = edges.repartition(spark.sparkContext.defaultParallelism, "src")
     nodes = spark.range(bg_start + bg_n).select(F.col("id").alias("doc_id"))
-    return nodes, sym
+    return nodes, edges
 
 
 def task_skew_from_eventlog(app_id: str) -> list[tuple[int, int, float, float]]:
@@ -165,15 +154,17 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
-    nodes, sym = build_graph(spark, clique_n, chain_n)
-    n_nodes = nodes.count()
-    n_edges = sym.count()
-    t0 = time.time()
+    nodes, edges = build_graph(spark, clique_n, chain_n)
     # job group 'cc' marks the stages under test — the planted-graph
     # BUILD has deliberately heterogeneous partitions (one holds the
-    # whole exploded clique) and must not pollute the skew verdict
+    # whole exploded clique), so it is pinned here, outside the group,
+    # and must not pollute the skew verdict
+    edges = edges.localCheckpoint(eager=True)
+    n_nodes = nodes.count()
+    n_edges = edges.count()
+    t0 = time.time()
     spark.sparkContext.setJobGroup("cc", "connected_components stress")
-    labels, rounds = connected_components(nodes, sym)
+    labels, rounds = connected_components(nodes, edges)
     # correctness: one label per planted component
     agg = (
         labels.groupBy("lab")
@@ -190,7 +181,7 @@ def main() -> int:
         and comp_sizes.get(clique_n + chain_n) == chain_n
     )
     print(
-        f"graph: {n_nodes} nodes, {n_edges} sym-edges "
+        f"graph: {n_nodes} nodes, {n_edges} edges "
         f"(clique={clique_n} deg~100, 2 chains of {chain_n}, 100k pair tail)"
     )
     print(f"rounds={rounds} wall={wall:.1f}s components_correct={ok}")
@@ -200,19 +191,22 @@ def main() -> int:
     rows = task_skew_from_eventlog(app_id)
     flagged = []
     print(
-        "\nstage task-skew (cc-group stages with >=8 tasks and "
-        "median >= 20 ms; straggler = max > 4x median):"
+        "\ncc-group stages (straggler = max > 4x median, flagged on "
+        "stages with >=8 tasks and median >= 20 ms; a 1-task stage is a "
+        "last fold level or a final join/aggregate):"
     )
     for sid, n, med, mx, name, in_cc in rows:
-        if in_cc and n >= 8 and med >= 20:
-            ratio = mx / max(med, 1e-9)
-            mark = "  <-- STRAGGLER >4x" if ratio > 4 else ""
-            if ratio > 4:
-                flagged.append(sid)
-            print(
-                f"  stage {sid:>4}: tasks={n:>3} median={med:.0f}ms "
-                f"max={mx:.0f}ms ratio={ratio:.2f}  [{name[:48]}]{mark}"
-            )
+        if not in_cc:
+            continue
+        ratio = mx / max(med, 1e-9)
+        mark = ""
+        if n >= 8 and med >= 20 and ratio > 4:
+            flagged.append(sid)
+            mark = "  <-- STRAGGLER >4x"
+        print(
+            f"  stage {sid:>4}: tasks={n:>3} median={med:.0f}ms "
+            f"max={mx:.0f}ms ratio={ratio:.2f}  [{name[:48]}]{mark}"
+        )
     print(f"\nflagged_stages={flagged}")
     return 0 if ok and not flagged else 1
 
