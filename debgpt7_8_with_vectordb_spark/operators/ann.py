@@ -27,7 +27,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.hashing import md5_long
-from ..functions.vector import cosine_similarity, l2_normalize
+from ..functions.vector import l2_normalize, vector_lit
+from . import retrieval
 
 
 def assign_clusters_np(
@@ -193,20 +194,14 @@ def probe_ivf(
     qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
     q = [x / qn for x in query_vec]
     probe = select_probes(centroids, query_vec, nprobe)
-
-    qlit = F.array(*[F.lit(x) for x in q])
-    return (
-        indexed.filter(F.col("cluster_id").isin(probe))
-        .select(
-            "id",
-            # cast AFTER the pruning filter: a parquet-partitioned index
-            # infers cluster_id as int; the catalog schema is long
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            F.round(cosine_similarity(F.col("nv"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(topk)
+    scored = indexed.filter(F.col("cluster_id").isin(probe)).select(
+        "id",
+        # cast AFTER the pruning filter: a parquet-partitioned index
+        # infers cluster_id as int; the catalog schema is long
+        F.col("cluster_id").cast("long").alias("cluster_id"),
+        retrieval.cosine_score(F.col("nv"), vector_lit(q)).alias("score"),
     )
+    return retrieval.topk(scored, topk, "id")
 
 
 def srp_planes(dim: int, n_planes: int) -> list[list[float]]:
@@ -233,20 +228,20 @@ def srp_signatures(
     out_col: str = "sig",
 ) -> DataFrame:
     """Signed-random-projection bucket signatures via one Arrow-batched
-    BLAS matmul per batch: ``sign(round(M @ Pᵀ, 6))`` → bit string.
+    BLAS matmul per batch: ``sign(round(M @ Pᵀ, 6))`` → bit string
+    (:func:`srp_query_sig` is the same math for one query vector).
 
-    Replaces the round-1 per-plane ``aggregate``/``zip_with`` expression:
-    higher-order array functions are INTERPRETED (no codegen) and
-    measured ~10× slower than one numpy matmul per Arrow batch (the
-    `embedding_neardup` BLAS lesson, NOTES.md). The dot products are
-    rounded to 6 decimals BEFORE taking the sign — the engine-wide score
-    convention — so a projection landing within 1 ulp of 0 can never
-    round to opposite signs across engines and flip a bucket key.
+    A numpy matmul per Arrow batch, not a per-plane ``aggregate``/
+    ``zip_with`` expression: higher-order array functions are
+    interpreted (no codegen) and ~10× slower (NOTES.md). The dot
+    products are rounded to 6 decimals BEFORE taking the sign — the
+    engine-wide score convention — so a projection landing within 1 ulp
+    of 0 can never round to opposite signs across engines and flip a
+    bucket key.
 
     Zero shuffle: the signature is per-row math; at rest it is the
     table's partition/bucket column.
     """
-    import numpy as np
     from pyspark.sql.types import StringType, StructField, StructType
 
     P = np.asarray(planes, dtype=np.float64)
@@ -263,6 +258,14 @@ def srp_signatures(
             yield pdf.assign(**{out_col: sig})
 
     return df.mapInPandas(run, schema=schema)
+
+
+def srp_query_sig(query_vec: list[float], planes: list[list[float]]) -> str:
+    """The :func:`srp_signatures` bucket key of one query vector,
+    computed on the driver: ``sign(round(q @ Pᵀ, 6))`` as a bit string."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    bits = np.round(q @ np.asarray(planes, dtype=np.float64).T, 6) >= 0
+    return "".join("1" if b else "0" for b in bits)
 
 
 # ---------------------------------------------------------------------------
@@ -345,8 +348,6 @@ def pq_adc_topk(
     table lookups summed, rounded to 6dp. No raw vectors touched: this
     is the scan shape PQ exists for. Returns exact top-k over the
     approximate scores (TakeOrdered — never a full sort)."""
-    import numpy as np
-
     q = np.asarray(query_vec, dtype=np.float64)
     m = len(codebooks)
     dsub = len(q) // m
@@ -372,9 +373,5 @@ def pq_adc_topk(
         ),
         6,
     )
-    return (
-        codes.withColumn("_lut", lut_col)
-        .select("id", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(topk)
-    )
+    scored = codes.withColumn("_lut", lut_col).select("id", score.alias("score"))
+    return retrieval.topk(scored, topk, "id")

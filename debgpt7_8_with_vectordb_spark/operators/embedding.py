@@ -30,7 +30,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..functions.hashing import md5_long
-from ..functions.vector import l2_normalize, truncate_dim
+from ..functions.vector import l2_normalize, truncate_dim, vector_lit
+from . import retrieval
+from .ann import srp_planes, srp_query_sig, srp_signatures
 
 EmbedFn = Callable[[list[str]], list[list[float]]]
 
@@ -154,18 +156,16 @@ def bulk_index_build(
     pruning is partition pruning at 100 TB.
 
     The bucket key MUST be a function of vector geometry: angularly
-    close vectors share sign bits, so pruned probes keep recall. (The
-    round-1 key, md5(text) % n, balanced partitions but was uncorrelated
-    with geometry — probing it had near-zero recall. A trained
-    alternative is ``ann.build_ivf_index``'s KMeans assignment; SRP
-    needs no training pass and buckets a query driver-side.) The planes
+    close vectors share sign bits, so pruned probes keep recall (a key
+    uncorrelated with geometry, such as md5(text) % n, balances
+    partitions but probes at near-zero recall). A trained alternative is
+    ``ann.build_ivf_index``'s KMeans assignment; SRP needs no training
+    pass and buckets a query driver-side. The planes
     are persisted in a ``_planes.json`` sidecar so probes recompute the
     query's bucket with bit-identical math — see ``probe_bulk_index``.
     """
     import json
     import os
-
-    from .ann import srp_planes, srp_signatures
 
     planes = srp_planes(dim, n_bits)
     embedded = docs.select(
@@ -197,26 +197,14 @@ def probe_bulk_index(
     import json
     import os
 
-    import numpy as np
-
-    from ..functions.vector import cosine_similarity
-
     with open(os.path.join(index_path, "_planes.json")) as f:
         planes = json.load(f)
-    q = np.asarray(query_vec, dtype=np.float64)
-    bits = (np.round(q @ np.asarray(planes, dtype=np.float64).T, 6) >= 0).astype(int)
-    home = int("".join(map(str, bits)), 2)
+    home = int(srp_query_sig(query_vec, planes), 2)
     buckets = [home] + [home ^ (1 << i) for i in range(len(planes))][: nprobe - 1]
-
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     idx = spark.read.parquet(index_path)
-    return (
-        idx.filter(F.col("cluster_id").isin(buckets))
-        .select(
-            "id",
-            "cluster_id",
-            F.round(cosine_similarity(F.col("vector"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(topk)
+    scored = idx.filter(F.col("cluster_id").isin(buckets)).select(
+        "id",
+        "cluster_id",
+        retrieval.cosine_score(F.col("vector"), vector_lit(query_vec)).alias("score"),
     )
+    return retrieval.topk(scored, topk, "id")

@@ -16,7 +16,10 @@ Spark-first shape:
 Scores are rounded *before* ranking so that float64-vs-oracle drift in the
 last ulp cannot flip an ordering; ties break on the id ascending (the
 reference silently relies on argsort stability at vectordb.py:208 —
-SURVEY.md §7.7 risk 4).
+SURVEY.md §7.7 risk 4). Every rounded-cosine ranking in the package —
+exact, IVF, SRP and PQ rerank, and the recall gates that compare them —
+scores with :func:`cosine_score` and ranks with :func:`topk`, so the
+rule lives here once.
 """
 
 from __future__ import annotations
@@ -24,11 +27,17 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..functions.vector import cosine_similarity, vector_lit
 
 SCORE_DECIMALS = 6
+
+
+def cosine_score(vec: Column, query: Column) -> Column:
+    """The engine's ranking score: cosine rounded to ``SCORE_DECIMALS``
+    (NULL for a zero vector, which sorts last under ``desc``)."""
+    return F.round(cosine_similarity(vec, query), SCORE_DECIMALS)
 
 
 def score_against_query(
@@ -37,18 +46,28 @@ def score_against_query(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Add a rounded cosine ``score`` column vs a broadcast literal query."""
+    """(id, ``score``): every row's :func:`cosine_score` against a
+    literal query vector."""
     return emb.select(
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), vector_lit(query_vec)), SCORE_DECIMALS
-        ).alias("score"),
+        F.col(id_col), cosine_score(F.col(vec_col), vector_lit(query_vec)).alias("score")
     )
 
 
 def topk(scored: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
-    """Distributed top-k: TakeOrderedAndProject, deterministic tiebreak."""
+    """The k best rows by ``score``, ties to the smaller id:
+    TakeOrderedAndProject, never a full sort."""
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+
+
+def recall_at_k(
+    exact_ids: DataFrame, approx_ids: DataFrame, k: int, id_col: str = "vec_id"
+) -> DataFrame:
+    """One row, ``recall_at_{k}`` = |exact ∩ approx| / k, tallied inside
+    the plan: building it runs no job. The exact side (k rows) is
+    broadcast, so tallies of several approximate sides against one
+    exact side share its exchange."""
+    hits = approx_ids.select(id_col).join(F.broadcast(exact_ids.select(id_col)), id_col)
+    return hits.agg((F.count("*").cast("double") / k).alias(f"recall_at_{k}"))
 
 
 def resolve_provenance(
@@ -66,8 +85,11 @@ def resolve_provenance(
 
 
 def get_query_vector(emb: DataFrame, vec_id: int, id_col: str = "vec_id", vec_col: str = "embedding") -> list[float]:
-    """Fetch one stored vector driver-side to use as the query (tiny)."""
-    row = emb.filter(F.col(id_col) == vec_id).select(vec_col).head()
-    if row is None:
+    """Fetch one stored vector driver-side to use as the query, in one
+    job: a filtered ``collect``, where ``head()`` re-launches a job per
+    batch of partitions until a row turns up. With repeated ids the
+    first row in partition order wins, as with ``head()``."""
+    rows = emb.filter(F.col(id_col) == vec_id).select(vec_col).collect()
+    if not rows:
         raise KeyError(f"no vector with {id_col}={vec_id}")
-    return [float(x) for x in row[0]]
+    return [float(x) for x in rows[0][0]]

@@ -18,22 +18,18 @@ Rae et al. 2021 Table A1 and Raffel et al. 2020 §2.2.
 
 from __future__ import annotations
 
-import itertools
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-_STREAM_SINK_SEQ = itertools.count()
-
 from ..functions.bind import let
 from ..functions.web import normalize_url_column
-from ..loops import capped_partitions
 from ..operators.crawl import curate_crawl, expand_sitemaps
 from ..operators.quality_rules import (
     GOPHER_STOPWORDS,
     c4_clean_lines,
     gopher_quality_signals,
 )
+from ..streaming.drain import drain_memory
 from ..tables import fan_out, load_table
 from .catalog import query
 
@@ -566,7 +562,7 @@ _DOCS_STREAM_SCHEMA = (
 @query("stream_curate", oracle=_CURATE_FUNNEL_ORACLE)
 def stream_curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of ``curate_crawl`` — curation at ingest time
-    (§2.13 extension, round 8): pages arrive as a file stream, the
+    (§2.13 extension): pages arrive as a file stream, the
     stateless head (robots gate, URL canonicalization — both Arrow
     passes over the stream) runs per micro-batch, and the same-URL
     first-fetch keep rule becomes a STREAMING min_by aggregation in
@@ -581,56 +577,44 @@ def stream_curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle proves ingest-time curation computes the relational funnel.
 
     The keep rule orders on (fetched_at, RAW url) — byte-identical to
-    the batch operator since r9, with the raw spelling carried through
+    the batch operator, with the raw spelling carried through
     the state struct — and the fixture deliberately contains
     same-timestamp fetches (every 3rd page) so the tiebreak is
     exercised, not just declared."""
     from ..functions.web import robots_filter
     from ..operators.crawl import finalize_curated
 
-    with capped_partitions(spark, 8):
-        docs = (
-            spark.readStream.schema(_DOCS_STREAM_SCHEMA)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-            .select("doc_id", F.coalesce("text", F.lit("")).alias("text"))
-        )
-        pages = _synth_warc(docs).filter(
-            (F.col("warc_type") == "response")
-            & (F.col("http_status") == 200)
-            & F.col("html").isNotNull()
-        ).select(
-            F.col("target_uri").alias("url"),
-            F.col("warc_date").alias("fetched_at"),
-            "html",
-        )
-        pages = robots_filter(pages, _robots_table(spark))
-        pages = normalize_url_column(pages, "url").filter(
-            F.col("url_norm").isNotNull()
-        )
-        # order by (fetched_at, RAW url) — exactly the batch keep-rule
-        # (operators/crawl.py) so same-timestamp fetches of one
-        # canonical URL pick the same spelling in both engines
-        order_key = F.struct(
-            F.coalesce(F.col("fetched_at"), F.lit("￿")).alias("_o1"),
-            F.col("url").alias("_o2"),
-        )
-        keep = F.struct("url", "fetched_at", "html", "domain")
-        best = pages.groupBy("url_norm").agg(
-            F.min_by(keep, order_key).alias("_keep")
-        )
-        name = f"stream_curate_sink_{next(_STREAM_SINK_SEQ)}"
-        q = (
-            best.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    docs = (
+        spark.readStream.schema(_DOCS_STREAM_SCHEMA)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+        .select("doc_id", F.coalesce("text", F.lit("")).alias("text"))
+    )
+    pages = _synth_warc(docs).filter(
+        (F.col("warc_type") == "response")
+        & (F.col("http_status") == 200)
+        & F.col("html").isNotNull()
+    ).select(
+        F.col("target_uri").alias("url"),
+        F.col("warc_date").alias("fetched_at"),
+        "html",
+    )
+    pages = robots_filter(pages, _robots_table(spark))
+    pages = normalize_url_column(pages, "url").filter(
+        F.col("url_norm").isNotNull()
+    )
+    # order by (fetched_at, RAW url) — exactly the batch keep-rule
+    # (operators/crawl.py) so same-timestamp fetches of one
+    # canonical URL pick the same spelling in both engines
+    order_key = F.struct(
+        F.coalesce(F.col("fetched_at"), F.lit("￿")).alias("_o1"),
+        F.col("url").alias("_o2"),
+    )
+    keep = F.struct("url", "fetched_at", "html", "domain")
+    best = pages.groupBy("url_norm").agg(F.min_by(keep, order_key).alias("_keep"))
     # batch epilogue: re-reduce update emissions (idempotent), then the
     # funnel tail shared with the batch operator
-    emitted = spark.table(name).select(
+    emitted = drain_memory(best, "stream_curate", "update").select(
         "url_norm",
         F.col("_keep.url").alias("url"),
         F.col("_keep.fetched_at").alias("fetched_at"),

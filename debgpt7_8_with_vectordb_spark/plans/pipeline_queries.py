@@ -20,15 +20,19 @@ oracle gate as the relational catalog:
 
 from __future__ import annotations
 
-import itertools
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..loops import capped_partitions
 from ..operators.embedding import hash_provider_8, provider_embed
 from ..sources.readers import read_any_path
-from ..streaming.sessionize import sessionize_stream, stream_events_from_dir
+from ..streaming.drain import drain_memory
+from ..streaming.joins import attribution_join, stream_dedup
+from ..streaming.sessionize import (
+    sessionize_stream,
+    stream_events_from_dir,
+    windowed_counts_stream,
+)
+from ..streaming.stateful import funnel_states
 from ..tables import load_table
 from .catalog import query
 
@@ -188,25 +192,13 @@ def stream_windowed_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming windows align with date_trunc (epoch-aligned UTC)."""
     from pyspark.sql import Window as W
 
-    from ..streaming.sessionize import windowed_counts_stream
-
-    with capped_partitions(spark, 8):
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        counts = windowed_counts_stream(ev, window="1 day", watermark="2 hours")
-        name = f"stream_windowed_topk_sink_{next(_SINK_SEQ)}"
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
+    counts = windowed_counts_stream(ev, window="1 day", watermark="2 hours")
     w = W.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
     return (
-        spark.table(name)
+        drain_memory(counts, "stream_windowed_topk", "complete")
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
     )
@@ -263,9 +255,6 @@ def paginated_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fetch_paginated(seeds, _chain_fetch, max_pages=20)
 
 
-_SINK_SEQ = itertools.count()
-
-
 @query(
     "sessionize_stream",
     oracle="""
@@ -309,21 +298,11 @@ def sessionize_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one instance per partition costs provider init + commit per batch,
     so 32 instances over this test feed were 4× slower than 8 (measured
     — overhead, not compute). A 100 TB/day feed sets this to thousands
-    BEFORE the first start; this query scopes the setting to the stream
+    BEFORE the first start; the drain scopes the setting to the stream
     and restores the session conf after."""
-    with capped_partitions(spark, 8):
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        sess = sessionize_stream(ev, gap="1 hour", watermark="2 hours")
-        name = f"sessionize_stream_sink_{next(_SINK_SEQ)}"
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
+    sess = sessionize_stream(ev, gap="1 hour", watermark="2 hours")
+    return drain_memory(sess, "sessionize_stream", "complete")
 
 
 @query(
@@ -346,23 +325,10 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range join is a full oracle — streaming semantics == relational
     semantics on finite input, which is exactly the property worth
     proving."""
-    from ..streaming.joins import attribution_join
-
-    with capped_partitions(spark, 8):
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        purchases = ev.filter(F.col("event_type") == "purchase")
-        clicks = ev.filter(F.col("event_type") != "purchase")
-        joined = attribution_join(purchases, clicks)
-        name = f"stream_attr_sink_{next(_SINK_SEQ)}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    clicks = ev.filter(F.col("event_type") != "purchase")
+    return drain_memory(attribution_join(purchases, clicks), "stream_attr", "append")
 
 
 @query(
@@ -378,21 +344,8 @@ def stream_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The feed's event_ids are unique, so the deduped stream must carry
     exactly one row per id — count == distinct-count, checked against
     the batch oracle."""
-    from ..streaming.joins import stream_dedup
-
-    with capped_partitions(spark, 8):
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        deduped = stream_dedup(ev)
-        name = f"stream_dedup_sink_{next(_SINK_SEQ)}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    t = spark.table(name)
+    ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
+    t = drain_memory(stream_dedup(ev), "stream_dedup", "append")
     return t.agg(
         F.count("*").cast("long").alias("n_rows"),
         F.countDistinct("event_id").cast("long").alias("n_ids"),
@@ -474,18 +427,8 @@ def stream_neardup_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "band", "sig"
     )
     joined = bands.join(prior, ["band", "sig"], "left")
-    with capped_partitions(spark, 8):
-        name = f"stream_neardup_sink_{next(_SINK_SEQ)}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain_memory(joined, "stream_neardup", "append")
         .groupBy("doc_id")
         .agg(
             F.max(F.coalesce("matched", F.lit(False))).alias("near_dup")
@@ -544,25 +487,14 @@ def stream_event_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the chain from its pruned candidate frontier each
     batch, so cross-batch disorder cannot stick — pinned by the
     split-feed test in tests/test_stream_funnel.py)."""
-    from ..streaming.sessionize import stream_events_from_dir
-    from ..streaming.stateful import funnel_states
     from .analytics_queries import _FUNNEL
 
-    with capped_partitions(spark, 8):
-        ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
-        st = funnel_states(ev, funnel=_FUNNEL, idle_timeout_ms=None)
-        name = f"stream_funnel_sink_{next(_SINK_SEQ)}"
-        q = (
-            st.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    ev = stream_events_from_dir(spark, sf_dir, glob="events.parquet")
+    st = funnel_states(ev, funnel=_FUNNEL, idle_timeout_ms=None)
     deepest = (
-        spark.table(name).groupBy("user_id").agg(F.max("stage").alias("stage"))
+        drain_memory(st, "stream_funnel", "update")
+        .groupBy("user_id")
+        .agg(F.max("stage").alias("stage"))
     )
     counts = deepest.agg(
         *[

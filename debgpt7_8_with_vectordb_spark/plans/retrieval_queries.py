@@ -13,16 +13,27 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions.vector import cosine_similarity, l2_norm, l2_normalize, truncate_dim
+from ..functions.vector import l2_norm, l2_normalize, truncate_dim, vector_lit
 from ..operators import artifacts
+from ..operators.ann import PQ_KSUB as _PQ_KSUB
+from ..operators.ann import PQ_SUBSPACES as _PQ_M
 from ..operators.ann import (
     assign_clusters_np,
     build_pq_codebooks,
+    pq_adc_topk,
+    pq_encode_np,
+    probe_ivf,
+    select_probes,
+    srp_planes,
+    srp_query_sig,
+    srp_signatures,
     train_ivf_centroids,
     unit_vectors,
 )
 from ..operators.retrieval import (
+    cosine_score,
     get_query_vector,
+    recall_at_k,
     resolve_provenance,
     score_against_query,
     topk,
@@ -36,21 +47,20 @@ _D = "list_transform({v}, x -> x::DOUBLE)"
 
 
 def _cos(a: str, b: str) -> str:
-    """Zero-norm-guarded DuckDB cosine (r12 fuzz seed 135): DuckDB's
-    ``list_cosine_similarity`` returns -1.0 BY CONVENTION when either
-    operand is the zero vector; the engine (functions/vector.py
-    ``cosine_similarity``, mirroring the reference's np-divide
-    semantics) yields NULL there, sorting last under ``DESC``. Every
-    oracle cosine goes through this guard so degenerate vectors
-    compare NULL-to-NULL cross-engine; non-degenerate pairs stay
-    bit-identical to the bare call.
+    """Zero-norm-guarded DuckDB cosine: ``list_cosine_similarity``
+    returns -1.0 BY CONVENTION when either operand is the zero vector;
+    the engine (functions/vector.py ``cosine_similarity``, mirroring the
+    reference's np-divide semantics) yields NULL there, sorting last
+    under ``DESC``. Every oracle cosine goes through this guard so
+    degenerate vectors compare NULL-to-NULL cross-engine;
+    non-degenerate pairs stay bit-identical to the bare call.
 
     The guard computes the divisor EXACTLY as the engine does
-    (``try_divide(dot, sqrt(Σa²)·sqrt(Σb²))``, functions/vector.py:75):
-    NULL iff the norm PRODUCT is 0.0, not per-operand Σ² = 0 — for tiny
-    non-zero vectors (components ~1e-162) each sqrt is non-zero but
-    their product underflows to 0.0, and the engine NULLs there too
-    (ADVICE r12 #1)."""
+    (``try_divide(dot, sqrt(Σa²)·sqrt(Σb²))``, functions/vector.py
+    ``cosine_similarity``): NULL iff the norm PRODUCT is 0.0, not
+    per-operand Σ² = 0 — for tiny non-zero vectors (components
+    ~1e-162) each sqrt is non-zero but their product underflows to 0.0,
+    and the engine NULLs there too."""
     return (
         f"CASE WHEN sqrt(list_sum(list_transform({a}, zz -> zz * zz)))"
         f" * sqrt(list_sum(list_transform({b}, zz -> zz * zz))) = 0"
@@ -111,13 +121,9 @@ def topk_retrieval_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qv = get_query_vector(emb, 1)
     scored = emb.filter(F.col("label") == 3).select(
-        "vec_id",
-        "label",
-        F.round(cosine_similarity(F.col("embedding"), F.array(*[F.lit(x) for x in qv])), 6).alias(
-            "score"
-        ),
+        "vec_id", "label", cosine_score(F.col("embedding"), vector_lit(qv)).alias("score")
     )
-    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(5)
+    return topk(scored, 5)
 
 
 @query(
@@ -154,7 +160,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.select(
         "qid",
         "vec_id",
-        F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 6).alias("score"),
+        cosine_score(F.col("embedding"), F.col("qv")).alias("score"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -226,10 +232,13 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the recall oracle (BASELINE.md §2).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = get_query_vector(emb, 2)
-    qlit = F.array(*[F.lit(x) for x in qv])
+    return _label_ivf_topk(emb, get_query_vector(emb, 2), 5)
 
-    cent = (
+
+def _label_centroids(emb: DataFrame) -> DataFrame:
+    """(label, cv): each label's mean embedding in double, components
+    in position order — the label-as-cluster centroid table."""
+    return (
         emb.select("label", F.posexplode("embedding").alias("pos", "val"))
         .groupBy("label", "pos")
         .agg(F.avg(F.col("val").cast("double")).alias("c"))
@@ -240,21 +249,20 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv")
         )
     )
-    sel = (
-        cent.select(
-            "label", F.round(cosine_similarity(F.col("cv"), qlit), 6).alias("cs")
-        )
-        .orderBy(F.desc("cs"), F.asc("label"))
-        .limit(2)
-        .select("label")
+
+
+def _label_ivf_topk(emb: DataFrame, qv: list[float], k: int) -> DataFrame:
+    """(vec_id, label, score): the top-k rows inside the 2 labels whose
+    centroid ranks best against ``qv`` — the label-as-cluster IVF probe."""
+    qlit = vector_lit(qv)
+    cent = _label_centroids(emb).select(
+        "label", cosine_score(F.col("cv"), qlit).alias("score")
     )
-    probed = emb.join(F.broadcast(sel), "label")
-    scored = probed.select(
-        "vec_id",
-        "label",
-        F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("score"),
+    probes = topk(cent, 2, "label").select("label")
+    scored = emb.join(F.broadcast(probes), "label").select(
+        "vec_id", "label", cosine_score(F.col("embedding"), qlit).alias("score")
     )
-    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(5)
+    return topk(scored, k)
 
 
 @query(
@@ -289,55 +297,14 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the IVF scale path vs the exact brute-force scorer —
     the quality gate BASELINE.md §2 requires for any approximate
     retrieval. Exact top-10 (full scan, TakeOrderedAndProject) and IVF
-    top-10 (nprobe=2 cluster pruning) computed in one job; recall =
-    |intersection| / k. The exact side IS the reference's semantics
-    (vectordb.py:203-208), so this measures precisely what switching to
-    the approximate path costs."""
+    top-10 (nprobe=2 cluster pruning) are joined and tallied inside the
+    plan; recall = |intersection| / k. The exact side IS the reference's
+    semantics (vectordb.py:203-208), so this measures precisely what
+    switching to the approximate path costs."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = get_query_vector(emb, 2)
-    qlit = F.array(*[F.lit(x) for x in qv])
-
-    exact = (
-        emb.select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
-
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("val").cast("double")).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("cv")
-        )
-    )
-    sel = (
-        cent.select(
-            "label", F.round(cosine_similarity(F.col("cv"), qlit), 6).alias("cs")
-        )
-        .orderBy(F.desc("cs"), F.asc("label"))
-        .limit(2)
-        .select("label")
-    )
-    approx = (
-        emb.join(F.broadcast(sel), "label")
-        .select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
-    hits = exact.join(approx, "vec_id").count()
-    return spark.createDataFrame([(hits / 10.0,)], "recall_at_10 double")
+    exact = topk(score_against_query(emb, qv), 10)
+    return recall_at_k(exact, _label_ivf_topk(emb, qv, 10), 10)
 
 
 @query(
@@ -384,12 +351,12 @@ FROM topped WHERE rn <= 10 GROUP BY np
 )
 def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 for nprobe in {1, 2, 4, 8} in ONE action — the IVF
-    quality/cost trade measured per round (generalizes ``ann_recall``;
-    VERDICT r1 #10). Clusters rank once by centroid cosine; each probe
-    level is its own filter → TakeOrderedAndProject branch (never a
-    global per-level window — each branch is the same pruned top-k shape
-    a production probe runs), unioned and compared against the exact
-    top-10 under the same tie rule.
+    quality/cost trade (generalizes ``ann_recall``). Clusters rank once
+    by centroid cosine; each probe level is its own filter →
+    TakeOrderedAndProject branch (never a global per-level window — each
+    branch is the same pruned top-k shape a production probe runs),
+    tallied against the exact top-10 under the same tie rule, and the
+    four one-row tallies are unioned.
 
     Recall must be monotone in nprobe by construction (probe sets nest);
     the pytest pins it. nprobe = #clusters ⇒ recall 1.0 exactly
@@ -398,64 +365,33 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = get_query_vector(emb, 2)
-    qlit = F.array(*[F.lit(x) for x in qv])
-
-    exact = (
-        emb.select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
-
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("val").cast("double")).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("cv")
-        )
-    )
+    qlit = vector_lit(qv)
+    exact = topk(score_against_query(emb, qv), 10)
     # the cluster ranking is a tiny table (one row per cluster) — the
     # constant-key window funnels only k rows, then broadcasts
     rw = Window.partitionBy(F.lit(0)).orderBy(
-        F.desc(F.round(cosine_similarity(F.col("cv"), qlit), 6)), F.asc("label")
+        F.desc(cosine_score(F.col("cv"), qlit)), F.asc("label")
     )
     # materialize the k-row ranking ONCE: four union branches each
     # broadcast it, and without this the centroid build (posexplode +
     # two shuffles) would re-execute per branch
     ranked = (
-        cent.withColumn("cr", F.row_number().over(rw))
+        _label_centroids(emb)
+        .withColumn("cr", F.row_number().over(rw))
         .select("label", "cr")
         .localCheckpoint(eager=True)
     )
 
     scored = emb.join(F.broadcast(ranked), "label").select(
-        "vec_id",
-        "cr",
-        F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("s"),
+        "vec_id", "cr", cosine_score(F.col("embedding"), qlit).alias("score")
     )
-    ex = F.broadcast(exact.withColumn("hit", F.lit(1)))
     branches = [
-        scored.filter(F.col("cr") <= p)
-        .orderBy(F.desc("s"), F.asc("vec_id"))
-        .limit(10)
-        .join(ex, "vec_id", "left")
-        .groupBy()
-        .agg(
-            F.lit(p).cast("long").alias("nprobe"),
-            (F.sum(F.coalesce(F.col("hit"), F.lit(0))) / 10.0).alias("recall_at_10"),
+        recall_at_k(exact, topk(scored.filter(F.col("cr") <= p), 10), 10).select(
+            F.lit(p).cast("long").alias("nprobe"), "recall_at_10"
         )
         for p in (1, 2, 4, 8)
     ]
-    return reduce(lambda a, b: a.unionByName(b), branches).select(
-        "nprobe", F.col("recall_at_10").cast("double").alias("recall_at_10")
-    )
+    return reduce(lambda a, b: a.unionByName(b), branches)
 
 
 @query(
@@ -587,8 +523,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the embeddings file identity: warm runs skip training and pay
     only the probe. Recall properties stay pinned in tests/test_ann.py
     (nprobe=k ⇒ recall 1.0; monotone)."""
-    from ..operators.ann import probe_ivf
-
     emb = load_table(spark, sf_dir, "embeddings")
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
     qv = get_query_vector(indexed, 2, id_col="id", vec_col="nv")
@@ -641,9 +575,6 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str, emb: DataFrame):
 
 
 _PQ_CODEBOOKS = "__PQ_CODEBOOKS__"
-from ..operators.ann import PQ_KSUB as _PQ_KSUB  # noqa: E402
-from ..operators.ann import PQ_SUBSPACES as _PQ_M  # noqa: E402
-
 _PQ_SEED = 42
 tag_artifact(_PQ_CODEBOOKS, f"m{_PQ_M}k{_PQ_KSUB}s{_PQ_SEED}")
 
@@ -704,8 +635,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared artifact; DuckDB replays normalize → per-subspace
     rounded-argmin encode → LUT build → ADC top-5 from it. Training
     only produces the codebooks the oracle consumes."""
-    from ..operators.ann import pq_adc_topk, pq_encode_np
-
     emb = load_table(spark, sf_dir, "embeddings")
     normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
@@ -807,25 +736,13 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist@100 + exact-rerank recipe reads 1.0 while direct
     recall@10 reads 0.3 — within-cluster order is quantization-limited
     by design (tests/test_pq_clustered.py, SCALING.md)."""
-    from ..operators.ann import pq_adc_topk, pq_encode_np
-
     emb = load_table(spark, sf_dir, "embeddings")
     normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    exact = (
-        normed.select(
-            "id", F.round(cosine_similarity(F.col("nv"), qlit), 6).alias("s")
-        )
-        .orderBy(F.desc("s"), F.asc("id"))
-        .limit(10)
-        .select("id")
-    )
-    approx = pq_adc_topk(pq_encode_np(normed, books), books, qv, topk=10).select("id")
-    return exact.join(approx, "id").agg(
-        (F.count("*").cast("double") / 10).alias("recall_at_10")
-    )
+    exact = topk(score_against_query(normed, qv, "id", "nv"), 10, "id")
+    approx = pq_adc_topk(pq_encode_np(normed, books), books, qv, topk=10)
+    return recall_at_k(exact, approx, 10, "id")
 
 
 @query(
@@ -908,8 +825,6 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULLY ORACLED by composing the two component oracles: DuckDB
     replays coarse assignment → probe selection → per-subspace encode →
     LUT → ADC top-5 from the same two parquet artifacts."""
-    from ..operators.ann import pq_adc_topk, pq_encode_np, select_probes
-
     emb = load_table(spark, sf_dir, "embeddings")
     normed = unit_vectors(emb)
     indexed, centroids = _ivf_index_cached(spark, sf_dir, emb)
@@ -984,22 +899,13 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle replays shortlist-then-rerank from the persisted codebook
     parquet; both engines rank on 6dp-rounded scores, ties to smaller
     id."""
-    from ..operators.ann import pq_adc_topk, pq_encode_np
-
     emb = load_table(spark, sf_dir, "embeddings")
     normed = unit_vectors(emb)
     books = _pq_codebooks_cached(spark, sf_dir, normed)
     qv = get_query_vector(normed, 2, id_col="id", vec_col="nv")
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
     short = pq_adc_topk(pq_encode_np(normed, books), books, qv, topk=50).select("id")
-    return (
-        normed.join(F.broadcast(short), "id")
-        .select(
-            "id", F.round(cosine_similarity(F.col("nv"), qlit), 6).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(5)
-    )
+    rerank = normed.join(F.broadcast(short), "id")
+    return topk(score_against_query(rerank, qv, "id", "nv"), 5, "id")
 
 
 N_PLANES = 12
@@ -1009,12 +915,15 @@ _PLANE = (
 )
 
 
-def _srp_planes(dim: int) -> list[list[float]]:
-    """Deterministic hyperplanes shared with the oracle — see
-    operators.ann.srp_planes (md5 formula, bit-identical both engines)."""
-    from ..operators.ann import srp_planes
-
-    return srp_planes(dim, N_PLANES)
+def _srp_bucket(emb: DataFrame, qv: list[float]) -> DataFrame:
+    """(vec_id, embedding, sig) rows whose SRP signature over ``N_PLANES``
+    md5 planes (``ann.srp_planes``, bit-identical in the oracle's
+    ``_PLANE``) equals the query's. The query's signature is computed
+    on the driver from the fetched vector (``ann.srp_query_sig``): a
+    ``vec_id`` filter cannot push below the signature's mapInPandas."""
+    planes = srp_planes(len(qv), N_PLANES)
+    sigs = srp_signatures(emb.select("vec_id", "embedding"), planes)
+    return sigs.filter(F.col("sig") == srp_query_sig(qv, planes))
 
 
 @query(
@@ -1045,48 +954,17 @@ SELECT (SELECT count(*) FROM exact JOIN approx USING (vec_id))::DOUBLE / 10
 """,
 )
 def ann_srp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the SRP-LSH bucket scan vs exact cosine — closes the
-    last gap in 'every ANN strategy ships an ORACLED recall gate' (IVF:
-    ann_recall/_sweep; PQ: ann_pq_recall; SRP's recall was previously
-    pytest-only). Single-bucket probe recall is the HONEST number the
-    12-plane bucketing earns without multiprobe; flipping signature bits
-    (Hamming-1 probing, operators/ann.probe_bulk_index) is the knob that
-    trades reads for recall when this gate drops."""
-    from ..operators.ann import srp_signatures
-
-    import numpy as np
-
+    """recall@10 of the SRP-LSH bucket scan vs exact cosine — SRP's
+    oracled recall gate, beside IVF's (ann_recall, ann_recall_sweep)
+    and PQ's (ann_pq_recall). Single-bucket probe recall is the HONEST
+    number the 12-plane bucketing earns without multiprobe; flipping
+    signature bits (Hamming-1 probing, operators/embedding.
+    probe_bulk_index) is the knob that trades reads for recall when
+    this gate drops."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").head()[0])
-    planes = _srp_planes(dim)
-    sigs = srp_signatures(emb.select("vec_id", "embedding"), planes)
     qv = get_query_vector(emb, 2)
-    qbits = (
-        np.round(
-            np.asarray(qv, dtype=np.float64) @ np.asarray(planes, dtype=np.float64).T,
-            6,
-        )
-        >= 0
-    )
-    qsig = "".join("1" if b else "0" for b in qbits)
-    qlit = F.array(*[F.lit(x) for x in qv])
-    score = F.round(cosine_similarity(F.col("embedding"), qlit), 6)
-    approx = (
-        sigs.filter(F.col("sig") == qsig)
-        .select("vec_id", score.alias("s"))
-        .orderBy(F.desc("s"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
-    exact = (
-        emb.select("vec_id", score.alias("s"))
-        .orderBy(F.desc("s"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact.join(approx, "vec_id").agg(
-        (F.count("*").cast("double") / 10).alias("recall_at_10")
-    )
+    approx = topk(score_against_query(_srp_bucket(emb, qv), qv), 10)
+    return recall_at_k(topk(score_against_query(emb, qv), 10), approx, 10)
 
 
 @query(
@@ -1115,8 +993,8 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bucket key; only the query's bucket is exact-scored.
 
     Scale shape: the signature is per-row math — ONE numpy BLAS matmul
-    per Arrow batch (`srp_signatures`; the round-1 interpreted
-    aggregate/zip_with HOF lost ~10× to this, NOTES.md); candidate
+    per Arrow batch (`srp_signatures`; an interpreted aggregate/zip_with
+    HOF is ~10× slower, NOTES.md); candidate
     selection is an equi-FILTER on the bucket key, which at rest is the
     table's partition/bucket column, so a probe reads ~n/2¹² of the
     data. Unlike IVF there is no training step (no KMeans); recall tunes
@@ -1125,34 +1003,9 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical hyperplanes — and dots are rounded to 6 decimals
     BEFORE the sign on both sides, so a near-zero projection can't flip
     a bucket bit across engines."""
-    from ..operators.ann import srp_signatures
-
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").head()[0])
-    planes = _srp_planes(dim)
-
-    sigs = srp_signatures(emb.select("vec_id", "embedding"), planes)
-
-    # query signature driver-side: fetch the query vector via a pushed
-    # point-lookup scan, then run the SAME float64 round-then-sign math
-    # in driver numpy — no second signature pass over the table (the
-    # vec_id filter can't push BELOW mapInPandas)
-    import numpy as np
-
     qv = get_query_vector(emb, 2)
-    qbits = np.round(np.asarray(qv, dtype=np.float64) @ np.asarray(planes, dtype=np.float64).T, 6) >= 0
-    qsig = "".join("1" if b else "0" for b in qbits)
-    qlit = F.array(*[F.lit(x) for x in qv])
-
-    return (
-        sigs.filter(F.col("sig") == qsig)
-        .select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return topk(score_against_query(_srp_bucket(emb, qv), qv), 5)
 
 
 @query(

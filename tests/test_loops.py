@@ -153,3 +153,32 @@ def test_fetch_paginated_duplicate_seeds_fetch_once(spark):
     seeds = spark.createDataFrame([("p://a",), ("p://a",)], "url string")
     out = fetch_paginated(seeds, fetcher).collect()
     assert len(out) == 1 and out[0]["depth"] == 0
+
+
+_RANKED_COSINE = [
+    "topk_retrieval",
+    "topk_retrieval_filtered",
+    "knn_join",
+    "ann_ivf",
+    "ann_recall",
+    "ann_ivf_kmeans",
+    "ann_pq",
+    "ann_pq_recall",
+    "ann_ivfpq",
+    "ann_pq_rerank",
+    "ann_srp_recall",
+    "ann_srp_lsh",
+    "context_injection",
+]
+
+
+@pytest.mark.parametrize("name", _RANKED_COSINE)
+def test_ranked_cosine_build_runs_at_most_one_job(spark, sf_dir, name):
+    """Building a ranked-cosine query runs at most the query-vector
+    fetch: scoring, ranking and recall tallies stay in the returned
+    plan. The first build warms the trained-artifact caches."""
+    from debgpt7_8_with_vectordb_spark.plans import QUERIES
+
+    QUERIES[name](spark, sf_dir)
+    _, n_jobs = _jobs(spark, f"build-{name}", lambda: QUERIES[name](spark, sf_dir))
+    assert n_jobs <= 1, n_jobs

@@ -173,6 +173,27 @@ def test_stream_sessions_match_batch_gap_sessions(spark, sf_dir):
     assert sk == bk
 
 
+def test_stream_queries_leave_no_sink_view(spark, sf_dir):
+    """A drained stream query drops its memory-sink view, and the rows
+    it returns outlive the view: two runs each of sessionize_stream and
+    stream_dedup register no ``*_sink_*`` view, the sessions repeat run
+    over run, and the dedup counts match the batch table."""
+    from debgpt7_8_with_vectordb_spark.plans import QUERIES
+    from debgpt7_8_with_vectordb_spark.tables import load_table
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    sessions = [sorted(QUERIES["sessionize_stream"](spark, sf_dir).collect()) for _ in range(2)]
+    dedup = [QUERIES["stream_dedup"](spark, sf_dir).collect() for _ in range(2)]
+    assert not [v for v in views() - before if "_sink_" in v]
+    assert sessions[0] and sessions[0] == sessions[1]
+    events = load_table(spark, sf_dir, "events")
+    want = [(events.count(), events.select("event_id").distinct().count())]
+    assert [[(r["n_rows"], r["n_ids"]) for r in rows] for rows in dedup] == [want, want]
+
+
 def test_incremental_index_build_idempotent_per_batch(spark, sf_dir, tmp_path):
     from debgpt7_8_with_vectordb_spark.streaming.sessionize import (
         incremental_index_build,
