@@ -1,22 +1,22 @@
 """Driver-loop kit shared by the iterative operators.
 
-Every loop (tree/compact reduce, BPE merge rounds, the corpus funnel)
-materializes a round with an eager ``localCheckpoint`` and reads its
-loop-control numbers off that same action, runs its rounds with AQE off
-and shuffle partitions sized from measured rows, and frees superseded
-rounds by exact checkpoint id with ``release`` (the connected-components
-fold frees its levels with it too). ``scoped_confs`` is the package's
-one session-conf save/restore.
+A loop (tree/compact reduce, the corpus funnel, the paginated fetch's
+seed frontier) materializes each round with an eager ``localCheckpoint``
+and reads its loop-control numbers off that same action
+(``checkpoint_observed``), and frees superseded rounds by exact
+checkpoint id with ``release`` (the connected-components fold frees
+its levels with it too). No loop scopes AQE: every round runs
+under the session's adaptive settings. ``scoped_confs`` is the
+package's one session-conf save/restore.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-_AQE = "spark.sql.adaptive.enabled"
 _PARTITIONS = "spark.sql.shuffle.partitions"
 
 
@@ -50,23 +50,6 @@ def capped_partitions(spark: SparkSession):
     32 instances over the test events feed ran 4× slower than 8."""
     parts = min(8, int(spark.conf.get(_PARTITIONS)))
     return scoped_confs(spark, {_PARTITIONS: str(parts)})
-
-
-@contextmanager
-def loop_confs(
-    spark: SparkSession, rows: int, rows_per_part: int
-) -> Iterator[Callable[[int], None]]:
-    """Run a loop with AQE off and ``ceil(rows / rows_per_part)`` shuffle
-    partitions (at least 1, at most defaultParallelism). Yields
-    ``resize(rows)`` for loops whose round size changes; both confs are
-    restored on exit, error included."""
-    width = spark.sparkContext.defaultParallelism
-
-    def parts(n: int) -> str:
-        return str(max(1, min(width, -(-n // rows_per_part))))
-
-    with scoped_confs(spark, {_AQE: "false", _PARTITIONS: parts(rows)}):
-        yield lambda n: spark.conf.set(_PARTITIONS, parts(n))
 
 
 def _checkpoint_rdd_id(df: DataFrame) -> "int | None":

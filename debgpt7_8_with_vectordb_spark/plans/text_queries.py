@@ -3,12 +3,15 @@
 Language-ID (marker-word heuristic), quality scoring, token counting
 (whitespace + BPE-ish regex), fingerprinting (min-hash over char
 shingles), plus the reference's scalar string ops (SURVEY.md §2.8).
-All pure Catalyst expressions — per-row, no shuffle, no UDFs.
+Catalyst expressions throughout, except BPE's merge rule, which runs as
+Arrow-batched Python over the vocabulary.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
+from collections.abc import Iterator
 
 import pyarrow as pa
 import pyspark.sql.functions as F
@@ -17,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.bind import let
 from ..functions.hashing import md5_long
 from ..functions.text import char_shingles, tokens, word_shingles
-from ..loops import checkpoint_observed, loop_confs, release
 from ..operators import artifacts
 from ..operators.textprofile import repetition_counts
 from ..tables import fan_out, load_table
@@ -1403,6 +1405,48 @@ w{r} AS (
     return "WITH " + ",\n".join(ctes) + "\n" + selects
 
 
+def _merge_pair(syms: list[str], lhs: str, rhs: str) -> list[str]:
+    """One BPE merge rule applied to one word's symbols: a left-to-right,
+    non-overlapping fold that fuses ``lhs`` followed by ``rhs`` into
+    ``lhs + rhs`` (``a a a`` under ``(a, a)`` is ``aa a``). Trainer and
+    applier both apply merges through this function alone."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == lhs and s == rhs:
+            out[-1] = lhs + rhs
+        else:
+            out.append(s)
+    return out
+
+
+def _train_merges(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The merge rounds over the whole weighted vocabulary ``(word,
+    cnt)`` in one task. Each round recounts the weighted adjacent pairs
+    and takes the highest total, ties to the smaller ``(lhs, rhs)``
+    (code-point order, which is UTF-8 byte order); the rounds stop early
+    once every word is a single symbol."""
+    vocab = [
+        (list(w), c)
+        for b in batches
+        for w, c in zip(b.column("word").to_pylist(), b.column("cnt").to_pylist())
+    ]
+    rows = []
+    for rank in range(1, N_MERGES + 1):
+        pairs = Counter()
+        for syms, cnt in vocab:
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += cnt
+        if not pairs:
+            break
+        (lhs, rhs), total = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        rows.append(
+            {"merge_rank": rank, "lhs": lhs, "rhs": rhs, "merged": lhs + rhs, "pair_count": total}
+        )
+        vocab = [(_merge_pair(syms, lhs, rhs), cnt) for syms, cnt in vocab]
+    if rows:
+        yield pa.RecordBatch.from_pylist(rows)
+
+
 @query("bpe_train_merges", oracle=_bpe_oracle())
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE TOKENIZER TRAINING — the first N_MERGES merge rules learned
@@ -1410,97 +1454,22 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     GPT/Llama tokenizer): start from character symbols, repeatedly take
     the adjacent symbol pair with the highest corpus-weighted count
     (ties to the lexicographically smaller pair) and fuse its
-    left-to-right non-overlapping occurrences.
+    non-overlapping occurrences with :func:`_merge_pair`.
 
-    Scale shape — the reason BPE training is feasible at 100 TB: the
-    CORPUS is touched exactly once, by the word-frequency census (one
-    groupBy with map-side combine); every merge round after that runs
-    on the weighted VOCABULARY (millions of rows however big the
-    corpus), so the iteration cost is corpus-size-independent. Per
-    round: one vocab-sized pair groupBy + a 1-row argmax collect (loop
-    control reads only the winner — the repo's driver-loop rule), then
-    the fold-merge is a per-row expression. Both engines fold symbols
-    left-to-right, so merge application is bit-identical; the oracle
-    replays all rounds as an unrolled CTE chain.
-
-    The vocab size rides the census checkpoint and sizes the rounds'
-    shuffles (:func:`loop_confs`); each round's superseded symbol table
-    is freed once the next one is checkpointed."""
+    Scale shape: the corpus is read once, by the word-frequency census,
+    a corpus-parallel groupBy with map-side combine. Only the finished
+    vocabulary (millions of rows however big the corpus) crosses
+    ``repartition(1)`` into the one task that runs every round
+    (:func:`_train_merges`); ``coalesce(1)`` here would pull the census's
+    final aggregate into that task too. Building the query runs no job."""
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    # vocab-sized checkpoint: truncates the per-round lineage
-    syms, m = checkpoint_observed(
-        vocab.select(
-            "word",
-            "cnt",
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.substring(F.col("word"), i, F.lit(1)),
-            ).alias("syms"),
-        ),
-        n=F.count(F.lit(1)),
-    )
-    rows = []
-    # AQE off costs no skew guard here: AQE's skew split only acts on
-    # joins, and the pair groupBy().sum is partially aggregated map-side,
-    # so a heavy-hitter pair reaches its reducer as at most
-    # #map-partitions rows
-    with loop_confs(spark, int(m["n"]), 2_000_000):  # ~2M vocab rows per part
-        for r in range(1, N_MERGES + 1):
-            pairs = (
-                syms.select(
-                    "cnt",
-                    F.explode(
-                        F.when(
-                            F.size("syms") >= 2,
-                            F.transform(
-                                F.sequence(F.lit(1), F.size("syms") - 1),
-                                lambda i: F.struct(
-                                    F.element_at("syms", i).alias("lhs"),
-                                    F.element_at("syms", i + 1).alias("rhs"),
-                                ),
-                            ),
-                        ).otherwise(F.array().cast(
-                            "array<struct<lhs:string,rhs:string>>"
-                        ))
-                    ).alias("pr"),
-                )
-                .groupBy("pr.lhs", "pr.rhs")
-                .agg(F.sum("cnt").alias("total"))
-                .orderBy(F.desc("total"), F.asc("lhs"), F.asc("rhs"))
-                .limit(1)
-            )
-            best = pairs.head()
-            if best is None:
-                break
-            lhs, rhs, total = best["lhs"], best["rhs"], int(best["total"])
-            rows.append((r, lhs, rhs, lhs + rhs, total))
-            merged_sym = F.lit(lhs + rhs)
-            merged = syms.withColumn(
-                "syms",
-                F.aggregate(
-                    F.col("syms"),
-                    F.array().cast("array<string>"),
-                    lambda acc, x: F.when(
-                        (F.size(acc) > 0)
-                        & (F.try_element_at(acc, F.lit(-1)) == F.lit(lhs))
-                        & (x == F.lit(rhs)),
-                        F.concat(
-                            F.slice(acc, F.lit(1), F.size(acc) - 1),
-                            F.array(merged_sym),
-                        ),
-                    ).otherwise(F.concat(acc, F.array(x))),
-                ),
-            ).localCheckpoint(eager=True)
-            release(syms)
-            syms = merged
-    release(syms)
-    return spark.createDataFrame(
-        rows,
+    return vocab.repartition(1).mapInArrow(
+        _train_merges,
         "merge_rank long, lhs string, rhs string, merged string, pair_count long",
     )
 
@@ -1876,20 +1845,11 @@ def _bpe_merges_cached(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str]]:
     """The learned merge table, persisted once per corpus to the
-    corpus-keyed oracle-handoff parquet (the PCA/IVF pattern). Cold
-    path runs bpe_train_merges (corpus census once, vocab-sized
-    rounds); warm consumers — bpe_apply and its oracle — read the
-    artifact."""
+    corpus-keyed oracle-handoff parquet: bpe_apply and its oracle read
+    the same rows."""
 
     def train():
-        rows = bpe_train_merges(spark, sf_dir).collect()
-        return pa.table(
-            {
-                "merge_rank": pa.array([r["merge_rank"] for r in rows], type=pa.int64()),
-                "lhs": pa.array([r["lhs"] for r in rows]),
-                "rhs": pa.array([r["rhs"] for r in rows]),
-            }
-        )
+        return bpe_train_merges(spark, sf_dir).select("merge_rank", "lhs", "rhs").toArrow()
 
     t = artifacts.persisted_file(oracle_artifact_path(_BPE_MERGES, sf_dir), train)
     out = sorted(zip(t["merge_rank"], t["lhs"], t["rhs"]))
@@ -1939,55 +1899,39 @@ GROUP BY w.doc_id
 def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZE the corpus with the learned BPE merges — the apply half
     of bpe_train_merges, i.e. what a training pipeline actually runs
-    over 100 TB once the tokenizer is trained. Merge application is the
-    trainer's exact convention (rank order; per rule, one left-to-right
-    non-overlapping fold pass), replayed from the PERSISTED merge
-    artifact so trainer, applier, and oracle all consume one table.
+    over 100 TB once the tokenizer is trained. Each distinct word is
+    tokenized by applying the PERSISTED merges in rank order with
+    :func:`_merge_pair`, the trainer's own rule, so trainer, applier and
+    oracle all consume one table.
 
-    Scale shape — the reason this is NOT a per-character pass over the
-    corpus: merges apply to the distinct-word VOCABULARY (vocab-sized
-    fold work, corpus-size-independent, same argument as training),
-    and the corpus itself is touched by exactly two cheap passes — the
-    word explode and a keyed join word -> post-merge token count
-    (vocab broadcasts at test scale; AQE keeps it a shuffle join when
-    a web-scale vocab outgrows the threshold), then one per-doc agg.
-    Output is the per-doc token accounting (n_words / n_chars /
-    n_tokens / chars_per_token) every budget-planning stage needs;
-    token-less docs are absent by contract on both engines (inner
-    word join). Empty-word edge impossible (tokens() drops '')."""
+    Scale shape: merges run on the distinct-word VOCABULARY (one
+    ``mapInArrow`` pass, corpus-size-independent), and the corpus itself
+    is touched by two cheap passes — the word explode and a keyed join
+    word -> post-merge token count (vocab broadcasts at test scale; AQE
+    keeps it a shuffle join when a web-scale vocab outgrows the
+    threshold), then one per-doc agg. Output is the per-doc token
+    accounting (n_words / n_chars / n_tokens / chars_per_token);
+    token-less docs are absent on both engines (inner word join), and
+    tokens() never yields an empty word."""
     docs = load_table(spark, sf_dir, "documents")
-    merges = _bpe_merges_cached(spark, sf_dir)
+    rules = [(lhs, rhs) for _, lhs, rhs in _bpe_merges_cached(spark, sf_dir)]
+
+    def n_syms(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            counts = []
+            for word in b.column("word").to_pylist():
+                syms = list(word)
+                for lhs, rhs in rules:
+                    syms = _merge_pair(syms, lhs, rhs)
+                counts.append(len(syms))
+            yield pa.RecordBatch.from_arrays(
+                [b.column("word"), pa.array(counts, pa.int64())], ["word", "n_syms"]
+            )
 
     words = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("word")
     )
-    vocab = words.select("word").distinct()
-    syms = vocab.select(
-        "word",
-        F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.substring(F.col("word"), i, F.lit(1)),
-        ).alias("syms"),
-    )
-    for _, lhs, rhs in merges:
-        merged_sym = F.lit(lhs + rhs)
-        syms = syms.withColumn(
-            "syms",
-            F.aggregate(
-                F.col("syms"),
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.try_element_at(acc, F.lit(-1)) == F.lit(lhs))
-                    & (x == F.lit(rhs)),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(merged_sym),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        )
-    vc = syms.select("word", F.size("syms").alias("n_syms"))
+    vc = words.select("word").distinct().mapInArrow(n_syms, "word string, n_syms long")
     return (
         words.join(vc, "word")
         .groupBy("doc_id")

@@ -1,23 +1,16 @@
-"""Driver-loop kit: conf scoping (every loop restores the confs it
-scopes, also on error), observed checkpoints, the job count the loops'
-control numbers cost, and the loop-control shortcuts' exact semantics
-(fetch-once, empty seeds)."""
+"""Driver-loop kit: conf scoping (restored also on error), observed
+checkpoints, the job count the loops' control numbers cost, the
+loop-control shortcuts' exact semantics (fetch-once, empty seeds), and
+the build/run job counts of operators that keep their work in the
+returned plan."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from debgpt7_8_with_vectordb_spark.loops import checkpoint_observed, loop_confs
+from debgpt7_8_with_vectordb_spark.loops import checkpoint_observed, scoped_confs
 from debgpt7_8_with_vectordb_spark.sources.fanout import fetch_paginated
-
-_AQE = "spark.sql.adaptive.enabled"
-_PARTS = "spark.sql.shuffle.partitions"
-
-
-def _confs(spark):
-    return spark.conf.get(_AQE), spark.conf.get(_PARTS)
-
 
 def _jobs(spark, group, fn):
     """Run ``fn`` under job group ``group``; return (result, job count)."""
@@ -31,24 +24,14 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_loop_confs_scopes_and_restores(spark):
-    before = _confs(spark)
-    width = spark.sparkContext.defaultParallelism
-    with loop_confs(spark, 10, 3) as resize:
-        assert _confs(spark) == ("false", str(min(width, 4)))
-        resize(0)
-        assert spark.conf.get(_PARTS) == "1"
-        resize(10**9)
-        assert spark.conf.get(_PARTS) == str(width)
-    assert _confs(spark) == before
-
-
-def test_loop_confs_restores_on_error(spark):
-    before = _confs(spark)
+def test_scoped_confs_restores_on_error(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     with pytest.raises(RuntimeError, match="round failed"):
-        with loop_confs(spark, 1, 1):
+        with scoped_confs(spark, {key: "3"}):
+            assert spark.conf.get(key) == "3"
             raise RuntimeError("round failed")
-    assert _confs(spark) == before
+    assert spark.conf.get(key) == before
 
 
 def test_checkpoint_observed_costs_one_job(spark):
@@ -92,45 +75,6 @@ def test_fetch_paginated_jobs_do_not_grow_with_depth(spark):
         assert out.count() == pages
         counts.append(n_jobs)
     assert counts[0] == counts[1] <= 3, counts
-
-
-def _fetch_case(spark, tmp_path):
-    def fetcher(url):
-        return 200, "x", None
-
-    seeds = spark.createDataFrame([("p://a",)], "url string")
-    out = fetch_paginated(seeds, fetcher).collect()
-    assert [(r["url"], r["depth"], r["status"]) for r in out] == [
-        ("p://a", 0, 200)
-    ]
-
-
-def _bpe_case(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from debgpt7_8_with_vectordb_spark.plans import QUERIES
-
-    pq.write_table(
-        pa.table({"doc_id": pa.array([0], pa.int64()), "text": pa.array(["aaaa"])}),
-        str(tmp_path / "documents.parquet"),
-    )
-    rows = QUERIES["bpe_train_merges"](spark, str(tmp_path)).collect()
-    got = sorted((r["merge_rank"], r["merged"], r["pair_count"]) for r in rows)
-    assert got == [(1, "aa", 3), (2, "aaaa", 1)]
-
-
-@pytest.mark.parametrize(
-    "case",
-    [_fetch_case, _bpe_case],
-    ids=["fetch_paginated", "bpe_train_merges"],
-)
-def test_loop_restores_scoped_confs(spark, tmp_path, case):
-    """Every loop that scopes AQE and shuffle partitions hands the
-    session back with both confs as they were, and its output intact."""
-    before = _confs(spark)
-    case(spark, tmp_path)
-    assert _confs(spark) == before
 
 
 def test_fetch_paginated_empty_seeds_schema_and_no_rows(spark):
@@ -182,3 +126,17 @@ def test_ranked_cosine_build_runs_at_most_one_job(spark, sf_dir, name):
     QUERIES[name](spark, sf_dir)
     _, n_jobs = _jobs(spark, f"build-{name}", lambda: QUERIES[name](spark, sf_dir))
     assert n_jobs <= 1, n_jobs
+
+
+def test_bpe_train_builds_no_job_and_runs_at_most_three(spark, sf_dir):
+    """Building bpe_train_merges runs no job: the merge rounds are one
+    task over the census. Collecting it runs the census exchange, the
+    single-partition exchange and the merge task."""
+    from debgpt7_8_with_vectordb_spark.plans import QUERIES
+
+    train = QUERIES["bpe_train_merges"]
+    train(spark, sf_dir)  # the first read of a table infers its schema: one job
+    df, n_build = _jobs(spark, "build-bpe", lambda: train(spark, sf_dir))
+    assert n_build == 0, n_build
+    rows, n_run = _jobs(spark, "run-bpe", df.collect)
+    assert len(rows) > 0 and n_run <= 3, n_run

@@ -122,6 +122,7 @@ FULL_SCAN_OK = {
     "quality_classifier",  # per-row scoring over the whole corpus by definition
     "quality_classifier_trained",  # same per-row scoring; train census cached per corpus
     "bpe_apply",  # tokenizes every doc by definition (merge folds run on the vocab)
+    "bpe_train_merges",  # the word-frequency census reads every doc by definition
     "domain_quota",  # per-source quota ranks the whole corpus by definition
     "minhash_fidelity",  # reads every signature + the pair table by definition
     "ann_srp_recall",  # recall gate replays exact + bucket scan over every vector
@@ -133,9 +134,6 @@ SKIP = {
     "mapreduce_echo",
     "mapreduce_echo_compact",
     "sessionize_stream",
-    "ann_recall",
-    "paginated_fetch",  # breadth-first driver loop — per-round plans only
-    "bpe_train_merges",  # per-merge driver loop over the vocab — per-round plans only
     "stream_windowed_topk",  # streaming drain — audited via its batch twin
     "stream_neardup_screen",  # streaming drain — audited via its batch twin (dedup_incremental_neardup)
     "stream_event_funnel",  # streaming drain — audited via its batch twin (event_funnel)
@@ -206,6 +204,16 @@ def _audit_one_static(name: str, df) -> tuple[list[str], str]:
         if not pushed:
             problems.append("no pushed filters on any parquet scan")
     return problems, formatted
+
+
+# plan lines PLANS.md keeps: scans (checkpoints included), joins,
+# exchanges and single-partition funnels, aggregates, Python stages
+FRAGMENT = re.compile(
+    r"Scan parquet|Scan ExistingRDD|Join|Exchange|SinglePartition|Coalesce|"
+    r"TakeOrderedAndProject|ArrowEval|MapInPandas|MapInArrow|"
+    r"FlatMapGroupsInPandas|HashAggregate|"
+    r"PartitionFilters: \[[^]]|PushedFilters: \[[^]]"
+)
 
 
 # BroadcastNestedLoopJoin sites that are CORRECT even in no-broadcast
@@ -281,17 +289,7 @@ def main() -> int:
         print(("OK    " if not problems else "FLAG  ") + f"{name}: {verdict}")
         if problems:
             failures += 1
-        # keep the interesting fragments: scans, joins, exchanges
-        frags = [
-            ln
-            for ln in formatted.splitlines()
-            if re.search(
-                r"Scan parquet|Join|Exchange|TakeOrderedAndProject|"
-                r"ArrowEval|MapInPandas|FlatMapGroupsInPandas|HashAggregate|"
-                r"PartitionFilters: \[[^]]|PushedFilters: \[[^]]",
-                ln,
-            )
-        ][:24]
+        frags = [ln for ln in formatted.splitlines() if FRAGMENT.search(ln)][:24]
         sections.append(
             f"## {name}\n\n**verdict:** {verdict}\n\n```\n" + "\n".join(frags) + "\n```\n"
         )

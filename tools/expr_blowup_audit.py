@@ -58,8 +58,6 @@ SKIP = {
     "mapreduce_echo",
     "mapreduce_echo_compact",
     "sessionize_stream",
-    "paginated_fetch",
-    "bpe_train_merges",
     "stream_windowed_topk",
     "stream_neardup_screen",
     "stream_event_funnel",
