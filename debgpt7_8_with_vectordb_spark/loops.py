@@ -1,13 +1,12 @@
 """Driver-loop kit shared by the iterative operators.
 
-A loop (tree/compact reduce, the corpus funnel, the paginated fetch's
-seed frontier) materializes each round with an eager ``localCheckpoint``
-and reads its loop-control numbers off that same action
-(``checkpoint_observed``), and frees superseded rounds by exact
-checkpoint id with ``release`` (the connected-components fold frees
-its levels with it too). No loop scopes AQE: every round runs
-under the session's adaptive settings. ``scoped_confs`` is the
-package's one session-conf save/restore.
+``pin`` is the package's one ``localCheckpoint``: every materialized
+intermediate (a loop round, a fold level, a fork point two consumers
+share, a fetched batch) is pinned by it, eagerly, and a loop reads its
+control numbers off that same action. ``release`` frees a superseded
+pin by exact checkpoint id. No loop scopes AQE: every round runs under
+the session's adaptive settings. ``scoped_confs`` is the package's one
+session-conf save/restore.
 """
 
 from __future__ import annotations
@@ -20,13 +19,29 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 _PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def checkpoint_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
-    """Eager ``localCheckpoint`` of ``df`` with each named aggregate in
-    ``aggs`` observed on the same action: loop control costs no extra
-    job, and the pinned rows are never recomputed (fetch-once)."""
+def pin(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df``: returns (pinned, observed).
+
+    Each named aggregate in ``aggs`` is observed on the checkpoint's own
+    action, so loop control costs no extra job; with none, no observe
+    node is added and ``observed`` is ``{}``. The pinned rows are
+    computed once and never recomputed (fetch-once), and only successful
+    task attempts count toward ``observed``.
+
+    Lifetime: a pin used only inside its function is ``release``d by
+    that function once it is superseded; a pin that backs a returned
+    DataFrame lives until that DataFrame is garbage-collected.
+
+    Executor loss: the blocks sit in executor memory and disk with the
+    lineage cut, so losing an executor mid-query fails the query rather
+    than recomputing. A long-lived run that cannot restart a query swaps
+    this for a reliable checkpoint (``setCheckpointDir`` +
+    ``checkpoint()``) at the cost of a durable write.
+    """
     obs = Observation()
-    df = df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()])
-    return df.localCheckpoint(eager=True), obs.get
+    if aggs:
+        df = df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()])
+    return df.localCheckpoint(eager=True), obs.get if aggs else {}
 
 
 @contextmanager
@@ -53,8 +68,8 @@ def capped_partitions(spark: SparkSession):
 
 
 def _checkpoint_rdd_id(df: DataFrame) -> "int | None":
-    """The RDD id an eager ``localCheckpoint`` persisted: the analyzed
-    plan of a checkpointed DataFrame is a LogicalRDD over that RDD."""
+    """The RDD id a ``pin`` persisted: the analyzed plan of a pinned
+    DataFrame is a LogicalRDD over that RDD."""
     try:
         return int(df._jdf.queryExecution().analyzed().rdd().id())
     except Exception:  # not a LogicalRDD plan: nothing was persisted
@@ -62,7 +77,7 @@ def _checkpoint_rdd_id(df: DataFrame) -> "int | None":
 
 
 def release(*dfs: DataFrame) -> None:
-    """Unpersist the checkpoints behind ``dfs`` now instead of at JVM GC.
+    """Unpersist the pins behind ``dfs`` now instead of at JVM GC.
     Ids come from the DataFrames themselves, never from a session-wide
     diff, so a concurrent job's blocks on the same session survive."""
     ids = {_checkpoint_rdd_id(df) for df in dfs} - {None}

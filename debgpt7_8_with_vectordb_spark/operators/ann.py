@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.hashing import md5_long
 from ..functions.vector import l2_normalize, vector_lit
+from ..loops import pin
 from . import retrieval
 
 
@@ -87,7 +88,7 @@ def build_ivf_index(
     """
     normed = unit_vectors(emb, id_col, vec_col)
     centroids = train_ivf_centroids(normed, k, seed, max_iter)
-    indexed = assign_clusters_np(normed, centroids).localCheckpoint(eager=True)
+    indexed, _ = pin(assign_clusters_np(normed, centroids))
     return indexed, centroids
 
 

@@ -28,7 +28,7 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..loops import release
+from ..loops import pin, release
 
 _FOREST = "src long, dst long"
 
@@ -61,22 +61,20 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame,
 
     ``nodes``: one column ``doc_id`` (long). ``edges``: columns
     ``src``/``dst`` (long), one direction per pair is enough. Returns
-    (labels(doc_id, lab), fold levels run); ``labels`` is checkpointed.
+    (labels(doc_id, lab), fold levels run); ``labels`` is pinned.
     """
-    forest = edges.select("src", "dst").mapInArrow(_fold, _FOREST)
-    forest, levels = forest.localCheckpoint(eager=True), 1
-    # coalesce only checkpointed input: on a live plan the narrow
-    # coalesce would pull the partition-local fold into fewer tasks
+    forest, _ = pin(edges.select("src", "dst").mapInArrow(_fold, _FOREST))
+    levels = 1
+    # coalesce only pinned input: on a live plan the narrow coalesce
+    # would pull the partition-local fold into fewer tasks
     while (p := forest.rdd.getNumPartitions()) > 1:
-        merged = forest.coalesce(-(-p // 2)).mapInArrow(_fold, _FOREST)
-        merged = merged.localCheckpoint(eager=True)
+        merged, _ = pin(forest.coalesce(-(-p // 2)).mapInArrow(_fold, _FOREST))
         release(forest)
         forest, levels = merged, levels + 1
-    labels = (
+    labels, _ = pin(
         nodes.select(F.col("doc_id").cast("long").alias("doc_id"))
         .join(forest.withColumnRenamed("src", "doc_id"), "doc_id", "left")
         .select("doc_id", F.coalesce("dst", "doc_id").alias("lab"))
-        .localCheckpoint(eager=True)
     )
     release(forest)
     return labels, levels

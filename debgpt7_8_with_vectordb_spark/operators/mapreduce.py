@@ -15,8 +15,8 @@ Spark shape:
   and combines pairs with ``applyInPandas``; the driver loops while
   ``count > 1`` (same shape as ``RDD.treeReduce``) and only ever sees
   the count;
-- ``localCheckpoint`` each round truncates the growing lineage
-  (SURVEY.md §4.3.2).
+- each round is pinned (``loops.pin``), which truncates the growing
+  lineage (SURVEY.md §4.3.2).
 
 The deterministic test "LLM" is echo-lossy: keep every ``rate``-th
 character (the reference ships exactly this fake for its own tests —
@@ -34,7 +34,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from ..loops import checkpoint_observed, release
+from ..loops import pin, release
 
 #: Rows per range partition when assigning the global pairing index.
 #: 64 Ki rows/partition keeps the per-partition window cheap and bounds
@@ -135,12 +135,10 @@ def _blocked_reduce(
     ``_PACK_BLOCK_ROWS`` blocks of the global order (``rn // block``) and
     replays up to ``levels`` rounds inside each block's task; once the
     rows fit one block, one task runs every remaining round. The round
-    count and the row count of a pass ride its checkpoint action; the
-    superseded checkpoint is freed as soon as the next one exists.
+    count and the row count of a pass ride its pin's action; the
+    superseded pin is released as soon as the next one exists.
     """
-    ckpt, m = checkpoint_observed(
-        mapped.select("doc_id", "start", "val"), n=F.count(F.lit(1))
-    )
+    ckpt, m = pin(mapped.select("doc_id", "start", "val"), n=F.count(F.lit(1)))
     n = int(m["n"])
     rounds = 0
     limit = max(1, int(math.log2(max(n, 2))) + 2)
@@ -170,7 +168,7 @@ def _blocked_reduce(
                 columns=["doc_id", "start", "val", "_rounds"],
             )
 
-        done, m = checkpoint_observed(
+        done, m = pin(
             blocked.groupBy("_blk").applyInPandas(
                 reduce_block,
                 schema="doc_id long, start int, val string, _rounds int",

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.hashing import md5_long
 from ..functions.rounding import half_up_ratio_nonneg
 from ..functions.text import tokens
-from ..loops import checkpoint_observed, release
+from ..loops import pin, release
 from ..operators.chunker import chunk_documents
 from ..tables import fan_out, load_table
 from .catalog import query
@@ -139,10 +139,12 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Single pass: the funnel counts are Observation metrics on one
     chain, not separate aggregation branches. The qualified set is the
-    fork point (band build AND keep-rule join), so it is checkpointed
-    once with the docs-in and qualified counts on that action; every
-    later count rides the one final aggregation. The result row is
-    assembled driver-side and every call recomputes from the inputs."""
+    fork point (band build AND keep-rule join), so it is pinned once
+    with the docs-in and qualified counts on that action; the band table
+    is pinned too (the bucket-min join reads it twice). Every later count
+    rides the one final aggregation, and both pins are released once it
+    has run. The result row is assembled driver-side and every call
+    recomputes from the inputs."""
     from pyspark.sql import Observation
 
     docs = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -157,7 +159,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(200) * q).cast("long"),
     )
     obs_docs = Observation()
-    qualified, counts = checkpoint_observed(
+    qualified, counts = pin(
         docs.observe(obs_docs, F.count(F.lit(1)).alias("n"))
         .withColumn("quality_u", quality_u)
         .filter((n > 0) & (F.col("quality_u") >= _MIN_QUALITY_U))
@@ -167,7 +169,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs_in = int(obs_docs.get["n"])
     n_qualified = int(counts["n"])
 
-    bands = _minhash_bands_from(qualified)
+    bands, _ = pin(_minhash_bands_from(qualified))
     bucket_min = bands.groupBy("band", "sig").agg(F.min("doc_id").alias("bmin"))
     canon = (
         bands.join(bucket_min, ["band", "sig"])
@@ -207,7 +209,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("rn"), 4).alias("sum_raw_norms"),
     ).head()
     n_survivors = int(obs_s.get["n"])
-    release(qualified)
+    release(qualified, bands)
     return spark.createDataFrame(
         [
             (

@@ -423,9 +423,7 @@ def stream_neardup_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("text", F.coalesce(F.col("text"), F.lit("")))
         .filter(F.col("doc_id") >= split)
     )
-    bands = _minhash_bands_from(stream, persist=False).select(
-        "doc_id", "band", "sig"
-    )
+    bands = _minhash_bands_from(stream).select("doc_id", "band", "sig")
     joined = bands.join(prior, ["band", "sig"], "left")
     return (
         drain_memory(joined, "stream_neardup", "append")

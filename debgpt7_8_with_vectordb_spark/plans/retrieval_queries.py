@@ -372,15 +372,10 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     rw = Window.partitionBy(F.lit(0)).orderBy(
         F.desc(cosine_score(F.col("cv"), qlit)), F.asc("label")
     )
-    # materialize the k-row ranking ONCE: four union branches each
-    # broadcast it, and without this the centroid build (posexplode +
-    # two shuffles) would re-execute per branch
-    ranked = (
-        _label_centroids(emb)
-        .withColumn("cr", F.row_number().over(rw))
-        .select("label", "cr")
-        .localCheckpoint(eager=True)
-    )
+    # each union branch ranks the k centroid rows itself (its cr <= p
+    # becomes a top-p limit); exchange reuse runs the centroid build
+    # (posexplode + two shuffles) once for all four
+    ranked = _label_centroids(emb).select("label", F.row_number().over(rw).alias("cr"))
 
     scored = emb.join(F.broadcast(ranked), "label").select(
         "vec_id", "cr", cosine_score(F.col("embedding"), qlit).alias("score")

@@ -28,7 +28,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..loops import checkpoint_observed
+from ..loops import pin, release
 
 FETCHED_SCHEMA = "url string, status int, content string"
 
@@ -118,20 +118,18 @@ def fetch_urls_cached(
     cached = cache.df().select(
         F.col("key").alias("url"), F.col("value").alias("content")
     )
-    hits = urls.join(cached, "url").select(
-        "url",
-        F.lit(200).alias("status"),
-        "content",
-        F.lit("cache").alias("served_from"),
-        # eager checkpoint: the hits plan is bound to the PRE-upsert
-        # snapshot directory, which KVCache._commit prunes once it falls
-        # keep_snapshots commits behind — a lazily consumed result would
-        # read a deleted directory (round-3 advice). Pinning both sides
-        # makes the returned frame valid however late it is consumed.
-    ).localCheckpoint(eager=True)
-    fetched = fetch_urls(
-        urls.join(cached, "url", "left_anti"), fetcher, max_attempts
-    ).localCheckpoint(eager=True)  # fetch once: upsert + result share it
+    # the hits plan is bound to the PRE-upsert snapshot directory, which
+    # KVCache._commit prunes once it falls keep_snapshots commits behind:
+    # a lazily consumed result would read a deleted directory. Pinning
+    # both sides makes the returned frame valid however late it is read.
+    hits, _ = pin(
+        urls.join(cached, "url")
+        .withColumn("status", F.lit(200))
+        .select("url", "status", "content", F.lit("cache").alias("served_from"))
+    )
+    # fetch once: the upsert and the result share the pinned rows
+    misses = urls.join(cached, "url", "left_anti")
+    fetched, _ = pin(fetch_urls(misses, fetcher, max_attempts))
     cache.put_many(
         fetched.filter(F.col("status") == 200).select(
             F.col("url").alias("key"), F.col("content").alias("value")
@@ -160,13 +158,14 @@ def fetch_paginated(
     following a next link only if it is not yet seen. Rows leave the
     task level by level in batches of at most
     ``spark.sql.execution.arrow.maxRecordsPerBatch``; only URLs are held
-    across levels. The walk is pinned by one eager ``localCheckpoint``.
+    across levels. The walk is pinned (``loops.pin``); the seed
+    frontier's pin is released once the walk's exists.
 
     - For a deterministic fetcher, each page reachable within
       ``max_pages - 1`` hops of a seed appears once, at its minimum
       depth over all seeds: one frontier partition is one global BFS;
       with more, the rows reduce to ``min(struct(depth, status,
-      content))`` per url, lazily over the checkpoint (no shuffle on the
+      content))`` per url, lazily over the pin (no shuffle on the
       single-partition path).
     - Cycles terminate: a seen URL is never followed again.
     - A fetch that raises gives status 598 with empty content and ends
@@ -178,10 +177,9 @@ def fetch_paginated(
       duplicate work is bounded by the frontier's partition count.
     """
     spark = seeds.sparkSession
-    frontier, m = checkpoint_observed(
-        seeds.select("url").distinct(), n=F.count(F.lit(1))
-    )
+    frontier, m = pin(seeds.select("url").distinct(), n=F.count(F.lit(1)))
     if m["n"] == 0 or max_pages <= 0:
+        release(frontier)
         return spark.createDataFrame([], WALKED_SCHEMA)
     # <= 0 is Spark's "no limit": a non-empty level never reaches it
     batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
@@ -223,10 +221,10 @@ def fetch_paginated(
                 break
             level = nxt_level
 
-    walked = frontier.mapInArrow(walk, schema=WALKED_SCHEMA).localCheckpoint(
-        eager=True
-    )
-    if frontier.rdd.getNumPartitions() == 1:
+    walked, _ = pin(frontier.mapInArrow(walk, schema=WALKED_SCHEMA))
+    one_partition = frontier.rdd.getNumPartitions() == 1
+    release(frontier)
+    if one_partition:
         return walked
     best = F.min(F.struct("depth", "status", "content")).alias("best")
     return walked.groupBy("url").agg(best).select("url", "best.*")

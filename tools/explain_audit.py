@@ -11,10 +11,13 @@ scale-critical properties:
   (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are allowed;
 - WholeStageCodegen covers the expression work (at least one span).
 
-Writes PLANS.md (one section per query: verdict line + notable plan
-fragments) and exits non-zero if any check regresses.
+Writes each audited query's PLANS.md section (verdict line + notable
+plan fragments) and no-broadcast line in place, appending the ones
+PLANS.md lacks; every other byte of PLANS.md is kept. Exits non-zero if
+any check regresses.
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
+(no query names: every bench.HEADLINE query)
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from debgpt7_8_with_vectordb_spark.loops import scoped_confs  # noqa: E402
 from debgpt7_8_with_vectordb_spark.session import get_spark  # noqa: E402
 
 # queries where a full-table scan with no pushed filters is the correct
@@ -139,29 +143,7 @@ SKIP = {
     "stream_event_funnel",  # streaming drain — audited via its batch twin (event_funnel)
 }
 
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def _conf(spark, **pairs):
-    """Set session confs for the duration, then RESTORE the prior
-    values (ADVICE r5 #5: the audit used to leave AQE disabled on the
-    shared session — any later user inherited a silently different
-    execution mode)."""
-    saved = {}
-    for k, v in pairs.items():
-        key = k.replace("__", ".")
-        saved[key] = spark.conf.get(key, None)
-        spark.conf.set(key, v)
-    try:
-        yield
-    finally:
-        for key, old in saved.items():
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def audit_one(name: str, df) -> tuple[list[str], str]:
@@ -171,7 +153,7 @@ def audit_one(name: str, df) -> tuple[list[str], str]:
     # load_table re-enables AQE per session conf, so flip it off after
     # the query function built its DataFrame, before plan compilation —
     # and restore it after (the session outlives the audit call).
-    with _conf(df.sparkSession, spark__sql__adaptive__enabled="false"):
+    with scoped_confs(df.sparkSession, _AQE_OFF):
         return _audit_one_static(name, df)
 
 
@@ -247,11 +229,11 @@ def audit_nobroadcast(name: str, df) -> list[str]:
     the read (a pre-execution adaptive plan would only show the same
     initial static plan anyway; AQE's own runtime re-plan decisions are
     not observable without executing) and RESTORED after — the session
-    outlives the audit (ADVICE r5 #5). Explicit F.broadcast hints
+    outlives the audit. Explicit F.broadcast hints
     survive by design (they are only on structurally bounded tables
     after round 5); everything else must fall back to a shuffled join,
     never a cartesian product or an unbounded nested loop."""
-    with _conf(df.sparkSession, spark__sql__adaptive__enabled="false"):
+    with scoped_confs(df.sparkSession, _AQE_OFF):
         plan = df._jdf.queryExecution().executedPlan().toString()
     problems: list[str] = []
     if "CartesianProduct" in plan:
@@ -265,20 +247,62 @@ def audit_nobroadcast(name: str, df) -> list[str]:
     return problems
 
 
+PLANS = "PLANS.md"
+_NB_MARKER = "\n\n# No-broadcast fallback audit\n"
+_SKELETON = (
+    "# Physical-plan audit (tools/explain_audit.py)\n\n"
+    "sf_dir: {sf_dir}. Checks: no cartesian products, no\n"
+    "row-at-a-time Python UDFs (Arrow paths only), codegen spans\n"
+    "present, filters pushed to parquet scans where the query\n"
+    "filters. Full-scan queries are declared as such.\n\n"
+    + _NB_MARKER
+    + "\nSame queries re-planned with autoBroadcastJoinThreshold=-1\n"
+    "(static planner; AQE is off during the read — a runtime\n"
+    "adaptive re-plan is not observable without executing): the\n"
+    "shape every join degrades to when no side fits executor\n"
+    "memory — the 100 TB fallback. Explicit\n"
+    "F.broadcast hints survive by design (they mark structurally\n"
+    "bounded build sides: top-k rows, 1-row scalar aggs, tier\n"
+    "tables); everything unhinted must become a shuffled join,\n"
+    "never a CartesianProduct or an unbounded nested loop.\n\n"
+)
+
+
+def splice(text: str, sections: dict[str, str], nb_lines: dict[str, str]) -> str:
+    """``text`` (a PLANS.md) with the named queries' sections and
+    no-broadcast lines replaced in place and the missing ones appended;
+    every other byte is kept."""
+    sections, nb_lines = dict(sections), dict(nb_lines)
+    head, marker, tail = text.partition(_NB_MARKER)
+    preamble, *blocks = re.split(r"(?m)^(?=## )", head)
+    kept = []
+    for block in blocks:
+        name = block[3 : block.index("\n")]
+        kept.append(sections.pop(name, block.rstrip("\n") + "\n"))
+    lines = tail.split("\n")
+    last = len(lines) - 2
+    for i, line in enumerate(lines):
+        m = re.match(r"- (\S+): ", line)
+        if m:
+            lines[i], last = nb_lines.pop(m[1], line), i
+    lines[last + 1 : last + 1] = list(nb_lines.values())
+    kept += sections.values()
+    return preamble + "\n".join(kept) + marker + "\n".join(lines)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     import bench
     from debgpt7_8_with_vectordb_spark.plans import QUERIES
 
-    names = [n for n in bench.HEADLINE if n in QUERIES and n not in SKIP]
-    if only:
-        names = [n for n in names if n in only]
+    names = [
+        n for n in (sys.argv[2:] or bench.HEADLINE) if n in QUERIES and n not in SKIP
+    ]
 
     spark = get_spark(shuffle_partitions=8)
     failures = 0
-    sections: list[str] = []
+    sections: dict[str, str] = {}
     for name in names:
         try:
             df = QUERIES[name](spark, sf_dir)
@@ -290,13 +314,13 @@ def main() -> int:
         if problems:
             failures += 1
         frags = [ln for ln in formatted.splitlines() if FRAGMENT.search(ln)][:24]
-        sections.append(
+        sections[name] = (
             f"## {name}\n\n**verdict:** {verdict}\n\n```\n" + "\n".join(frags) + "\n```\n"
         )
 
     # -- pass 2: no-broadcast fallback mode (VERDICT r4 #7) -------------
-    nb_lines: list[str] = []
-    with _conf(spark, spark__sql__autoBroadcastJoinThreshold="-1"):
+    nb_lines: dict[str, str] = {}
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         for name in names:
             try:
                 df = QUERIES[name](spark, sf_dir)
@@ -307,31 +331,17 @@ def main() -> int:
             print(("OK nb " if not problems else "FLAGnb") + f"{name}: {verdict}")
             if problems:
                 failures += 1
-            nb_lines.append(f"- {name}: {verdict}")
+            nb_lines[name] = f"- {name}: {verdict}"
     spark.stop()
 
-    with open("PLANS.md", "w") as f:
-        f.write(
-            "# Physical-plan audit (tools/explain_audit.py)\n\n"
-            f"sf_dir: {sf_dir}. Checks: no cartesian products, no\n"
-            "row-at-a-time Python UDFs (Arrow paths only), codegen spans\n"
-            "present, filters pushed to parquet scans where the query\n"
-            "filters. Full-scan queries are declared as such.\n\n"
-            + "\n".join(sections)
-            + "\n\n# No-broadcast fallback audit\n\n"
-            "Same queries re-planned with autoBroadcastJoinThreshold=-1\n"
-            "(static planner; AQE is off during the read — a runtime\n"
-            "adaptive re-plan is not observable without executing): the\n"
-            "shape every join degrades to when no side fits executor\n"
-            "memory — the 100 TB fallback. Explicit\n"
-            "F.broadcast hints survive by design (they mark structurally\n"
-            "bounded build sides: top-k rows, 1-row scalar aggs, tier\n"
-            "tables); everything unhinted must become a shuffled join,\n"
-            "never a CartesianProduct or an unbounded nested loop.\n\n"
-            + "\n".join(nb_lines)
-            + "\n"
-        )
-    print(f"\n{failures} flagged; PLANS.md written")
+    try:
+        with open(PLANS) as f:
+            text = f.read()
+    except FileNotFoundError:
+        text = _SKELETON.format(sf_dir=sf_dir)
+    with open(PLANS, "w") as f:
+        f.write(splice(text, sections, nb_lines))
+    print(f"\n{failures} flagged; {len(names)} sections of {PLANS} written")
     return 1 if failures else 0
 
 
